@@ -4,35 +4,41 @@ Re-expresses the reference's replicator sink program (R1-R10, reference
 scylla-cdc-replicator/.../ReplicatorConsumer.java:37-124 and the
 operations/ handler tree) as batch DataFrame operators:
 
-* ``materialize_lww`` — the fast path: row-granularity last-writer-wins
-  materialization as a single aggregate (``max_by``) so Spark can partial-
-  aggregate map-side before the one unavoidable shuffle on the key.
 * ``pair_range_deletes`` — J1 batch analog: pair the two bound rows of a
   range delete per stream with ``lead()`` over the per-stream order
   (reference buffers the left bound in keyed state,
   RangeDeleteState.java:8-38).
-* ``apply_cdc_log`` — the full-fidelity kernel: cell-level CQL write
-  semantics (insert/update/row-delete/partition-delete/range-delete,
-  null-vs-unset via ``cdc$deleted_*``, non-frozen collection deltas,
-  pre/post-image modes, TTL expiry). Implemented as ``applyInPandas`` over
-  *hash-bucket* groups of the partition key: one shuffle co-locates every
-  change that can affect a CQL partition (row ops, partition deletes, range
-  bounds), then an ordered fold inside the Arrow batch applies each
-  partition's changes in (cdc$time, batch_seq_no) order — the same
-  per-stream total order the reference relies on
-  (WorkerTest.testWorkerConsumesSingleVNodeChangesInOrder).
+* ``apply_cdc_log`` — cell-level CQL write semantics
+  (insert/update/row-delete/partition-delete/range-delete, null-vs-unset
+  via ``cdc$deleted_*``, non-frozen collection deltas, pre/post-image
+  modes, TTL expiry) on one of two paths, chosen from the table
+  descriptor and ``as_of_micros`` alone:
 
-Scale posture: the kernel's only shuffle is the bucketed groupBy — the
-minimum co-location requirement for CQL semantics, with kernel-call count
-bounded by ``n_kernel_buckets`` instead of key cardinality. Skewed
-partitions degrade exactly like hot CQL partitions; AQE skew handling
-applies. Everything before the kernel (normalize, op-split) is
-native/codegen; P2 dedup rides inside the fold.
+  - **native cell-LWW** (``_apply_scalar_native``) when the table has no
+    clustering key, no non-frozen collection, and no TTL evaluation is
+    asked for: one duplicate-insensitive JVM aggregation, no Python;
+  - **the pandas fold** (``_make_fold_kernel``) for everything else: an
+    ``applyInPandas`` over hash-bucket groups of the partition key. One
+    shuffle co-locates every change that can affect a CQL partition (row
+    ops, partition deletes, range bounds), then an ordered fold inside
+    the Arrow batch applies each partition's changes in
+    (cdc$time, batch_seq_no) order — the same per-stream total order the
+    reference relies on
+    (WorkerTest.testWorkerConsumesSingleVNodeChangesInOrder).
+
+Scale posture: either path's only shuffle is the one on the key — the
+minimum co-location requirement for CQL semantics. The fold groups on
+``hash(pk) % _KERNEL_BUCKETS``, so kernel-call count stays bounded instead
+of growing with key cardinality. Skewed partitions degrade exactly like
+hot CQL partitions; AQE skew handling applies. Everything before the
+kernel (normalize, op-split) is native/codegen; P2 dedup rides inside
+both paths (max/max_by aggregates on the native one, adjacent-ChangeId
+skipping in the fold).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,31 +52,11 @@ from .normalize import TIME_MICROS, normalize_changes
 
 _SEQ = "cdc$batch_seq_no"
 _OP = "cdc$operation"
-
-
-def materialize_lww(
-    changes: DataFrame,
-    key_cols: list[str],
-    value_cols: list[str],
-    time_col: str = TIME_MICROS,
-    seq_col: str = _SEQ,
-    op_col: str = _OP,
-    delete_ops: tuple[int, ...] = (int(OperationType.ROW_DELETE), int(OperationType.PARTITION_DELETE)),
-) -> DataFrame:
-    """Row-granularity LWW materialization (fast path).
-
-    One aggregation: for each key keep the latest change by
-    ``(time, seq)`` via ``max_by`` (partial-aggregatable — no window, no
-    per-key row explosion), then drop keys whose latest change is a delete.
-    """
-    ord_expr = F.struct(F.col(time_col), F.col(seq_col))
-    picked = F.max_by(
-        F.struct(F.col(op_col).alias("op"), *[F.col(c).alias(c) for c in value_cols]),
-        ord_expr,
-    ).alias("last")
-    agg = changes.groupBy(*key_cols).agg(picked)
-    alive = agg.where(~F.col("last.op").cast("int").isin(list(delete_ops)))
-    return alive.select(*key_cols, *[F.col(f"last.{c}").alias(c) for c in value_cols])
+# The fold groups on ``hash(pk) % _KERNEL_BUCKETS`` rather than the raw
+# partition key: one kernel call folds every CQL partition of its bucket,
+# so invocations (and task bookkeeping) stay bounded while the shuffle
+# volume is identical and co-location still holds.
+_KERNEL_BUCKETS = 1024
 
 
 def pair_range_deletes(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
@@ -131,38 +117,23 @@ def _plain_desc(desc: CdcTableDescriptor) -> dict:
     }
 
 
-def _join_nullsafe(left: DataFrame, right: DataFrame, cols: list[str], how: str = "left") -> DataFrame:
-    """Same-key join that treats NULL keys as EQUAL (a plain column-list
-    join silently drops NULL-key groups — NULL = NULL is NULL). Real CDC
-    primary keys are never null, but the apply kernels must stay
-    total on arbitrary adapter-synthesized logs, and the Arrow fold
-    kernel (dict keys) already groups NULL keys — the native plan has to
-    agree with it row-for-row."""
-    r = right
-    for c in cols:
-        r = r.withColumnRenamed(c, f"__rns_{c}")
-    cond = None
-    for c in cols:
-        e = F.col(c).eqNullSafe(F.col(f"__rns_{c}"))
-        cond = e if cond is None else (cond & e)
-    return left.join(r, cond, how).drop(*[f"__rns_{c}" for c in cols])
-
-
 def _apply_scalar_native(
     changes: DataFrame, d: dict, with_version: bool, out_cols: list[str]
 ) -> DataFrame:
-    """Fully-native cell-granularity LWW apply for scalar-only tables.
+    """Fully-native cell-granularity LWW apply for clustering-key-less,
+    scalar-only tables.
 
     The reference's prepared-statement writes are per-cell last-writer-wins
     with tombstone shadowing (PreparedUpdateOperationHandler.java:19-66,
-    ``USING TIMESTAMP``); for tables with no non-frozen collections that
-    fold is expressible as ONE duplicate-insensitive aggregation:
+    ``USING TIMESTAMP``); for tables with no clustering key and no
+    non-frozen collections that fold is expressible as ONE
+    duplicate-insensitive aggregation:
 
-    * per (pk, ck): latest tombstone ``(t, seq)`` (row delete; partition
-      delete too when the table has no clustering keys), latest marker
-      write (insert/post-image), and per column the latest *written* state
-      (a value or an explicit ``cdc$deleted_*`` tombstone; op-9 images
-      write every column);
+    * per pk: latest tombstone ``(t, seq)`` (row and partition deletes
+      coincide without a clustering key, and range deletes cannot exist),
+      latest marker write (insert/post-image), and per column the latest
+      *written* state (a value or an explicit ``cdc$deleted_*`` tombstone;
+      op-9 images write every column);
     * a cell is live iff its last write is newer than the tombstone and
       carried a value; the row is emitted iff the marker or any cell is
       live.
@@ -170,14 +141,8 @@ def _apply_scalar_native(
     Because every aggregate is max/max_by, at-least-once redelivery (P2)
     deduplicates for free, partial aggregation runs map-side, and the one
     shuffle on the key is the whole plan — no Python, no per-row fold.
-    Tables WITH clustering keys additionally fold op-4 partition deletes
-    in via a per-pk max joined back on pk (broadcast-sized: one row per
-    partition that saw a partition delete). Range deletes (ops 5-8) are
-    NOT handled here — callers route logs that may contain them through
-    the fold kernel.
     """
-    pk, ck, regular = d["pk"], d["ck"], d["regular"]
-    key = [*pk, *ck]
+    pk, regular = d["pk"], d["regular"]
     opI = F.col(_OP).cast("int")
     ord_struct = F.struct(
         F.col(TIME_MICROS).alias("t"), F.col(_SEQ).cast("int").alias("s")
@@ -187,10 +152,9 @@ def _apply_scalar_native(
     )
     is_write = opI.isin(1, 2, 9)
     is_marker = opI.isin(2, 9)
-    is_rowdel = opI == 3 if ck else opI.isin(3, 4)
 
     aggs = [
-        F.max(F.when(is_rowdel, ord_struct)).alias("__del"),
+        F.max(F.when(opI.isin(3, 4), ord_struct)).alias("__del"),
         F.max(F.when(is_marker, ord_struct)).alias("__marker"),
         F.max(F.when(is_write, F.col(TIME_MICROS))).alias("__ver"),
     ]
@@ -201,237 +165,19 @@ def _apply_scalar_native(
         )
         aggs.append(F.max(F.when(written, ord_struct)).alias(f"__w_{c}"))
         aggs.append(F.max_by(F.col(c), F.when(written, ord_struct)).alias(f"__v_{c}"))
-    grouped = changes.groupBy(*key).agg(*aggs)
+    grouped = changes.groupBy(*pk).agg(*aggs)
 
-    if ck:
-        pdel = (
-            changes.where(opI == 4)
-            .groupBy(*pk)
-            .agg(F.max(ord_struct).alias("__pdel"))
-        )
-        grouped = _join_nullsafe(grouped, pdel, pk)
-        del_eff = F.coalesce(F.greatest(F.col("__del"), F.col("__pdel")), neg)
-    else:
-        del_eff = F.coalesce(F.col("__del"), neg)
-
+    del_eff = F.coalesce(F.col("__del"), neg)
     vals = {c: F.when(F.col(f"__w_{c}") > del_eff, F.col(f"__v_{c}")) for c in regular}
     marker_alive = F.coalesce(F.col("__marker") > del_eff, F.lit(False))
     any_cell = F.lit(False)
     for c in regular:
         any_cell = any_cell | vals[c].isNotNull()
-    sel = [*key]
+    sel = [*pk]
     if with_version:
         sel.append(F.col("__ver").alias(TIME_MICROS))
     sel += [vals[c].alias(c) for c in regular]
     out = grouped.where(marker_alive | any_cell).select(*sel)
-    return out.select(*out_cols)
-
-
-def _apply_collection_native(
-    changes: DataFrame, d: dict, desc: CdcTableDescriptor, with_version: bool, out_cols: list[str]
-) -> DataFrame:
-    """Fully-native apply for tables WITH non-frozen collections (no range
-    deletes in the log): per-ELEMENT last-writer-wins.
-
-    The reference applies collection deltas element-wise with ``USING
-    TIMESTAMP`` idempotent writes (ExecutingPreparedStatementHandler.java:
-    64-90); that is exactly an aggregation over an element-action log:
-
-    * scalar columns + tombstones + markers: the same one-pass aggregation
-      as ``_apply_scalar_native``;
-    * each collection column: explode payload entries (adds) and
-      ``cdc$deleted_elements_*`` (removes) into (key, element) actions,
-      keep the latest action per element, drop elements whose latest
-      action predates the column's latest *reset* (whole-collection
-      overwrite / op-9 image) or the row's tombstone, then re-collect —
-      sets sorted, maps as maps, lists ordered by the timeuuid key (O3);
-    * non-frozen UDTs: per-field scalar-style LWW (field writes vs
-      ``remove_idx`` field clears vs overwrite resets) — fields are a
-      static domain, no explode needed.
-
-    Every aggregate is max/max_by, so at-least-once redelivery dedups for
-    free; the plan is one aggregation per stage plus same-key joins that
-    reuse the groupBy partitioning — no Python anywhere.
-    """
-    from ..functions.timeuuid import timeuuid_micros_col
-
-    pk, ck, regular, kinds = d["pk"], d["ck"], d["regular"], d["kinds"]
-    key = [*pk, *ck]
-    opI = F.col(_OP).cast("int")
-    ord_struct = F.struct(
-        F.col(TIME_MICROS).alias("t"), F.col(_SEQ).cast("int").alias("s")
-    )
-    neg = F.struct(
-        F.lit(-(2**63)).cast("long").alias("t"), F.lit(0).cast("int").alias("s")
-    )
-    is_write = opI.isin(1, 2, 9)
-    is_marker = opI.isin(2, 9)
-    is_rowdel = opI == 3 if ck else opI.isin(3, 4)
-
-    def dcol(c):
-        name = f"{DELETED_PREFIX}{c}"
-        return F.col(name) if name in changes.columns else F.lit(None).cast("boolean")
-
-    def ecol(c):
-        name = f"{DELETED_ELEMENTS_PREFIX}{c}"
-        return F.col(name) if name in changes.columns else F.lit(None)
-
-    # ---- base aggregation: tombstones, marker, scalars, UDT fields, resets
-    aggs = [
-        F.max(F.when(is_rowdel, ord_struct)).alias("__del"),
-        F.max(F.when(is_marker, ord_struct)).alias("__marker"),
-        F.max(F.when(is_write, F.col(TIME_MICROS))).alias("__ver"),
-    ]
-    for c in regular:
-        kind = kinds[c]
-        if kind == "scalar":
-            written = is_write & (
-                F.col(c).isNotNull() | F.coalesce(dcol(c), F.lit(False)) | (opI == 9)
-            )
-            aggs.append(F.max(F.when(written, ord_struct)).alias(f"__w_{c}"))
-            aggs.append(F.max_by(F.col(c), F.when(written, ord_struct)).alias(f"__v_{c}"))
-        elif kind == "udt":
-            # per-field LWW: a field action is a non-null field write, a
-            # remove_idx clear, or an overwrite/image reset without it
-            for i, fname in enumerate(d["udt_fields"][c]):
-                fval = F.col(c)[fname]
-                f_set = is_write & fval.isNotNull()
-                f_clr = is_write & (
-                    F.array_contains(
-                        F.coalesce(ecol(c), F.array().cast("array<short>")),
-                        F.lit(i).cast("short"),
-                    )
-                    | (
-                        ((opI == 9) | F.coalesce(dcol(c), F.lit(False)))
-                        & fval.isNull()
-                    )
-                )
-                # a clear in the same row as a payload write wins (the
-                # reference applies removed indices after field writes)
-                eff = F.when(f_clr, F.lit(None)).otherwise(fval)
-                aggs.append(
-                    F.max(F.when(f_set | f_clr, ord_struct)).alias(f"__w_{c}__{fname}")
-                )
-                aggs.append(
-                    F.max_by(eff, F.when(f_set | f_clr, ord_struct)).alias(
-                        f"__v_{c}__{fname}"
-                    )
-                )
-        else:  # set / map / list: reset watermark only; elements aggregate below
-            reset = is_write & ((opI == 9) | F.coalesce(dcol(c), F.lit(False)))
-            aggs.append(F.max(F.when(reset, ord_struct)).alias(f"__rst_{c}"))
-    base = changes.groupBy(*key).agg(*aggs)
-
-    if ck:
-        pdel = changes.where(opI == 4).groupBy(*pk).agg(F.max(ord_struct).alias("__pdel"))
-        base = _join_nullsafe(base, pdel, pk)
-        del_eff = F.coalesce(F.greatest(F.col("__del"), F.col("__pdel")), neg)
-    else:
-        del_eff = F.coalesce(F.col("__del"), neg)
-    base = base.withColumn("__D", del_eff)
-
-    # ---- per-collection element aggregation, joined back on the key
-    coll_cols = [c for c in regular if kinds[c] in ("set", "map", "list")]
-    writes_only = changes.where(is_write)
-    for c in coll_cols:
-        kind = kinds[c]
-        if kind == "set":
-            ev_null = F.lit(None).cast("string")  # sets carry no element value
-            adds = writes_only.where(F.col(c).isNotNull()).select(
-                *key, ord_struct.alias("__o"), F.explode(c).alias("ek"),
-                F.lit(True).alias("ia"), ev_null.alias("ev"),
-            )
-            rems = writes_only.where(ecol(c).isNotNull()).select(
-                *key, ord_struct.alias("__o"), F.explode(ecol(c)).alias("ek"),
-                F.lit(False).alias("ia"), ev_null.alias("ev"),
-            )
-        else:  # map / list: payload is map<k, v>; removes are key arrays
-            adds = writes_only.where(F.col(c).isNotNull()).select(
-                *key, ord_struct.alias("__o"),
-                F.explode(F.map_entries(F.col(c))).alias("kv"),
-                F.lit(True).alias("ia"),
-            ).select(
-                *key, "__o", F.col("kv.key").alias("ek"), "ia",
-                F.col("kv.value").alias("ev"),
-            )
-            rems = writes_only.where(ecol(c).isNotNull()).select(
-                *key, ord_struct.alias("__o"), F.explode(ecol(c)).alias("ek"),
-                F.lit(False).alias("ia"),
-                F.lit(None).cast(adds.schema["ev"].dataType).alias("ev"),
-            )
-        acts = adds.unionByName(rems)
-        # tie-break within one change row: the remove side of a single
-        # update applies after its add side (reference handler order)
-        act_ord = F.struct(F.col("__o"), (~F.col("ia")).cast("int").alias("rm"))
-        last = acts.groupBy(*key, "ek").agg(
-            F.max("__o").alias("__lo"),
-            F.max_by(F.struct(F.col("ia"), F.col("ev")), act_ord).alias("__la"),
-        )
-        cut = _join_nullsafe(
-            last, base.select(*key, "__D", F.col(f"__rst_{c}").alias("__r")), key
-        ).where(
-            F.col("__la.ia")
-            & (F.col("__lo") > F.col("__D"))
-            & (F.col("__lo") >= F.coalesce(F.col("__r"), neg))
-        )
-        if kind == "set":
-            coll = cut.groupBy(*key).agg(
-                F.sort_array(F.collect_list("ek")).alias(f"__c_{c}")
-            )
-        elif kind == "map":
-            coll = cut.groupBy(*key).agg(
-                F.map_from_entries(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("ek"), F.col("__la.ev")))
-                    )
-                ).alias(f"__c_{c}")
-            )
-        else:  # list: order elements by the timeuuid key's time component
-            ent = F.struct(
-                timeuuid_micros_col(F.col("ek")).alias("tm"),
-                F.col("ek").alias("k"),
-                F.col("__la.ev").alias("v"),
-            )
-            coll = cut.groupBy(*key).agg(
-                F.transform(
-                    F.array_sort(F.collect_list(ent)), lambda x: x["v"]
-                ).alias(f"__c_{c}")
-            )
-        base = _join_nullsafe(base, coll, key)
-
-    # ---- assemble output
-    marker_alive = F.coalesce(F.col("__marker") > F.col("__D"), F.lit(False))
-    vals: dict[str, Column] = {}
-    for c in regular:
-        kind = kinds[c]
-        if kind == "scalar":
-            vals[c] = F.when(F.col(f"__w_{c}") > F.col("__D"), F.col(f"__v_{c}"))
-        elif kind == "udt":
-            fields = d["udt_fields"][c]
-            fvals = [
-                F.when(
-                    F.col(f"__w_{c}__{fn}") > F.col("__D"), F.col(f"__v_{c}__{fn}")
-                ).alias(fn)
-                for fn in fields
-            ]
-            struct_val = F.struct(*fvals)
-            any_field = F.lit(False)
-            for fn in fields:
-                any_field = any_field | (
-                    F.when(F.col(f"__w_{c}__{fn}") > F.col("__D"), F.col(f"__v_{c}__{fn}")).isNotNull()
-                )
-            vals[c] = F.when(any_field, struct_val)
-        else:
-            ccol = F.col(f"__c_{c}")
-            vals[c] = F.when(F.size(ccol) > 0, ccol)
-    any_cell = F.lit(False)
-    for c in regular:
-        any_cell = any_cell | vals[c].isNotNull()
-    sel = [*key]
-    if with_version:
-        sel.append(F.col("__ver").alias(TIME_MICROS))
-    sel += [vals[c].alias(c) for c in regular]
-    out = base.where(marker_alive | any_cell).select(*sel)
     return out.select(*out_cols)
 
 
@@ -440,11 +186,8 @@ def apply_cdc_log(
     desc: CdcTableDescriptor,
     mode: str = "delta",
     initial_state: DataFrame | None = None,
-    dedup: bool = True,
     with_version_col: bool = False,
     as_of_micros: int | None = None,
-    n_kernel_buckets: int | None = 1024,
-    native: bool | None = None,
 ) -> DataFrame:
     """Apply a CDC change log to (optional) initial state → current state.
 
@@ -473,33 +216,21 @@ def apply_cdc_log(
     ExecutingPreparedStatementHandler.java:45-53) — expired set/map/list
     elements and UDT fields vanish from the materialized value.
 
-    ``n_kernel_buckets``: the fold groups on ``hash(pk) % n`` rather than
-    the raw partition key, folding every CQL partition of a bucket in one
-    Arrow batch — kernel invocations (and task bookkeeping) stay bounded
-    at ``n`` instead of growing with key cardinality, while the shuffle
-    volume is identical and co-location still holds (a partition's rows
-    all hash to the same bucket). Size it so one bucket's changes fit an
-    executor comfortably; ``None`` groups by the raw key (one kernel call
-    per CQL partition — only sensible for few, huge partitions).
-
-    ``native``: route the apply through fully-native aggregation instead
-    of the Python fold — cell-LWW for scalar-only tables
-    (``_apply_scalar_native``), per-element LWW for tables with
-    non-frozen collections (``_apply_collection_native``). ``None``
-    (default) auto-enables it when the table has no clustering keys
-    (range deletes impossible); ``True`` forces it for ck-tables whose
-    log is known to hold no range-delete bounds; ``False`` always uses
-    the fold kernel. TTL visibility (``as_of_micros``) always uses the
-    fold kernel.
+    The path follows from the descriptor and ``as_of_micros`` alone: a
+    table with no clustering key and no non-frozen collection, applied
+    without TTL evaluation, takes the native cell-LWW aggregation
+    (``_apply_scalar_native``); everything else takes the pandas fold.
+    Both dedup redelivered ChangeIds (P2).
     """
     if mode not in ("delta", "postimage"):
         raise ValueError(f"unknown mode {mode!r}")
     d = _plain_desc(desc)
     changes = normalize_changes(changes)
-    # P2 dedup happens INSIDE the fold kernel (duplicate ChangeIds are
-    # adjacent after the in-group sort), so the change stream shuffles
-    # exactly once — on the partition key — instead of paying a second
-    # full shuffle for a standalone dropDuplicates.
+    # P2 dedup happens INSIDE either path (duplicate ChangeIds are
+    # adjacent after the fold's in-group sort; max/max_by ignore them), so
+    # the change stream shuffles exactly once — on the partition key —
+    # instead of paying a second full shuffle for a standalone
+    # dropDuplicates.
 
     if mode == "delta":
         changes = changes.where(~F.col(_OP).cast("int").isin([0, 9]))
@@ -514,9 +245,10 @@ def apply_cdc_log(
     ]
     delem_cols = [c for c in changes.columns if c.startswith(DELETED_ELEMENTS_PREFIX)]
     base_cols = [f.name for f in desc.base_schema.fields]
-    keep = [TIME_MICROS, _SEQ, _OP, "cdc$ttl", *base_cols, *deleted_cols, *delem_cols]
-    if dedup:
-        keep.insert(0, "cdc$stream_id")
+    keep = [
+        "cdc$stream_id", TIME_MICROS, _SEQ, _OP, "cdc$ttl",
+        *base_cols, *deleted_cols, *delem_cols,
+    ]
     changes = changes.select(*[c for c in keep if c in changes.columns])
 
     if initial_state is not None:
@@ -562,34 +294,16 @@ def apply_cdc_log(
             [*out_schema.fields, T.StructField(TIME_MICROS, T.LongType())]
         )
 
-    # Native fast path: scalar-only tables skip the Python fold entirely.
-    # Auto-enabled for clustering-key-less tables (ops 5-8 cannot exist
-    # there, and op 3/4 coincide) when TTL visibility isn't requested;
-    # callers that KNOW their log holds no range-delete bounds can force
-    # ``native=True`` for ck-tables too (partition deletes still handled).
+    out_names = [f.name for f in out_schema.fields]
     scalar_only = all(k == "scalar" for k in d["kinds"].values())
-    if native is None:
-        native = not d["ck"] and as_of_micros is None
-    if native:
-        if as_of_micros is not None:
-            raise ValueError("native apply does not evaluate TTL expiry")
-        out_names = [f.name for f in out_schema.fields]
-        if scalar_only:
-            return _apply_scalar_native(changes, d, with_version_col, out_names)
-        return _apply_collection_native(changes, d, desc, with_version_col, out_names)
+    if not d["ck"] and scalar_only and as_of_micros is None:
+        return _apply_scalar_native(changes, d, with_version_col, out_names)
 
     kernel = _make_fold_kernel(
-        d,
-        mode,
-        [f.name for f in out_schema.fields],
-        with_version=with_version_col,
-        dedup=dedup,
-        as_of=as_of_micros,
+        d, out_names, with_version=with_version_col, as_of=as_of_micros
     )
-    if n_kernel_buckets is None:
-        return changes.groupBy(*d["pk"]).applyInPandas(kernel, schema=out_schema)
     bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in d["pk"]]), F.lit(n_kernel_buckets)
+        F.xxhash64(*[F.col(c) for c in d["pk"]]), F.lit(_KERNEL_BUCKETS)
     ).alias("__kbucket")
     return (
         changes.withColumn("__kbucket", bucket)
@@ -600,10 +314,8 @@ def apply_cdc_log(
 
 def _make_fold_kernel(
     d: dict,
-    mode: str,
     out_cols: list[str],
     with_version: bool = False,
-    dedup: bool = True,
     as_of: int | None = None,
 ):
     """Build the per-partition ordered fold. Nested def so cloudpickle
@@ -649,14 +361,6 @@ def _make_fold_kernel(
                 return (a > b) if is_left else (a < b)
             return inclusive
 
-        def coerce_map(v):
-            # Arrow hands MapType values to pandas as list-of-(k, v) tuples.
-            if v is None:
-                return {}
-            if isinstance(v, dict):
-                return dict(v)
-            return dict(v)
-
         def write_cell(cells, col, value, deleted, del_elems, ee, exp_val):
             # ``ee`` (element-expiry dict, only when as_of is evaluated)
             # inherits the write's TTL per written element/field — the
@@ -694,7 +398,9 @@ def _make_fold_kernel(
                 if ee is not None and deleted:
                     ee.clear()
                 if value is not None:
-                    vm = coerce_map(value)
+                    # Arrow hands MapType values to pandas as
+                    # list-of-(k, v) tuples; dict() takes either form
+                    vm = dict(value)
                     cur.update(vm)
                     if ee is not None:
                         for k in vm:
@@ -758,7 +464,7 @@ def _make_fold_kernel(
         time_arr = cols["cdc$time_micros"]
         seq_arr = cols["cdc$batch_seq_no"]
         ttl_arr = cols.get("cdc$ttl")
-        sid_arr = cols.get("cdc$stream_id") if dedup else None
+        sid_arr = cols.get("cdc$stream_id")
         pk_arrs = [cols[c] for c in pk_cols]
         ck_arrs = [cols[c] for c in ck_cols]
         reg_arrs = {c: cols.get(c) for c in regular}

@@ -23,8 +23,7 @@ from .model.schema import CdcTableDescriptor
 
 from .functions.streamid import vnode_col
 from .functions.timeuuid import GREGORIAN_OFFSET_100NS, timeuuid_micros_col
-from .operators.apply import apply_cdc_log, materialize_lww, pair_range_deletes
-from .operators.normalize import normalize_changes
+from .operators.apply import apply_cdc_log, pair_range_deletes
 from .operators.preimage import preimage_report
 from .pipeline.dedup import (
     dedup_clusters,
@@ -395,12 +394,6 @@ SELECT user_id, value, props FROM (
   FROM events
 ) WHERE rn = 1 AND op <> 3
 """
-
-
-def q_r1_apply_lww_fast(spark, sf_dir):
-    """R1 fast path: single-aggregate LWW materialization (max_by)."""
-    cdc = normalize_changes(events_as_cdc(spark, sf_dir, events=_events(spark, sf_dir)))
-    return materialize_lww(cdc, ["user_id"], ["value", "props"])
 
 
 def q_r4_row_delete_effect(spark, sf_dir):
@@ -3409,7 +3402,7 @@ def q_r5_partition_delete(spark, sf_dir):
     cdc = events_as_cdc_ops(
         spark, sf_dir, events=_events(spark, sf_dir), include=("write", "partition")
     )
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R5 = _ops_replay_sql("m >= 6", (_OPS_KILL_PART,))
@@ -3422,7 +3415,7 @@ def q_r6_range_delete(spark, sf_dir):
     cdc = events_as_cdc_ops(
         spark, sf_dir, events=_events(spark, sf_dir), include=("write", "range")
     )
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R6 = _ops_replay_sql("m >= 6", (_OPS_KILL_RANGE,))
@@ -3433,7 +3426,7 @@ def q_r9_delta_full_mix(spark, sf_dir):
     apply ops 1-8 and ignore the image rows (ReplicatorConsumer PRE_IMAGE/
     POST_IMAGE no-op filter) — the oracle replays writes+tombstones only."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R9 = _ops_replay_sql(
@@ -3445,7 +3438,7 @@ def q_r8_postimage_apply(spark, sf_dir):
     """R8: post-image mode — op-9 rows are the only writes (full-row
     images), tombstones still apply (PostImageOperationHandler)."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="postimage", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="postimage")
 
 
 ORACLE_R8 = _ops_replay_sql(
@@ -3488,7 +3481,7 @@ def q_r3_set_delta_ops(spark, sf_dir):
     semantics of RawChange.java:151-238 — and the oracle replays them in
     SQL over the element action log."""
     cdc = events_as_cdc_setops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3542,7 +3535,7 @@ def q_o3_list_ops(spark, sf_dir):
     list overwrites resetting position (ExecutingPreparedStatementHandler
     asObject normalization + TreeMap sort, :64-90)."""
     cdc = events_as_cdc_listops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3586,7 +3579,7 @@ def q_r3_udt_delta_ops(spark, sf_dir):
     cdc$deleted_elements_prof; the kernel merges per-field last-writer-
     wins and a row whose fields all null out disappears."""
     cdc = events_as_cdc_udtops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3628,7 +3621,7 @@ def q_r6_range_prefix_bounds(spark, sf_dir):
     clustering-bound comparison decides coverage on the prefix with
     per-bound inclusivity — the general CQL range-delete shape."""
     cdc = events_as_cdc_ck2ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV2_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV2_DESC, mode="delta")
 
 
 ORACLE_R6_PREFIX = """
@@ -3659,60 +3652,6 @@ WHERE NOT EXISTS (
 """
 
 
-def q_r3_set_delta_ops_native(spark, sf_dir):
-    """The same real set-delta log through the NATIVE per-element LWW
-    apply (no Python fold) — element adds/removes/overwrites as one
-    explode + max_by aggregation; verified against the identical oracle
-    as the kernel row."""
-    cdc = events_as_cdc_setops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta", native=True)
-    return state.select(
-        "grp",
-        "user_id",
-        F.size("tags").alias("n_elems"),
-        # NULL elements render with an explicit marker (see o3_list_ops)
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.col("tags"), lambda x: F.coalesce(x.cast("string"), F.lit("∅"))
-            ),
-        ).alias("elems"),
-    )
-
-
-def q_o3_list_ops_native(spark, sf_dir):
-    """The real timeuuid-list log through the NATIVE apply: list order
-    reconstructed by sorting collected entries on the timeuuid time
-    component — all JVM expressions."""
-    cdc = events_as_cdc_listops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta", native=True)
-    return state.select(
-        "grp",
-        "user_id",
-        F.size("items").alias("n_items"),
-        # NULL elements render with an explicit marker (see o3_list_ops)
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.col("items"), lambda x: F.coalesce(x.cast("string"), F.lit("∅"))
-            ),
-        ).alias("items"),
-    )
-
-
-def q_r3_udt_delta_ops_native(spark, sf_dir):
-    """The real UDT field-delta log through the NATIVE apply: per-field
-    LWW as static aggregation (fields are a fixed domain — no explode)."""
-    cdc = events_as_cdc_udtops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta", native=True)
-    return state.select(
-        "grp",
-        "user_id",
-        F.col("prof.a").alias("a"),
-        F.col("prof.b").alias("b"),
-    )
-
-
 _TTL_AS_OF = 1_600_000_000_000_000 + 2_000 * 1_000_000  # first write + 2000 s
 
 
@@ -3725,9 +3664,7 @@ def q_ttl_apply_visibility(spark, sf_dir):
     cdc = events_as_cdc_ops(
         spark, sf_dir, events=_events(spark, sf_dir), with_ttl=True
     )
-    return apply_cdc_log(
-        cdc, KV_STATE_DESC, mode="delta", as_of_micros=_TTL_AS_OF, n_kernel_buckets=64
-    )
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", as_of_micros=_TTL_AS_OF)
 
 
 ORACLE_TTL_VIS = f"""
@@ -3770,7 +3707,7 @@ def q_j3_preimage_report(spark, sf_dir):
     checkPreimage:72-113); here the state is the full delta replay, so a
     mismatch means later writes changed the cell."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
     rep = preimage_report(cdc, state, KV_STATE_DESC)
     return rep.select(
         "grp",
@@ -8145,26 +8082,18 @@ QUERIES: dict[str, tuple[Callable, str | None, str]] = {
     "f1_timeuuid_roundtrip": (q_f1_timeuuid_roundtrip, ORACLE_F1, "F1/F2 timeuuid codec"),
     "f3_vnode_extract": (q_f3_vnode_extract, ORACLE_F3, "F3/F6 stream id bits"),
     "r1_apply_delta": (q_r1_apply_delta, ORACLE_R1, "R1-R4 apply kernel"),
-    "r1_apply_lww_fast": (q_r1_apply_lww_fast, ORACLE_R1, "R1 fast LWW path"),
+    # user_state has no clustering key or non-frozen collection, so the
+    # kernel itself takes the native cell-LWW fast path
+    "r1_apply_lww_fast": (q_r1_apply_delta, ORACLE_R1, "R1 fast LWW path"),
     "r3_set_delta": (q_r3_set_delta, ORACLE_R3, "R3 collection delta (analog)"),
     "r3_set_delta_ops": (q_r3_set_delta_ops, ORACLE_R3_OPS, "R3 real delta encodings"),
     "o3_list_ops": (q_o3_list_ops, ORACLE_O3_OPS, "O3 real timeuuid list encoding"),
     "r3_udt_delta_ops": (q_r3_udt_delta_ops, ORACLE_UDT_OPS, "R3 real UDT field deltas"),
-    "r3_set_delta_ops_native": (
-        q_r3_set_delta_ops_native,
-        ORACLE_R3_OPS,
-        "R3 set deltas, native per-element LWW",
-    ),
-    "o3_list_ops_native": (
-        q_o3_list_ops_native,
-        ORACLE_O3_OPS,
-        "O3 list encoding, native apply",
-    ),
-    "r3_udt_delta_ops_native": (
-        q_r3_udt_delta_ops_native,
-        ORACLE_UDT_OPS,
-        "R3 UDT deltas, native apply",
-    ),
+    # *_native names stay as gate contracts; these tables have clustering
+    # keys, so each runs the same fold as its twin above, same oracle.
+    "r3_set_delta_ops_native": (q_r3_set_delta_ops, ORACLE_R3_OPS, "R3 set deltas (fold)"),
+    "o3_list_ops_native": (q_o3_list_ops, ORACLE_O3_OPS, "O3 list encoding (fold)"),
+    "r3_udt_delta_ops_native": (q_r3_udt_delta_ops, ORACLE_UDT_OPS, "R3 UDT deltas (fold)"),
     "r4_row_delete_effect": (q_r4_row_delete_effect, ORACLE_R4, "R4 row tombstones"),
     "r5_partition_delete": (q_r5_partition_delete, ORACLE_R5, "R5 op-4 partition deletes"),
     "r6_range_delete": (q_r6_range_delete, ORACLE_R6, "R6 op-5..8 range deletes"),

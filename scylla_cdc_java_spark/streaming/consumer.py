@@ -33,7 +33,8 @@ O(streams x watermark), not O(history).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import logging
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,8 @@ from pyspark.sql import types as T
 from ..model.schema import CdcTableDescriptor
 from ..operators.dedup import CHANGE_ID_COLS
 from ..operators.normalize import TIME_TS, normalize_changes
+
+log = logging.getLogger(__name__)
 
 
 def read_changes_stream(
@@ -145,7 +148,6 @@ class CDCStreamConsumer:
     checkpoint_dir: str | None = None
     available_now: bool = False
     trigger_interval: str | None = None
-    _extra: dict = field(default_factory=dict)
 
     def with_source(self, source_dir: str, schema: T.StructType) -> "CDCStreamConsumer":
         self.source_dir, self.schema = source_dir, schema
@@ -246,7 +248,8 @@ def run_with_retries(start_query, backoff=None, max_restarts: int | None = None)
     ``start_query`` builds and starts a fresh query; exceptions from
     ``awaitTermination`` trigger a backoff + restart, ``max_restarts``
     bounds the attempts (None = retry forever, like the reference master).
-    Returns the final (successfully terminated) query.
+    Each failure is logged with its attempt number and traceback before
+    the backoff. Returns the final (successfully terminated) query.
     """
     import time as _time
 
@@ -261,6 +264,7 @@ def run_with_retries(start_query, backoff=None, max_restarts: int | None = None)
             return query
         except Exception:  # noqa: BLE001 — any stream failure is retryable
             attempt += 1
+            log.warning("stream failed (attempt %d)", attempt, exc_info=True)
             if max_restarts is not None and attempt > max_restarts:
                 raise
             _time.sleep(backoff.backoff_ms(attempt) / 1000.0)

@@ -117,98 +117,6 @@ def pair_range_deletes_stream(changes: DataFrame, desc: CdcTableDescriptor) -> D
     )
 
 
-def pair_range_deletes_tws(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
-    """J1 on ``transformWithStateInPandas`` (the Spark 4 stateful-processor
-    API): same semantics and output shape as ``pair_range_deletes_stream``,
-    with the pending left bound held in a typed ValueState. Prefer this on
-    Spark 4 clusters — TWS state supports TTL, timers, and schema
-    evolution; the applyInPandasWithState variant remains for parity.
-
-    Requires ``google.protobuf`` on driver and workers (the TWS state
-    protocol is protobuf-based); environments without it should use
-    ``pair_range_deletes_stream``.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    changes = normalize_changes(changes)
-    bounds = changes.where(F.col(_OP).cast("int").isin([5, 6, 7, 8]))
-
-    pk, ck = list(desc.partition_keys), list(desc.clustering_keys)
-    pk_types = [desc.base_field(c).dataType for c in pk]
-    ck_types = [desc.base_field(c).dataType for c in ck]
-    out_schema = T.StructType(
-        [T.StructField(c, t) for c, t in zip(pk, pk_types)]
-        + [
-            T.StructField("delete_time_micros", T.LongType()),
-            T.StructField("left_inclusive", T.BooleanType()),
-            T.StructField("right_inclusive", T.BooleanType()),
-        ]
-        + [T.StructField(f"left_{c}", t) for c, t in zip(ck, ck_types)]
-        + [T.StructField(f"right_{c}", t) for c, t in zip(ck, ck_types)]
-    )
-    state_schema = T.StructType(
-        [T.StructField(f"pk_{i}", t) for i, t in enumerate(pk_types)]
-        + [T.StructField(f"ck_{i}", t) for i, t in enumerate(ck_types)]
-        + [
-            T.StructField("left_inclusive", T.BooleanType()),
-            T.StructField("time_micros", T.LongType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    n_pk, n_ck = len(pk), len(ck)
-    pk_cols, ck_cols = pk, ck
-
-    class RangeDeletePairingProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._pending = handle.getValueState("pending_left", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            pdf = _sorted_concat(rows)
-            pending = tuple(self._pending.get()) if self._pending.exists() else None
-            out = []
-            for _, row in pdf.iterrows():
-                op = int(row[_OP])
-                if op in (5, 6):
-                    pending = (
-                        *[row[c] for c in pk_cols],
-                        *[row[c] for c in ck_cols],
-                        op == 5,
-                        int(row[TIME_MICROS]),
-                    )
-                elif op in (7, 8) and pending is not None:
-                    out.append(
-                        (
-                            *pending[:n_pk],
-                            pending[n_pk + n_ck + 1],
-                            pending[n_pk + n_ck],
-                            op == 7,
-                            *pending[n_pk : n_pk + n_ck],
-                            *[row[c] for c in ck_cols],
-                        )
-                    )
-                    pending = None
-            if pending is not None:
-                self._pending.update(pending)
-            else:
-                self._pending.clear()
-            yield pd.DataFrame(out, columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return bounds.groupBy("cdc$stream_id").transformWithStateInPandas(
-        RangeDeletePairingProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def pair_postimages_stream(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
     """J2 on a stream: tag each POST_IMAGE row (op 9) with the statement
     kind (insert=2 / update=1) remembered from the preceding delta row of

@@ -19,9 +19,14 @@ destination is a **copy-on-write bucketed parquet table** driven from
 This is the poor-man's MERGE of a transactional table format: on a real
 deployment the same ``foreachBatch`` body becomes a Delta/Iceberg
 ``MERGE INTO`` keyed on the partition key. Scale posture: work per batch is
-O(changed buckets), not O(state); bucket count bounds the smallest rewrite
-unit, so set ``n_buckets`` so state/n_buckets fits an executor comfortably
-(e.g. 100 TB state / 65536 buckets ~ 1.6 GB).
+O(changed buckets), not O(state) — but a batch's keys hash uniformly, so a
+batch touching k keys rewrites about ``n_buckets * (1 - (1 - 1/n)^k)``
+buckets: small live-tail batches already spread over most of the default
+64 buckets (``replicator.bucket_rewrite_share`` in the benchmark's
+``tail_user`` trace), and the saving only shows when a batch's distinct
+keys are few against ``n_buckets``. Bucket count bounds the smallest
+rewrite unit, so set ``n_buckets`` so state/n_buckets fits an executor
+comfortably (e.g. 100 TB state / 65536 buckets ~ 1.6 GB).
 """
 
 from __future__ import annotations
@@ -259,10 +264,6 @@ def replicate_available_now(
     query.awaitTermination()
     state = sink.current_state(spark)
     if state is None:
-        return spark.createDataFrame([], self_schema(desc))
+        return spark.createDataFrame([], desc.base_schema)
     drop = [c for c in (TIME_MICROS, _BUCKET) if c in state.columns]
     return state.drop(*drop)
-
-
-def self_schema(desc: CdcTableDescriptor):
-    return desc.base_schema

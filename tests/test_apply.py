@@ -313,9 +313,9 @@ def _scalar_dml(rng, desc, n=150, partition_frac=0.08):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_native_scalar_apply_ckless_fuzz(spark, seed):
-    """The native cell-LWW path (auto-selected for clustering-key-less
-    scalar tables) must match the pure-Python replay oracle AND the fold
-    kernel under shuffled, duplicated delivery."""
+    """The native cell-LWW path (selected for clustering-key-less scalar
+    tables) must match the pure-Python replay oracle under shuffled,
+    duplicated delivery."""
     from pyspark.sql import types as T
 
     from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
@@ -338,31 +338,30 @@ def test_native_scalar_apply_ckless_fuzz(spark, seed):
     df = CdcLogGenerator(desc, seed=seed).spark_df(
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
-    native = apply_cdc_log(df, desc, mode="delta")  # auto-native (no ck)
+    native = apply_cdc_log(df, desc, mode="delta")
     assert "FlatMapGroupsInPandas" not in native._jdf.queryExecution().executedPlan().toString()
-    kernel = apply_cdc_log(df, desc, mode="delta", native=False)
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    got_n, got_k, want_c = canon(native.collect()), canon(kernel.collect()), canon(want)
-    assert got_n == want_c and got_k == want_c
+    assert canon(native.collect()) == canon(want)
 
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_native_scalar_apply_with_ck_fuzz(spark, seed):
-    """Forced native path on a clustering-key table (no range deletes in
-    the log): partition deletes fold in via the per-pk join."""
+    """The scalar DML mix of the ck-less native test on a clustering-key
+    table with partition deletes: the fold must match the replay oracle
+    (a partition delete kills every ck of its pk only)."""
     desc = FIXTURE_TABLES["tbl_simple"]
     rng = random.Random(seed)
     dml = _scalar_dml(rng, desc, partition_frac=0.15)
     df = CdcLogGenerator(desc, seed=seed).spark_df(
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
-    native = apply_cdc_log(df, desc, mode="delta", native=True)
+    got = apply_cdc_log(df, desc, mode="delta")
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    assert canon(native.collect()) == canon(want)
+    assert canon(got.collect()) == canon(want)
 
 
 def _collection_dml(desc, rng, n=120):
@@ -415,25 +414,20 @@ def _collection_dml(desc, rng, n=120):
 @pytest.mark.parametrize("table", ["tbl_sets", "tbl_maps", "tbl_lists", "tbl_udts"])
 @pytest.mark.parametrize("seed", [21, 22])
 def test_native_collection_apply_fuzz(spark, table, seed):
-    """The native per-element LWW path (native=True) must match the fold
-    kernel AND the pure-Python replay oracle on collection tables under
-    shuffled, duplicated delivery (no range deletes in the log)."""
+    """Collection tables take the fold, which must match the pure-Python
+    replay oracle on element adds/removes/overwrites, row and partition
+    deletes under shuffled, duplicated delivery."""
     desc = FIXTURE_TABLES[table]
     rng = random.Random(seed)
     dml = _collection_dml(desc, rng)
     df = CdcLogGenerator(desc, seed=seed).spark_df(
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
-    native = apply_cdc_log(df, desc, native=True)
-    plan = native._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan and "BatchEvalPython" not in plan
-    kernel = apply_cdc_log(df, desc, native=False)
+    got = apply_cdc_log(df, desc)
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    got_n, got_k, want_c = canon(native.collect()), canon(kernel.collect()), canon(want)
-    assert got_k == want_c  # kernel baseline still agrees with the oracle
-    assert got_n == want_c, f"{table} native diverged"
+    assert canon(got.collect()) == canon(want), f"{table} fold diverged"
 
 
 def test_ttl_expiry_scalar_cells_and_marker(spark):
@@ -518,25 +512,39 @@ def test_reconfigure_workers_diff():
 
 
 def test_apply_per_key_grouping_fallback(spark):
-    """n_kernel_buckets=None groups by the raw partition key — must agree
-    with the bucketed default."""
+    """Two partition keys that hash into one kernel bucket share a fold
+    call but fold independently: a row or partition delete on one never
+    touches the other's rows."""
+    from pyspark.sql import functions as F
+
+    from scylla_cdc_java_spark.operators.apply import _KERNEL_BUCKETS
+
     desc = FIXTURE_TABLES["tbl_simple"]
-    gen = CdcLogGenerator(desc)
+    bucket = F.pmod(F.xxhash64("pk"), F.lit(_KERNEL_BUCKETS))
+    pair = (
+        spark.range(4 * _KERNEL_BUCKETS)
+        .select(F.format_string("k%d", "id").alias("pk"))
+        .groupBy(bucket.alias("b"))
+        .agg(F.sort_array(F.collect_list("pk")).alias("pks"))
+        .where(F.size("pks") >= 2)
+        .orderBy("b")
+        .first()["pks"]
+    )
+    a, b = pair[0], pair[1]
     dml = [
-        ("insert", ("a",), (1,), {"v1": 1, "v2": "x"}),
-        ("insert", ("b",), (2,), {"v1": 2, "v2": "y"}),
-        ("row_delete", ("a",), (1,)),
-        ("insert", ("a",), (3,), {"v1": 3, "v2": "z"}),
+        ("insert", (a,), (1,), {"v1": 1, "v2": "x"}),
+        ("insert", (b,), (1,), {"v1": 10, "v2": "y"}),
+        ("insert", (b,), (2,), {"v1": 20, "v2": "w"}),
+        ("row_delete", (a,), (1,)),
+        ("insert", (a,), (3,), {"v1": 3, "v2": "z"}),
+        ("partition_delete", (b,)),
+        ("insert", (b,), (3,), {"v1": 30, "v2": "v"}),
+        ("update", (a,), (2,), {"v1": 2}),
     ]
-    df = gen.spark_df(spark, dml, shuffle=True, duplicate_frac=0.3)
-    bucketed = sorted(
-        _canon(tuple(r)) for r in apply_cdc_log(df, desc).collect()
+    rows = run_diff(spark, "tbl_simple", dml, dup=0.3)
+    assert sorted((r["pk"], r["ck"]) for r in rows) == sorted(
+        [(a, 2), (a, 3), (b, 3)]
     )
-    per_key = sorted(
-        _canon(tuple(r))
-        for r in apply_cdc_log(df, desc, n_kernel_buckets=None).collect()
-    )
-    assert bucketed == per_key and len(bucketed) == 2
 
 
 def test_resume_filter_cursor(spark):

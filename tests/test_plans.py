@@ -55,10 +55,51 @@ def test_apply_scalar_native_no_python(spark):
     assert "HashAggregate" in plan or "SortAggregate" in plan
 
 
+def _is_fold(plan: str) -> bool:
+    return "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan
+
+
+def test_apply_native_gate_runs_fold(spark):
+    """``kv_set`` has a clustering key: the ``*_native`` gate name is a
+    contract only, its plan is the fold kernel's."""
+    assert _is_fold(_plan(spark, "r3_set_delta_ops_native"))
+
+
+@pytest.mark.parametrize(
+    "kind, as_of, fold",
+    [("set", None, True), ("scalar", 0, True), ("scalar", None, False)],
+)
+def test_apply_path_rule_ckless(spark, kind, as_of, fold):
+    """The apply path follows from the descriptor and ``as_of_micros``
+    alone: a ck-less table takes the native aggregation unless it has a
+    non-frozen collection or TTL evaluation is asked for."""
+    from pyspark.sql import types as T
+
+    from scylla_cdc_java_spark.model.schema import (
+        CdcTableDescriptor,
+        build_cdc_log_schema,
+    )
+    from scylla_cdc_java_spark.operators import apply_cdc_log
+
+    vtype = T.ArrayType(T.IntegerType()) if kind == "set" else T.IntegerType()
+    desc = CdcTableDescriptor(
+        name="tbl_flat",
+        base_schema=T.StructType(
+            [T.StructField("pk", T.StringType()), T.StructField("v", vtype)]
+        ),
+        partition_keys=["pk"],
+        clustering_keys=[],
+        non_frozen_collections=["v"] if kind == "set" else [],
+    )
+    df = spark.createDataFrame([], build_cdc_log_schema(desc))
+    plan = apply_cdc_log(df, desc, as_of_micros=as_of)._jdf.queryExecution().toString()
+    assert _is_fold(plan) == fold
+
+
 def test_apply_kernel_single_shuffle(spark):
     """Collection/ck tables keep the single-shuffle fold-kernel shape."""
     plan = _plan(spark, "r9_delta_full_mix")
-    assert "FlatMapGroupsInArrow" in plan or "FlatMapGroupsInPandas" in plan
+    assert _is_fold(plan)
     # exchanges: one for the kernel bucket groupBy (+ AQE bookkeeping)
     assert plan.count("Exchange") <= 2, "kernel must keep its single co-location shuffle"
 

@@ -321,6 +321,34 @@ def test_postimage_pairing_across_batches(spark, tmp_path):
     assert got == [("a", 1, 1), ("a", 1, 2)]
 
 
+def test_run_with_retries_logs_each_failure(caplog):
+    """T5 observability: a failed attempt is logged with its attempt
+    number and traceback before the restart, not swallowed."""
+    import logging
+
+    from scylla_cdc_java_spark.streaming import run_with_retries
+
+    class NoWait:
+        def backoff_ms(self, attempt):
+            return 0
+
+    class Query:
+        def __init__(self, fail):
+            self.fail = fail
+
+        def awaitTermination(self):
+            if self.fail:
+                raise RuntimeError("injected stream failure")
+
+    queries = iter([Query(fail=True), Query(fail=False)])
+    with caplog.at_level(logging.WARNING, logger="scylla_cdc_java_spark.streaming.consumer"):
+        final = run_with_retries(lambda: next(queries), backoff=NoWait())
+    assert not final.fail
+    [rec] = caplog.records
+    assert "attempt 1" in rec.getMessage()
+    assert rec.exc_info and isinstance(rec.exc_info[1], RuntimeError)
+
+
 def test_run_with_retries_replays_failed_batch(spark, tmp_path):
     """T5: a sink crash fails the query; the retry loop restarts it and the
     checkpoint replays the failed batch — end state still converges."""
@@ -664,51 +692,6 @@ def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path):
         max_files_per_trigger=1,
     )
     _assert_state_matches(desc, state, dml)
-
-
-# full: the non-TWS pairing test (kept) covers the cross-batch contract.
-@pytest.mark.full
-def test_range_delete_pairing_tws_across_batches(spark, tmp_path):
-    """J1 on transformWithStateInPandas: identical cross-batch semantics
-    to the applyInPandasWithState variant. Needs google.protobuf (the TWS
-    state protocol) — skipped where unavailable."""
-    pytest.importorskip("google.protobuf.descriptor")
-    import os
-    import time as _time
-
-    from scylla_cdc_java_spark.streaming import pair_range_deletes_tws
-
-    desc = FIXTURE_TABLES["tbl_multiple_clustering_keys"]
-    dml = [
-        ("insert", ("p",), (0, 0), {"v": 1}),
-        ("range_delete", ("p",), ((0, 0), True), ((1, None), False)),
-    ]
-    rows = CdcLogGenerator(desc).encode(dml)
-    schema = build_cdc_log_schema(desc)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # left bound in file 1, right bound in file 2
-    for chunk in ([rows[0], rows[1]], [rows[2]]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-    stream = spark.readStream.schema(schema).format("parquet").option(
-        "maxFilesPerTrigger", 1
-    ).load(src)
-    paired = pair_range_deletes_tws(stream, desc)
-    q = (
-        paired.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("paired_tws")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = [
-        (r["pk"], r["left_ck1"], r["left_ck2"], r["right_ck1"], r["right_ck2"])
-        for r in spark.sql("select * from paired_tws").collect()
-    ]
-    assert got == [("p", 0, 0, 1, None)]
 
 
 # full: bucket lifecycle edge of the vacuum family.
