@@ -33,6 +33,13 @@ def get_spark(
         # ngram_jaccard_pairs(n_salts=)) remains the explicit fix when a
         # key is hot enough to dominate a single reducer anyway
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # a file index over more than this many paths lists them with a
+        # Spark job of one task per path; the replicator reads its 64
+        # bucket directories and a trigger's tens of new source files on
+        # every micro-batch, and listing those in the driver takes
+        # milliseconds where the job took ~0.4 s (streaming sessions clone
+        # this conf)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

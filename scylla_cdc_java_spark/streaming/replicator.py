@@ -10,6 +10,14 @@ destination is a **copy-on-write bucketed parquet table** driven from
   those buckets' current files, folds the changes on top with the apply
   kernel (seeded with the per-row version column, so replays converge),
   and writes the result as a new bucket directory;
+* every bucket write goes through ``_write_buckets``, which first
+  repartitions on the bucket column: each bucket's rows sit in exactly one
+  writer task, so a version directory holds one parquet file per rewritten
+  bucket and the live snapshot one file per live bucket (the apply's output
+  is hash-partitioned on the key, so every writer task would otherwise
+  write a file into nearly every bucket). The price is one extra shuffle of
+  the rewritten state; the writer tasks still run in parallel
+  (``spark.sql.shuffle.partitions`` of them);
 * a JSON manifest per version maps bucket -> data directory; unchanged
   buckets keep pointing at their old files (no rewrite);
 * the manifest commit is a write-temp-then-rename, and the streaming
@@ -26,13 +34,18 @@ buckets: small live-tail batches already spread over most of the default
 ``tail_user`` trace), and the saving only shows when a batch's distinct
 keys are few against ``n_buckets``. Bucket count bounds the smallest
 rewrite unit, so set ``n_buckets`` so state/n_buckets fits an executor
-comfortably (e.g. 100 TB state / 65536 buckets ~ 1.6 GB).
+comfortably (e.g. 100 TB state / 65536 buckets ~ 1.6 GB). Reading the
+changed buckets passes one path per bucket to the file index, and a trigger
+reads tens of new source files; ``session.get_spark`` raises the
+parallel-listing threshold so both are listed in the driver rather than by
+a one-task-per-path Spark job on every trigger.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +56,8 @@ from ..operators.apply import apply_cdc_log
 from ..operators.normalize import TIME_MICROS
 
 _BUCKET = "__bucket"
+# a committed manifest; a torn commit leaves ``manifest-N.json.tmp-*``
+_MANIFEST = re.compile(r"manifest-(\d+)\.json")
 
 
 def _bucket_expr(pk_cols: list[str], n_buckets: int):
@@ -66,12 +81,16 @@ class ReplicatorSink:
         os.makedirs(state_dir, exist_ok=True)
 
     # -- manifest bookkeeping -------------------------------------------------
-    def _latest_manifest(self) -> dict | None:
-        versions = [
-            int(f[len("manifest-") : -len(".json")])
+    def _manifest_versions(self) -> list[int]:
+        """Committed manifest versions, ascending."""
+        return sorted(
+            int(m.group(1))
             for f in os.listdir(self.state_dir)
-            if f.startswith("manifest-") and f.endswith(".json")
-        ]
+            if (m := _MANIFEST.fullmatch(f))
+        )
+
+    def _latest_manifest(self) -> dict | None:
+        versions = self._manifest_versions()
         if not versions:
             return None
         with open(os.path.join(self.state_dir, f"manifest-{max(versions)}.json")) as fh:
@@ -83,6 +102,26 @@ class ReplicatorSink:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, path)
+
+    def _write_buckets(self, state: DataFrame, version: int) -> dict[str, str]:
+        """Write ``state`` bucketed as version ``version``, one parquet file
+        per bucket; returns the manifest entries (bucket -> directory) of
+        the buckets written (a bucket with no rows gets no directory)."""
+        pk = list(self.desc.partition_keys)
+        rel = f"v{version}"
+        out_dir = os.path.join(self.state_dir, rel)
+        (
+            state.withColumn(_BUCKET, _bucket_expr(pk, self.n_buckets))
+            .repartition(_BUCKET)
+            .write.partitionBy(_BUCKET)
+            .mode("overwrite")
+            .parquet(out_dir)
+        )
+        return {
+            d.split("=", 1)[1]: f"{rel}/{d}"
+            for d in os.listdir(out_dir)
+            if d.startswith(f"{_BUCKET}=")
+        }
 
     def _read_buckets(self, spark: SparkSession, manifest: dict, buckets: list[int]) -> DataFrame | None:
         paths = [
@@ -135,36 +174,18 @@ class ReplicatorSink:
             return False
         out = conform_state(state, self.desc, keep_extra=(TIME_MICROS,))
         version = manifest["version"] + 1
-        rel = f"v{version}"
-        out_dir = os.path.join(self.state_dir, rel)
-        # bucket files don't store the partition column; re-derive it
-        out = out.withColumn(
-            _BUCKET, _bucket_expr(list(self.desc.partition_keys), self.n_buckets)
-        )
-        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith(f"{_BUCKET}=")
-        }
-        buckets = {
-            str(b): f"{rel}/{_BUCKET}={b}" for b in written
-        }
+        buckets = self._write_buckets(out, version)
         self._commit_manifest({"version": version, "buckets": buckets})
         return True
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Drop version directories no manifest among the newest
-        ``keep_versions`` references, plus superseded manifests. Returns the
-        removed paths. Run out-of-band (like Delta VACUUM) — never
-        concurrently with a writer."""
+        ``keep_versions`` references, plus superseded manifests and the temp
+        files of torn manifest commits. Returns the removed paths. Run
+        out-of-band (like Delta VACUUM) — never concurrently with a writer."""
         import shutil
 
-        versions = sorted(
-            int(f[len("manifest-") : -len(".json")])
-            for f in os.listdir(self.state_dir)
-            if f.startswith("manifest-") and f.endswith(".json")
-        )
+        versions = self._manifest_versions()
         if not versions:
             return []
         kept = versions[-keep_versions:]
@@ -179,9 +200,11 @@ class ReplicatorSink:
             if entry.startswith("v") and os.path.isdir(path) and entry not in live_dirs:
                 shutil.rmtree(path)
                 removed.append(path)
-            elif entry.startswith("manifest-") and int(entry[9:-5]) not in kept:
-                os.remove(path)
-                removed.append(path)
+            elif entry.startswith("manifest-"):
+                committed = _MANIFEST.fullmatch(entry)
+                if committed is None or int(committed.group(1)) not in kept:
+                    os.remove(path)
+                    removed.append(path)
         return removed
 
     # -- the sink body --------------------------------------------------------
@@ -212,24 +235,17 @@ class ReplicatorSink:
             mode=self.mode,
             initial_state=initial,
             with_version_col=True,
-        ).withColumn(_BUCKET, _bucket_expr(pk, self.n_buckets))
+        )
 
         version = manifest["version"] + 1
-        rel = f"v{version}"
-        out_dir = os.path.join(self.state_dir, rel)
-        new_state.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith(f"{_BUCKET}=")
+        written = self._write_buckets(new_state, version)
+        # a changed bucket missing from ``written`` had every row deleted
+        # by this batch: its pointer is dropped
+        changed_keys = {str(b) for b in changed}
+        buckets = {
+            b: rel for b, rel in manifest["buckets"].items() if b not in changed_keys
         }
-        buckets = dict(manifest["buckets"])
-        for b in changed:
-            if b in written:
-                buckets[str(b)] = f"{rel}/{_BUCKET}={b}"
-            else:
-                # every row of the bucket was deleted by this batch
-                buckets.pop(str(b), None)
+        buckets.update(written)
         self._commit_manifest({"version": version, "buckets": buckets})
 
 

@@ -11,6 +11,7 @@ across batches.
 from __future__ import annotations
 
 import math
+import os
 import random
 
 import pytest
@@ -574,6 +575,130 @@ def test_replicator_vacuum_keeps_live_state(spark, tmp_path):
         _canon(tuple(r[n] for n in names)) for r in state.collect()
     )
     assert after == before_named
+
+
+def test_replicator_vacuum_removes_torn_manifest_commit(spark, tmp_path):
+    """A crash between writing the manifest temp file and renaming it
+    leaves ``manifest-N.json.tmp-*`` behind: vacuum must remove it (not
+    fail parsing it as a version) and the state must read the same."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(17)
+    dml = _rand_dml(desc, rng, n=30)
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 2, rng)
+    replicate_available_now(
+        spark, src, schema, desc, str(tmp_path / "work"),
+        n_buckets=4, max_files_per_trigger=1,
+    )
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=4)
+    version = sink._latest_manifest()["version"]
+    torn = os.path.join(sink.state_dir, f"manifest-{version + 1}.json.tmp-1a2b3c4d")
+    with open(torn, "w") as fh:
+        fh.write('{"version": ')  # the crash cut the temp write short too
+
+    removed = sink.vacuum(keep_versions=1)
+    assert torn in removed
+    assert not os.path.exists(torn)
+    assert sink._latest_manifest()["version"] == version
+    _assert_state_matches(desc, sink.current_state(spark), dml)
+
+
+def _bucket_files(sink, manifest):
+    """bucket -> the parquet data files its manifest directory holds."""
+    out = {}
+    for b, rel in manifest["buckets"].items():
+        d = os.path.join(sink.state_dir, rel)
+        out[b] = [f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")]
+    return out
+
+
+def test_replicator_writes_one_file_per_bucket(spark, tmp_path):
+    """Every bucket directory the manifest points at holds exactly one
+    parquet file — after several deduped micro-batches (AQE is off inside
+    a stream, and there are more buckets than shuffle partitions) and
+    after a full ``conform_snapshot`` rewrite — and the state is intact."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(23)
+    dml = [
+        ("insert", ("k%d" % rng.randrange(80),), (rng.randrange(3),), {"v1": i, "v2": "x"})
+        for i in range(200)
+    ]
+    dml += [("row_delete", ("k%d" % rng.randrange(80),), (rng.randrange(3),)) for _ in range(20)]
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 3, rng, replay_frac=0.2)
+    n_buckets = 16
+    assert n_buckets > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    state = replicate_available_now(
+        spark, src, schema, desc, str(tmp_path / "work"),
+        n_buckets=n_buckets, max_files_per_trigger=1,
+    )
+    _assert_state_matches(desc, state, dml)
+
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=n_buckets)
+    manifest = sink._latest_manifest()
+    assert manifest["version"] >= 1  # at least two micro-batches committed
+    files = _bucket_files(sink, manifest)
+    assert len(files) > 8
+    assert all(len(f) == 1 for f in files.values()), files
+
+    assert sink.conform_snapshot(spark)
+    manifest = sink._latest_manifest()
+    files = _bucket_files(sink, manifest)
+    assert all(rel.startswith(f"v{manifest['version']}/") for rel in manifest["buckets"].values())
+    assert all(len(f) == 1 for f in files.values()), files
+    _assert_state_matches(desc, sink.current_state(spark), dml)
+
+
+def test_replicator_call_lists_paths_in_driver(spark, tmp_path):
+    """A sink call that reads more bucket directories than Spark's default
+    parallel-listing threshold (32) lists them in the driver: no
+    ``Listing leaf files`` job runs during the streamed call."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    schema = build_cdc_log_schema(desc)
+    gen = CdcLogGenerator(desc)
+    # encode() returns (and keeps appending to) its internal row list
+    rows = list(gen.encode(
+        [("insert", ("k%d" % i,), (0,), {"v1": i, "v2": "a"}) for i in range(400)]
+    ))
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    _write_chunks(spark, schema, rows, src, 1, random.Random(0))
+    replicate_available_now(spark, src, schema, desc, work, n_buckets=64)
+
+    def jobs():
+        # (id, description) of every job in the status store (UI off too)
+        seq = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        out = {}
+        for i in range(seq.size()):
+            j = seq.apply(i)
+            out[j.jobId()] = j.description().get() if j.description().isDefined() else ""
+        return out
+
+    before = jobs()
+    updates = gen.encode(
+        [("insert", ("k%d" % i,), (0,), {"v1": -i, "v2": "b"}) for i in range(0, 400, 3)]
+    )[len(rows):]
+    _write_chunks(spark, schema, updates, src, 1, random.Random(1))
+    replicate_available_now(spark, src, schema, desc, work, n_buckets=64)
+    new_jobs = {i: d for i, d in jobs().items() if i not in before}
+
+    sink = ReplicatorSink(desc, os.path.join(work, "state"), n_buckets=64)
+    last = sink._latest_manifest()
+    assert last["version"] == 1  # one call for the second wave
+    assert sum(rel.startswith("v1/") for rel in last["buckets"].values()) > 32
+    assert new_jobs
+    listing = [d for d in new_jobs.values() if d.startswith("Listing leaf files")]
+    assert not listing, listing
 
 
 # full: generation rollover pinned by the t6 oracle gate.
