@@ -23,6 +23,16 @@ import uuid
 from .state import TaskId, TaskState, task_state_from_map, task_state_to_map
 
 
+def commit_json(path: str, doc) -> None:
+    """Atomic JSON commit: write ``<path>.tmp-<8 hex>``, then rename over
+    ``path``. A crash before the rename leaves only the temp file (the
+    replicator's vacuum deletes torn manifest commits by that name)."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    os.replace(tmp, path)
+
+
 class InMemoryStateStore:
     """Ephemeral store (reference InMemoryStateStore,
     scylla-cdc-lib/.../InMemoryStateStore.java)."""
@@ -84,10 +94,7 @@ class JsonFileStateStore(InMemoryStateStore):
                 tid.key(): task_state_to_map(st) for tid, st in self._states.items()
             },
         }
-        tmp = f"{self._path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, self._path)
+        commit_json(self._path, doc)
 
     def set_task_state(self, task_id: TaskId, state: TaskState) -> None:
         super().set_task_state(task_id, state)

@@ -3,14 +3,20 @@
 The reference is a streaming CDC consumer; this package is its idiomatic
 Spark expression: file-stream source over CDC-shaped parquet, watermark as
 the confidence window, ``dropDuplicatesWithinWatermark`` as the resume
-filter, ``foreachBatch`` + the apply kernel as the replicator sink, and the
-checkpointLocation as the CDCStateStore.
+filter (always on), ``foreachBatch`` + the apply kernel as the replicator
+sink, and the checkpointLocation as the CDCStateStore.
+
+``replicate_available_now``, ``MultiTableConsumer`` and
+``replicate_with_schema_evolution`` share one consumer -> sink runner
+(``replicator._Replication``): one work-dir layout (``<work>/state``,
+``<work>/checkpoint``) and one materialized-state rule (the bookkeeping
+columns ``cdc$time_micros`` and ``__bucket`` dropped; an empty base-schema
+frame before the first commit).
 """
 
 from .consumer import (  # noqa: F401
     CDCStreamConsumer,
     dedup_within_watermark,
-    read_changes_stream,
     run_with_retries,
     tumbling_window_counts,
     with_confidence_window,

@@ -40,29 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model.schema import CdcTableDescriptor
 from ..operators.dedup import CHANGE_ID_COLS
 from ..operators.normalize import TIME_TS, normalize_changes
 
 log = logging.getLogger(__name__)
-
-
-def read_changes_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-stream source over CDC-shaped parquet.
-
-    ``source_dir`` may contain ``generation=<id>`` partition directories;
-    partition discovery surfaces them as a ``generation`` column and new
-    generations are picked up as their files arrive (T6/T7).
-    """
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(source_dir)
 
 
 def with_confidence_window(df: DataFrame, confidence_ms: int = 30_000) -> DataFrame:
@@ -85,10 +66,9 @@ def dedup_within_watermark(df: DataFrame) -> DataFrame:
     change in a stream sharing a ``batch_seq_no`` (see
     ``operators.dedup.dedup_changes``). Matches the fold kernel's
     (time, seq) ChangeId identity."""
-    cols = [TIME_TS if c == "cdc$time" else c for c in CHANGE_ID_COLS]
-    if TIME_TS not in df.columns:  # un-normalized caller: raw-id fallback
-        cols = [c for c in CHANGE_ID_COLS if c in df.columns]
-    return df.dropDuplicatesWithinWatermark(cols)
+    return df.dropDuplicatesWithinWatermark(
+        [TIME_TS if c == "cdc$time" else c for c in CHANGE_ID_COLS]
+    )
 
 
 def tumbling_window_counts(
@@ -137,6 +117,10 @@ class CDCStreamConsumer:
         query = consumer.start(lambda batch_df, batch_id: ...)
         ...
         consumer.stop(query)          # T10
+
+    Cross-batch dedup (P2) is always on: the replicator sink keeps no
+    tombstones, so a redelivered insert older than a later delete of the
+    same row would otherwise bring the deleted row back.
     """
 
     spark: SparkSession
@@ -144,7 +128,6 @@ class CDCStreamConsumer:
     schema: T.StructType | None = None
     confidence_ms: int = 30_000
     max_files_per_trigger: int | None = None
-    dedup: bool = True
     checkpoint_dir: str | None = None
     available_now: bool = False
     trigger_interval: str | None = None
@@ -165,10 +148,6 @@ class CDCStreamConsumer:
         self.checkpoint_dir = path
         return self
 
-    def with_dedup(self, dedup: bool) -> "CDCStreamConsumer":
-        self.dedup = dedup
-        return self
-
     def trigger_available_now(self) -> "CDCStreamConsumer":
         self.available_now = True
         return self
@@ -178,21 +157,22 @@ class CDCStreamConsumer:
         return self
 
     def changes(self) -> DataFrame:
-        """The normalized, watermarked (and optionally deduped) change stream."""
+        """The normalized, watermarked, deduped change stream.
+
+        The source is a file stream over CDC-shaped parquet: ``source_dir``
+        may contain ``generation=<id>`` partition directories, which
+        partition discovery surfaces as a ``generation`` column, picking up
+        new generations as their files arrive (T6/T7)."""
         if self.source_dir is None or self.schema is None:
             raise ValueError("source not configured: call with_source(dir, schema)")
-        df = read_changes_stream(
-            self.spark, self.source_dir, self.schema, self.max_files_per_trigger
-        )
-        df = with_confidence_window(df, self.confidence_ms)
-        if self.dedup:
-            df = dedup_within_watermark(df)
-        return df
+        reader = self.spark.readStream.schema(self.schema).format("parquet")
+        if self.max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
+        df = with_confidence_window(reader.load(self.source_dir), self.confidence_ms)
+        return dedup_within_watermark(df)
 
-    def start(self, consume_batch, query_name: str = "cdc-consumer"):
-        """K1: start the stream, delivering each microbatch to
-        ``consume_batch(batch_df, batch_id)``. Returns the StreamingQuery."""
-        writer = self.changes().writeStream.queryName(query_name).foreachBatch(consume_batch)
+    def _launch(self, writer):
+        """Apply the checkpoint and trigger settings, then start."""
         if self.checkpoint_dir:
             writer = writer.option("checkpointLocation", self.checkpoint_dir)
         if self.available_now:
@@ -201,34 +181,23 @@ class CDCStreamConsumer:
             writer = writer.trigger(processingTime=self.trigger_interval)
         return writer.start()
 
+    def start(self, consume_batch, query_name: str = "cdc-consumer"):
+        """K1: start the stream, delivering each microbatch to
+        ``consume_batch(batch_df, batch_id)``. Returns the StreamingQuery."""
+        return self._launch(
+            self.changes().writeStream.queryName(query_name).foreachBatch(consume_batch)
+        )
+
     def start_printer(self, query_name: str = "cdc-printer", num_rows: int = 20):
         """K2: the reference's Printer demo — formatted change stream to
         stdout (Main.printChange, scylla-cdc-printer/.../Main.java:97-151)."""
-        writer = (
+        return self._launch(
             self.changes()
             .writeStream.queryName(query_name)
             .format("console")
             .option("numRows", num_rows)
             .option("truncate", "true")
         )
-        if self.checkpoint_dir:
-            writer = writer.option("checkpointLocation", self.checkpoint_dir)
-        if self.available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def start_replicator(
-        self,
-        desc: CdcTableDescriptor,
-        state_dir: str,
-        mode: str = "delta",
-        query_name: str = "cdc-replicator",
-    ):
-        """K3: start the change-application sink (see streaming.replicator)."""
-        from .replicator import ReplicatorSink
-
-        sink = ReplicatorSink(desc, state_dir, mode=mode)
-        return self.start(sink, query_name=query_name)
 
     @staticmethod
     def stop(query, timeout_s: float = 60.0) -> None:

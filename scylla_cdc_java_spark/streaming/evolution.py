@@ -43,13 +43,13 @@ occurred.
 from __future__ import annotations
 
 import glob
+import json
 import os
+from dataclasses import fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-import json
 
 from ..model.schema import (
     CDC_PREFIX,
@@ -60,24 +60,18 @@ from ..model.schema import (
     conform_column,
     descriptor_diff,
 )
+from ..model.statestore import commit_json
+from .replicator import _Replication
 
 
 def save_descriptor(desc: CdcTableDescriptor, path: str) -> None:
     """Persist a descriptor as JSON (schema-cache analog of the reference's
     Driver3SchemaFactory: the current ChangeSchema survives restarts even
-    after old log files are archived away)."""
-    doc = {
-        "name": desc.name,
-        "base_schema": desc.base_schema.json(),
-        "partition_keys": desc.partition_keys,
-        "clustering_keys": desc.clustering_keys,
-        "non_frozen_collections": desc.non_frozen_collections,
-        "list_columns": desc.list_columns,
-    }
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    os.replace(tmp, path)
+    after old log files are archived away). Every descriptor field is
+    stored."""
+    doc = {f.name: getattr(desc, f.name) for f in fields(desc)}
+    doc["base_schema"] = desc.base_schema.json()
+    commit_json(path, doc)
 
 
 def load_descriptor(path: str) -> CdcTableDescriptor | None:
@@ -85,14 +79,9 @@ def load_descriptor(path: str) -> CdcTableDescriptor | None:
         return None
     with open(path) as fh:
         doc = json.load(fh)
-    return CdcTableDescriptor(
-        name=doc["name"],
-        base_schema=T.StructType.fromJson(json.loads(doc["base_schema"])),
-        partition_keys=doc["partition_keys"],
-        clustering_keys=doc["clustering_keys"],
-        non_frozen_collections=doc["non_frozen_collections"],
-        list_columns=doc["list_columns"],
-    )
+    doc["base_schema"] = T.StructType.fromJson(json.loads(doc["base_schema"]))
+    return CdcTableDescriptor(**doc)
+
 
 # Envelope columns that carry change identity/order — conform_changes will
 # never fabricate these; their absence is a malformed stream.
@@ -157,7 +146,8 @@ def descriptor_from_log_schema(
     regular columns are whatever non-``cdc$`` value columns the log file
     declares, typed from the file. A ``cdc$deleted_elements_<col>``
     companion marks ``col`` as a non-frozen collection; a map-typed
-    column that ``base`` declared as a list stays a list.
+    column that ``base`` declared as a list stays a list. Every other
+    descriptor field (name, keys, replication mode) is ``base``'s.
     """
     names = [f.name for f in log_schema.fields]
     by_name = {f.name: f for f in log_schema.fields}
@@ -176,24 +166,22 @@ def descriptor_from_log_schema(
         if n.startswith(DELETED_ELEMENTS_PREFIX)
     ]
     old_lists = set(base.list_columns)
-    fields: list[T.StructField] = []
+    cols: list[T.StructField] = []
     for f in base.base_schema.fields:
         if f.name in pk:
-            fields.append(f)
+            cols.append(f)
     list_cols: list[str] = []
     for n in value_cols:
         dt = by_name[n].dataType
         if n in old_lists and isinstance(dt, T.MapType):
             # wire map<timeuuid, elem> -> base list<elem>
-            fields.append(T.StructField(n, T.ArrayType(dt.valueType), True))
+            cols.append(T.StructField(n, T.ArrayType(dt.valueType), True))
             list_cols.append(n)
         else:
-            fields.append(T.StructField(n, dt, True))
-    return CdcTableDescriptor(
-        name=base.name,
-        base_schema=T.StructType(fields),
-        partition_keys=list(base.partition_keys),
-        clustering_keys=list(base.clustering_keys),
+            cols.append(T.StructField(n, dt, True))
+    return replace(
+        base,
+        base_schema=T.StructType(cols),
         non_frozen_collections=[c for c in nf_cols if c in value_cols],
         list_columns=list_cols,
     )
@@ -205,17 +193,6 @@ def _log_files(source_dir: str) -> list[str]:
         for p in glob.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
         if os.path.getsize(p) > 0
     ]
-
-
-def latest_log_schema(spark: SparkSession, source_dir: str) -> T.StructType | None:
-    """Schema of the newest log file under ``source_dir`` (recursive), by
-    (mtime, path) — a single-file footer read, no data scan. None when the
-    directory holds no parquet yet."""
-    files = _log_files(source_dir)
-    if not files:
-        return None
-    newest = max(files, key=lambda p: (os.path.getmtime(p), p))
-    return spark.read.parquet(newest).schema
 
 
 def pending_log_schema(
@@ -302,8 +279,6 @@ def replicate_with_schema_evolution(
     arrived mid-pass, roll onto the evolved schema and go again. Returns
     ``(state, descriptor)`` for the final schema.
     """
-    from .replicator import replicate_available_now
-
     # resume from the persisted schema cache when present: the state table
     # stays interpretable even if pre-evolution log files were archived
     os.makedirs(work_dir, exist_ok=True)
@@ -322,48 +297,32 @@ def replicate_with_schema_evolution(
     state: DataFrame | None = None
     for _ in range(max_rounds):
         observed, listed = pending_log_schema(spark, source_dir, processed)
+        destructive = False
         if observed is not None:
             evolved = descriptor_from_log_schema(observed, desc)
             # descriptor_diff also validates the pk is untouched
             _, dropped = descriptor_diff(desc, evolved)
-            lost_nested = _lost_nested_fields(desc, evolved)
+            destructive = bool(dropped or _lost_nested_fields(desc, evolved))
             desc = evolved
-            if dropped or lost_nested:
-                # a destructive ALTER (DROP column, or ALTER TYPE that
-                # removes a UDT field) must discard the data PHYSICALLY
-                # (as Scylla does): copy-on-write keeps stale values in
-                # untouched bucket files, and a later re-ADD of the same
-                # name would read them back (AlterReAddColIT /
-                # AlterUpdateUdtIT semantics — re-added names start NULL,
-                # never resurrect).
-                from .replicator import ReplicatorSink
-
-                ReplicatorSink(
-                    desc,
-                    os.path.join(work_dir, "state"),
-                    mode=mode,
-                    n_buckets=n_buckets,
-                ).conform_snapshot(spark)
-        save_descriptor(desc, desc_path)
-        schema = build_cdc_log_schema(desc)
-        state = replicate_available_now(
-            spark,
-            source_dir,
-            schema,
-            desc,
-            work_dir,
-            mode=mode,
-            confidence_ms=confidence_ms,
-            n_buckets=n_buckets,
+        run = _Replication(
+            spark, desc, source_dir, build_cdc_log_schema(desc), work_dir,
+            mode, n_buckets, confidence_ms,
         )
+        if destructive:
+            # a destructive ALTER (DROP column, or ALTER TYPE that removes
+            # a UDT field) must discard the data PHYSICALLY (as Scylla
+            # does): copy-on-write keeps stale values in untouched bucket
+            # files, and a later re-ADD of the same name would read them
+            # back (AlterReAddColIT / AlterUpdateUdtIT semantics — re-added
+            # names start NULL, never resurrect).
+            run.sink.conform_snapshot(spark)
+        save_descriptor(desc, desc_path)
+        state = run.catch_up()
         # the AvailableNow pass consumed (at least) the files listed
         # before it started; record exactly those — a file that landed
         # mid-pass stays pending and contributes to the next merge
         processed |= set(listed)
-        tmp = f"{proc_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(sorted(processed), fh)
-        os.replace(tmp, proc_path)
+        commit_json(proc_path, sorted(processed))
         after, _ = pending_log_schema(spark, source_dir, processed)
         if after is None:
             return state, desc

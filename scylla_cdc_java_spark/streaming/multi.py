@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from ..model.schema import CdcTableDescriptor, build_cdc_log_schema
 from .consumer import CDCStreamConsumer
-from .replicator import ReplicatorSink
+from .replicator import _Replication
 
 
 @dataclass
@@ -73,20 +73,11 @@ class MultiTableConsumer:
             self.add_table(name, source_dir, desc)
         return self
 
-    def _sink(self, t: _TableSpec) -> ReplicatorSink:
-        return ReplicatorSink(
-            t.desc,
-            os.path.join(self.work_root, t.name, "state"),
-            mode=self.mode,
-            n_buckets=self.n_buckets,
-        )
-
-    def _consumer(self, t: _TableSpec) -> CDCStreamConsumer:
-        return (
-            CDCStreamConsumer(self.spark)
-            .with_source(t.source_dir, t.schema)
-            .with_confidence_window_ms(self.confidence_ms)
-            .with_checkpoint(os.path.join(self.work_root, t.name, "checkpoint"))
+    def _run(self, t: _TableSpec) -> _Replication:
+        return _Replication(
+            self.spark, t.desc, t.source_dir, t.schema,
+            os.path.join(self.work_root, t.name),
+            self.mode, self.n_buckets, self.confidence_ms,
         )
 
     def _validate_modes(self) -> None:
@@ -102,10 +93,10 @@ class MultiTableConsumer:
         self._validate_modes()
         queries = {}
         for t in self._tables:
-            c = self._consumer(t)
+            run = self._run(t)
             if trigger_interval:
-                c = c.with_trigger_interval(trigger_interval)
-            queries[t.name] = c.start(self._sink(t), query_name=f"cdc-{t.name}")
+                run.consumer.with_trigger_interval(trigger_interval)
+            queries[t.name] = run.consumer.start(run.sink, query_name=f"cdc-{t.name}")
         return queries
 
     @staticmethod
@@ -119,26 +110,15 @@ class MultiTableConsumer:
 
     def replicate_available_now(self) -> dict[str, DataFrame]:
         """Catch-up pass over all tables (Trigger.AvailableNow each);
-        returns {name: materialized state}. Queries run concurrently —
-        group wall-clock is the slowest table, not the sum."""
+        returns {name: materialized state}. Every query starts before any
+        is awaited, so they run concurrently — group wall-clock is the
+        slowest table, not the sum."""
         self._validate_modes()
-        queries = {}
-        sinks = {}
-        for t in self._tables:
-            sink = self._sink(t)
-            sinks[t.name] = sink
-            queries[t.name] = (
-                self._consumer(t)
-                .trigger_available_now()
-                .start(sink, query_name=f"cdc-{t.name}")
-            )
-        for q in queries.values():
+        runs = {t.name: self._run(t) for t in self._tables}
+        queries = [
+            run.consumer.trigger_available_now().start(run.sink, query_name=f"cdc-{name}")
+            for name, run in runs.items()
+        ]
+        for q in queries:
             q.awaitTermination()
-        out = {}
-        for t in self._tables:
-            state = sinks[t.name].current_state(self.spark)
-            if state is None:
-                state = self.spark.createDataFrame([], t.desc.base_schema)
-            drop = [c for c in state.columns if c.startswith("__") or c == "cdc$time_micros"]
-            out[t.name] = state.drop(*drop)
-        return out
+        return {name: run.state() for name, run in runs.items()}

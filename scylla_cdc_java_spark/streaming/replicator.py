@@ -46,14 +46,15 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model.schema import CdcTableDescriptor, conform_state
+from ..model.statestore import commit_json
 from ..operators.apply import apply_cdc_log
 from ..operators.normalize import TIME_MICROS
+from .consumer import CDCStreamConsumer
 
 _BUCKET = "__bucket"
 # a committed manifest; a torn commit leaves ``manifest-N.json.tmp-*``
@@ -97,11 +98,10 @@ class ReplicatorSink:
             return json.load(fh)
 
     def _commit_manifest(self, manifest: dict) -> None:
-        path = os.path.join(self.state_dir, f"manifest-{manifest['version']}.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, path)
+        commit_json(
+            os.path.join(self.state_dir, f"manifest-{manifest['version']}.json"),
+            manifest,
+        )
 
     def _write_buckets(self, state: DataFrame, version: int) -> dict[str, str]:
         """Write ``state`` bucketed as version ``version``, one parquet file
@@ -164,17 +164,11 @@ class ReplicatorSink:
         per destructive ALTER is the honest cost. Returns False when
         there is no committed state. Never run concurrently with the
         streaming writer (same rule as vacuum)."""
-        manifest = self._latest_manifest()
-        if manifest is None:
-            return False
-        state = self._read_buckets(
-            spark, manifest, [int(b) for b in manifest["buckets"]]
-        )
+        state = self.current_state(spark)
         if state is None:
             return False
-        out = conform_state(state, self.desc, keep_extra=(TIME_MICROS,))
-        version = manifest["version"] + 1
-        buckets = self._write_buckets(out, version)
+        version = self._latest_manifest()["version"] + 1
+        buckets = self._write_buckets(state, version)
         self._commit_manifest({"version": version, "buckets": buckets})
         return True
 
@@ -249,6 +243,58 @@ class ReplicatorSink:
         self._commit_manifest({"version": version, "buckets": buckets})
 
 
+class _Replication:
+    """The one consumer -> ``ReplicatorSink`` wiring of ``streaming/``
+    (``replicate_available_now``, ``MultiTableConsumer``,
+    ``replicate_with_schema_evolution``): one table's stream from
+    ``source_dir`` into a work dir laid out as ``<work>/state`` (the sink's
+    snapshot) and ``<work>/checkpoint`` (the stream's offsets). Callers pick
+    the trigger on ``consumer``."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        desc: CdcTableDescriptor,
+        source_dir: str,
+        schema,
+        work_dir: str,
+        mode: str,
+        n_buckets: int,
+        confidence_ms: int,
+        max_files_per_trigger: int | None = None,
+    ):
+        self.sink = ReplicatorSink(
+            desc, os.path.join(work_dir, "state"), mode=mode, n_buckets=n_buckets
+        )
+        self.consumer = CDCStreamConsumer(
+            spark,
+            source_dir,
+            schema,
+            confidence_ms,
+            max_files_per_trigger,
+            checkpoint_dir=os.path.join(work_dir, "checkpoint"),
+        )
+
+    def state(self) -> DataFrame:
+        """The materialized state: the committed snapshot without the
+        bookkeeping columns (exactly ``cdc$time_micros`` and ``__bucket``),
+        or an empty frame of the base schema when nothing is committed."""
+        spark = self.consumer.spark
+        state = self.sink.current_state(spark)
+        if state is None:
+            return spark.createDataFrame([], self.sink.desc.base_schema)
+        return state.drop(TIME_MICROS, _BUCKET)
+
+    def catch_up(self) -> DataFrame:
+        """One AvailableNow pass over everything in the source; returns
+        the materialized state."""
+        query = self.consumer.trigger_available_now().start(
+            self.sink, query_name="cdc-replicator"
+        )
+        query.awaitTermination()
+        return self.state()
+
+
 def replicate_available_now(
     spark: SparkSession,
     source_dir: str,
@@ -263,23 +309,7 @@ def replicate_available_now(
     """Run the full consumer→replicator pipeline over all currently
     available input (Trigger.AvailableNow), then return the materialized
     state (base-table schema, version column dropped)."""
-    from .consumer import CDCStreamConsumer
-
-    state_dir = os.path.join(work_dir, "state")
-    sink = ReplicatorSink(desc, state_dir, mode=mode, n_buckets=n_buckets)
-    consumer = (
-        CDCStreamConsumer(spark)
-        .with_source(source_dir, schema)
-        .with_confidence_window_ms(confidence_ms)
-        .with_checkpoint(os.path.join(work_dir, "checkpoint"))
-        .trigger_available_now()
-    )
-    if max_files_per_trigger is not None:
-        consumer = consumer.with_throttle(max_files_per_trigger)
-    query = consumer.start(sink, query_name="cdc-replicator")
-    query.awaitTermination()
-    state = sink.current_state(spark)
-    if state is None:
-        return spark.createDataFrame([], desc.base_schema)
-    drop = [c for c in (TIME_MICROS, _BUCKET) if c in state.columns]
-    return state.drop(*drop)
+    return _Replication(
+        spark, desc, source_dir, schema, work_dir, mode, n_buckets,
+        confidence_ms, max_files_per_trigger,
+    ).catch_up()

@@ -156,6 +156,79 @@ def test_replicator_multibatch(spark, table, tmp_path):
     _assert_state_matches(desc, state, dml)
 
 
+def test_multi_table_consumer_matches_single_table(spark, tmp_path):
+    """One ``MultiTableConsumer`` pass over a ck-less table with a regular
+    column named ``__note`` and a clustering-key table: each state equals
+    the DML replay and, column for column, the single-table
+    ``replicate_available_now`` result over the same input."""
+    from pyspark.sql import types as T
+
+    from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
+    from scylla_cdc_java_spark.streaming import MultiTableConsumer
+
+    noted = CdcTableDescriptor(
+        name="tbl_noted",
+        base_schema=T.StructType(
+            [T.StructField(n, t) for n, t in
+             [("pk", T.StringType()), ("__note", T.StringType()), ("v", T.IntegerType())]]
+        ),
+        partition_keys=["pk"],
+    )
+    tables = {"noted": noted, "simple": FIXTURE_TABLES["tbl_simple"]}
+    rng = random.Random(5)
+    dml, specs = {}, []
+    for name, desc in tables.items():
+        dml[name] = _rand_dml(desc, rng, n=40)
+        src = str(tmp_path / "src" / name)
+        _write_chunks(spark, build_cdc_log_schema(desc),
+                      CdcLogGenerator(desc).encode(dml[name]), src, 2, rng, replay_frac=0.2)
+        specs.append((name, src, desc))
+
+    states = (
+        MultiTableConsumer(spark, str(tmp_path / "group"), n_buckets=4)
+        .add_tables(specs)
+        .replicate_available_now()
+    )
+    for name, src, desc in specs:
+        single = replicate_available_now(
+            spark, src, build_cdc_log_schema(desc), desc,
+            str(tmp_path / "single" / name), n_buckets=4,
+        )
+        assert states[name].columns == single.columns == desc.base_schema.names
+        _assert_state_matches(desc, states[name], dml[name])
+        _assert_state_matches(desc, single, dml[name])
+
+
+def test_printer_resumes_from_checkpoint(spark, tmp_path):
+    """K2: the printer honours the checkpoint and trigger settings — an
+    AvailableNow run prints both source files; a restart on the same
+    checkpoint reads nothing."""
+    from scylla_cdc_java_spark.streaming import CDCStreamConsumer
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    dml = [("insert", ("a",), (i,), {"v1": i, "v2": "x"}) for i in range(6)]
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 2, random.Random(1))
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 2
+
+    def run():
+        q = (
+            CDCStreamConsumer(spark)
+            .with_source(src, schema)
+            .with_confidence_window_ms(0)
+            .with_checkpoint(str(tmp_path / "ckpt"))
+            .trigger_available_now()
+            .start_printer()
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    assert run() == len(rows)
+    assert run() == 0
+
+
 # full: checkpoint-resume is also pinned by test_run_with_retries (kept)
 # and the composed-stream lost-checkpoint contract test.
 @pytest.mark.full
