@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Prints ONE JSON line, as its last output:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1}
+and writes every run's timings to plans/bench_runs.json.
 
 Each query is materialized through the noop sink (full execution, no
 collect/driver transfer). Wall-clock excludes session startup.
@@ -18,6 +19,8 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+# per-query timings of every run, rewritten by each bench run
+RUNS_PATH = os.path.join(REPO, "plans", "bench_runs.json")
 sys.path.insert(0, REPO)
 os.environ.setdefault("PYTHONPATH", REPO)
 
@@ -153,10 +156,12 @@ def main() -> None:
         timings[name] = min(runs[name])
 
     total = round(sum(timings.values()), 3)
-    # ONE compact JSON line. The per-run detail goes to stderr only: the
-    # r05 driver artifact recorded parsed=null with a mid-line tail —
-    # its parser keeps a bounded tail of the line, so every byte on
-    # stdout risks truncating the record it exists to produce.
+    # The per-run detail goes to a file and the summary is the last output,
+    # ONE compact JSON line: a reader that keeps only a bounded tail of the
+    # output loses the summary to any bytes printed inside or after it.
+    with open(RUNS_PATH, "w") as fh:
+        json.dump({"runs": runs}, fh)
+    spark.stop()
     print(
         json.dumps(
             {
@@ -171,8 +176,6 @@ def main() -> None:
             separators=(",", ":"),
         )
     )
-    print(json.dumps({"runs": runs}), file=sys.stderr)
-    spark.stop()
 
 
 if __name__ == "__main__":

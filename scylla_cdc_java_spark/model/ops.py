@@ -42,9 +42,3 @@ class OperationType(IntEnum):
     @property
     def is_delta_write(self) -> bool:
         return self in (OperationType.ROW_UPDATE, OperationType.ROW_INSERT)
-
-
-# Handy frozensets for building Column predicates.
-RANGE_DELETE_LEFT_OPS = frozenset({5, 6})
-RANGE_DELETE_RIGHT_OPS = frozenset({7, 8})
-INCLUSIVE_BOUND_OPS = frozenset({5, 7})

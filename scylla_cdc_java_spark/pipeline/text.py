@@ -442,17 +442,6 @@ def stratified_take(
     )
 
 
-# Filter-chain rule order is part of the contract: the FIRST failing rule
-# names the reject reason (C4/Gopher-style pipelines report per-rule drops).
-QUALITY_FILTER_RULES = (
-    "too_short",
-    "too_long",
-    "low_stopword",
-    "repetitive_token",
-    "repetitive_bigram",
-)
-
-
 def apply_quality_filters(
     df: DataFrame,
     text_col: str = "text",

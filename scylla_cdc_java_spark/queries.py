@@ -1499,7 +1499,6 @@ def q_k3_stream_replicate(spark, sf_dir):
         USER_STATE_DESC,
         os.path.join(tmp, "work"),
         confidence_ms=0,
-        n_buckets=8,
     )
 
 
@@ -1561,7 +1560,7 @@ def q_t9_schema_evolution(spark, sf_dir):
         clustering_keys=[],
     )
     state, desc = replicate_with_schema_evolution(
-        spark, src, v1_desc, os.path.join(tmp, "work"), n_buckets=8
+        spark, src, v1_desc, os.path.join(tmp, "work")
     )
     if desc.regular_columns != ["value", "props"]:
         raise ValueError(f"descriptor failed to evolve: {desc.regular_columns}")
@@ -1637,7 +1636,7 @@ def q_t9_udt_evolution(spark, sf_dir):
         clustering_keys=[],
     )
     state, desc = replicate_with_schema_evolution(
-        spark, src, v1_desc, os.path.join(tmp, "work"), n_buckets=8
+        spark, src, v1_desc, os.path.join(tmp, "work")
     )
     u_fields = [f.name for f in desc.base_field("u").dataType.fields]
     if u_fields != ["a", "b"]:
@@ -5634,14 +5633,12 @@ def q_pipeline_stream_cdc_dedup(spark, sf_dir):
     )
     # epoch 1 replicates, then the engine STOPS (simulated shutdown)
     ep1.write.parquet(src)
-    replicate_with_schema_evolution(spark, src, v1_desc, work, n_buckets=8)
+    replicate_with_schema_evolution(spark, src, v1_desc, work)
     # epoch 2 lands post-ALTER; the restarted engine is handed the SAME
     # stale v1 descriptor and must resume + evolve on its own
     _evo_mtime_gap()
     ep2.write.mode("append").parquet(src)
-    state, desc = replicate_with_schema_evolution(
-        spark, src, v1_desc, work, n_buckets=8
-    )
+    state, desc = replicate_with_schema_evolution(spark, src, v1_desc, work)
     if desc.regular_columns != ["text", "source"]:
         raise ValueError(f"descriptor failed to evolve: {desc.regular_columns}")
 
@@ -7620,7 +7617,7 @@ def q_t7_dynamic_task_add(spark, sf_dir):
     cdc_a.where(early_a).write.parquet(src_a)
     cdc_b.where(early_b).write.parquet(src_b)
     log_schema = spark.read.parquet(src_a).schema
-    group1 = MultiTableConsumer(spark, work, n_buckets=8).add_table(
+    group1 = MultiTableConsumer(spark, work).add_table(
         "user_state_a", src_a, desc_a, schema=log_schema
     )
     group1.replicate_available_now()
@@ -7652,7 +7649,7 @@ def q_t7_dynamic_task_add(spark, sf_dir):
     cdc_a.where(~early_a).write.mode("append").parquet(src_a)
     cdc_b.where(~early_b).write.mode("append").parquet(src_b)
     group2 = (
-        MultiTableConsumer(spark, work, n_buckets=8)
+        MultiTableConsumer(spark, work)
         .add_table("user_state_a", src_a, desc_a, schema=log_schema)
         .add_table("user_state_b", src_b, desc_b, schema=log_schema)
     )

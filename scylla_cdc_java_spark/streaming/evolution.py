@@ -264,7 +264,6 @@ def replicate_with_schema_evolution(
     work_dir: str,
     mode: str = "delta",
     confidence_ms: int = 0,
-    n_buckets: int = 16,
     max_rounds: int = 8,
 ) -> tuple[DataFrame, CdcTableDescriptor]:
     """Replicate everything currently in ``source_dir``, evolving the
@@ -306,7 +305,7 @@ def replicate_with_schema_evolution(
             desc = evolved
         run = _Replication(
             spark, desc, source_dir, build_cdc_log_schema(desc), work_dir,
-            mode, n_buckets, confidence_ms,
+            mode, confidence_ms,
         )
         if destructive:
             # a destructive ALTER (DROP column, or ALTER TYPE that removes

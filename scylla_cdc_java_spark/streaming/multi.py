@@ -52,7 +52,6 @@ class MultiTableConsumer:
     spark: SparkSession
     work_root: str
     confidence_ms: int = 0
-    n_buckets: int = 16
     mode: str = "delta"
     _tables: list[_TableSpec] = field(default_factory=list)
 
@@ -77,7 +76,7 @@ class MultiTableConsumer:
         return _Replication(
             self.spark, t.desc, t.source_dir, t.schema,
             os.path.join(self.work_root, t.name),
-            self.mode, self.n_buckets, self.confidence_ms,
+            self.mode, self.confidence_ms,
         )
 
     def _validate_modes(self) -> None:

@@ -44,3 +44,15 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     spark = get_spark(app_name="scylla_cdc_java_spark-tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture
+def target_bucket_bytes(monkeypatch):
+    """``target_bucket_bytes(n)`` sets the replicator's target bucket size
+    (``streaming.replicator._TARGET_BUCKET_BYTES``) to ``n`` bytes for the
+    rest of the test, so that a small state spans several buckets. Below
+    one parquet file's fixed overhead (~1.5 KB for a narrow table), a
+    state with many keys re-buckets on every trigger."""
+    from scylla_cdc_java_spark.streaming import replicator
+
+    return lambda nbytes: monkeypatch.setattr(replicator, "_TARGET_BUCKET_BYTES", nbytes)

@@ -16,6 +16,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SMOKE_QUERIES = ["s1_window_scan", "text_token_count", "agg_lineitem_pushdown"]
+RUNS_PATH = os.path.join(REPO, "plans", "bench_runs.json")
 
 
 def test_bench_emits_parseable_summary_line():
@@ -25,6 +26,8 @@ def test_bench_emits_parseable_summary_line():
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_BENCH_QUERIES=",".join(SMOKE_QUERIES),
     )
+    if os.path.exists(RUNS_PATH):
+        os.remove(RUNS_PATH)
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
@@ -44,13 +47,12 @@ def test_bench_emits_parseable_summary_line():
     assert set(doc["queries"]) == set(SMOKE_QUERIES)
     assert all(v > 0 for v in doc["queries"].values())
     assert doc["value"] > 0
-    # per-run detail moved to stderr (r05's driver artifact recorded
-    # parsed=null: its parser keeps only a bounded tail of the stdout
-    # line, so the summary line must stay minimal)
-    runs_lines = [
-        ln for ln in proc.stderr.splitlines() if ln.startswith('{"runs"')
-    ]
-    assert runs_lines, "per-run detail line missing from stderr"
-    runs = json.loads(runs_lines[-1])["runs"]
+    # the summary is the last output line and the per-run detail goes to
+    # a file: a reader that keeps only a bounded tail of the output must
+    # find the whole summary there
+    assert proc.stdout.splitlines()[-1] == json_lines[-1]
+    assert '{"runs"' not in proc.stdout + proc.stderr
+    with open(RUNS_PATH) as fh:
+        runs = json.load(fh)["runs"]
     assert set(runs) == set(SMOKE_QUERIES)
     assert all(len(r) == doc["runs_per_query"] for r in runs.values())

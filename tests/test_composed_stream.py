@@ -91,10 +91,10 @@ def _run_pipeline(spark, docs, root: str, crash_torn_sigs: bool):
         "source",
     )
     ep1.write.parquet(src)
-    replicate_with_schema_evolution(spark, src, V1_DESC, work, n_buckets=8)
+    replicate_with_schema_evolution(spark, src, V1_DESC, work)
     _mtime_gap()
     ep2.write.mode("append").parquet(src)
-    state, desc = replicate_with_schema_evolution(spark, src, V1_DESC, work, n_buckets=8)
+    state, desc = replicate_with_schema_evolution(spark, src, V1_DESC, work)
     assert desc.regular_columns == ["text", "source"]
 
     final = state.select("doc_id", "text", "source")
@@ -224,13 +224,13 @@ def test_t7_added_table_must_backfill_early_windows(spark, tmp_path):
     # full truth: LWW over the whole log (what the gate's restarted group
     # produces for table B, hash-gated against the oracle)
     full = replicate_available_now(
-        spark, src, schema, USER_STATE_DESC, str(tmp_path / "w_full"), n_buckets=4
+        spark, src, schema, USER_STATE_DESC, str(tmp_path / "w_full")
     )
     # the naive plan: only the post-addition files are ever offered
     src_late = str(tmp_path / "src_late")
     cdc_b.where(~early).write.parquet(src_late)
     naive = replicate_available_now(
-        spark, src_late, schema, USER_STATE_DESC, str(tmp_path / "w_naive"), n_buckets=4
+        spark, src_late, schema, USER_STATE_DESC, str(tmp_path / "w_naive")
     )
     full_state = {r["user_id"]: (r["value"], r["props"]) for r in full.collect()}
     naive_state = {r["user_id"]: (r["value"], r["props"]) for r in naive.collect()}

@@ -146,7 +146,7 @@ def test_replicate_evolves_across_alter_add_and_drop(spark, tmp_path):
         [("insert", ("a",), (1,), {"v1": 10}), ("insert", ("b",), (1,), {"v1": 20})],
         src,
     )
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1"]
     assert {(r["pk"], r["ck"], r["v1"]) for r in state.collect()} == {
         ("a", 1, 10),
@@ -165,7 +165,7 @@ def test_replicate_evolves_across_alter_add_and_drop(spark, tmp_path):
         ],
         src,
     )
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"]
     got = {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state.collect()}
     assert got == {("a", 1): (10, None), ("a", 2): (11, "x"), ("b", 1): (20, "y")}
@@ -174,7 +174,7 @@ def test_replicate_evolves_across_alter_add_and_drop(spark, tmp_path):
     g3 = CdcLogGenerator(V3)
     g3._t = g2._t
     _append(spark, g3, [("insert", ("c",), (1,), {"v2": "z"})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v2"]
     assert "v1" not in state.columns
     got3 = {(r["pk"], r["ck"]): r["v2"] for r in state.collect()}
@@ -193,7 +193,7 @@ def test_replicate_single_pass_over_heterogeneous_files(spark, tmp_path):
     g2._t = g1._t
     _append(spark, g2, [("insert", ("b",), (1,), {"v1": 20, "v2": "w"})], src)
 
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"]
     got = {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state.collect()}
     assert got == {("a", 1): (10, None), ("b", 1): (20, "w")}
@@ -231,7 +231,7 @@ def test_multi_table_consumer_group(spark, tmp_path):
         src2,
     )
     group = (
-        MultiTableConsumer(spark, str(tmp_path / "work"), n_buckets=4)
+        MultiTableConsumer(spark, str(tmp_path / "work"))
         .add_tables([("t1", src1, d1), ("t2", src2, d2)])
     )
     states = group.replicate_available_now()
@@ -256,7 +256,7 @@ def test_descriptor_persisted_and_resumed(spark, tmp_path):
     g2 = CdcLogGenerator(V2)
     g2._t = g1._t
     _append(spark, g2, [("insert", ("b",), (1,), {"v1": 20, "v2": "w"})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"]
 
     stored = load_descriptor(f"{work}/descriptor.json")
@@ -268,7 +268,7 @@ def test_descriptor_persisted_and_resumed(spark, tmp_path):
     import os as _os
 
     _os.makedirs(src)
-    state2, desc2 = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state2, desc2 = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc2.regular_columns == ["v1", "v2"]
     got = {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state2.collect()}
     assert got == {("a", 1): (10, None), ("b", 1): (20, "w")}
@@ -299,7 +299,7 @@ def test_mixed_tablet_mode_rejected(spark, tmp_path):
         uses_tablets=True,
     )
     group = (
-        MultiTableConsumer(spark, str(tmp_path / "work"), n_buckets=4)
+        MultiTableConsumer(spark, str(tmp_path / "work"))
         .add_tables([("t1", str(tmp_path / "s1"), d_vnode),
                      ("t2", str(tmp_path / "s2"), d_tablet)])
     )
@@ -335,7 +335,7 @@ def test_replicate_evolves_udt_field_add(spark, tmp_path):
          ("insert", ("b",), (1,), {"u": {"a": 2}})],
         src,
     )
-    state, desc = replicate_with_schema_evolution(spark, src, UD1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, UD1, work)
     assert [f.name for f in desc.base_field("u").dataType.fields] == ["a"]
 
     # ALTER TYPE simple_udt ADD b — post-ALTER files carry struct<a,b>
@@ -348,7 +348,7 @@ def test_replicate_evolves_udt_field_add(spark, tmp_path):
          ("update", ("b",), (1,), {"u": {"a": 9, "b": "y"}})],
         src,
     )
-    state, desc = replicate_with_schema_evolution(spark, src, UD1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, UD1, work)
     assert [f.name for f in desc.base_field("u").dataType.fields] == ["a", "b"]
     got = {
         (r["pk"], r["ck"]): (r["u"]["a"], r["u"]["b"]) if r["u"] is not None else None
@@ -380,36 +380,66 @@ def test_post_alter_file_with_older_mtime_is_not_narrowed(spark, tmp_path):
     # no utime games needed: the wide file already has the OLDER mtime —
     # exactly the adversarial ordering (newest-by-mtime is the narrow one)
 
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"], "straggler mis-read as ALTER DROP"
     got = {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state.collect()}
     assert got == {("n", 1): (1, "keep"), ("o", 1): (2, None)}
 
     # a second pass over the fully-processed directory must keep the wide
     # descriptor (no fresh evidence -> no schema change)
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"]
     assert {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state.collect()} == got
 
 
-def test_replicate_re_add_column_does_not_resurrect(spark, tmp_path):
+def _fillers(cells, n=600):
+    """``n`` filler rows (keys ``f<i>``): with a ~2 KB target bucket size
+    they keep the state in several buckets."""
+    return [("insert", ("f%d" % i,), (1,), cells(i)) for i in range(n)]
+
+
+def _last_write_skipped_bucket_of(spark, work, key):
+    """Whether the latest sink version left the bucket holding ``key``
+    untouched (its manifest entry points into an older version)."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink, _bucket_expr
+
+    m = ReplicatorSink(V1, f"{work}/state")._latest_manifest()
+    expr = _bucket_expr(["pk"], m["n_buckets"])
+    b = spark.createDataFrame([(key,)], "pk string").select(expr).first()[0]
+    return not m["buckets"][str(b)].startswith(f"v{m['version']}/")
+
+
+def test_replicate_re_add_column_does_not_resurrect(spark, tmp_path, target_bucket_bytes):
     """AlterReAddColIT analog (scylla-cdc-lib/src/test/java/com/scylladb/
     cdc/lib/AlterReAddColIT.java): DROP a column mid-stream, then re-ADD
     one with the same name. The re-added column is a NEW column — rows
     written before the re-add must read NULL, never their pre-drop
-    values."""
+    values. Filler rows keep the state in several buckets, so the
+    post-DROP batch leaves the bucket of "a" (and its pre-drop file)
+    untouched."""
     src, work = str(tmp_path / "src"), str(tmp_path / "work")
+    target_bucket_bytes(2048)
 
     g1 = CdcLogGenerator(V2)  # (v1, v2)
-    _append(spark, g1, [("insert", ("a",), (1,), {"v1": 1, "v2": "old"})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
-    assert {(r["pk"], r["v2"]) for r in state.collect()} == {("a", "old")}
+    _append(
+        spark, g1,
+        [("insert", ("a",), (1,), {"v1": 1, "v2": "old"})] + _fillers(lambda i: {"v1": i}),
+        src,
+    )
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
+    assert {(r["pk"], r["v2"]) for r in state.where("pk = 'a'").collect()} == {("a", "old")}
+    # the first write is one bucket; the next pass re-buckets the state
+    g1b = CdcLogGenerator(V2)
+    g1b._t = g1._t
+    _append(spark, g1b, [("update", ("f0",), (1,), {"v1": -1})], src)
+    replicate_with_schema_evolution(spark, src, V1, work)
 
     gd = CdcLogGenerator(V1)  # ALTER DROP v2
-    gd._t = g1._t
+    gd._t = g1b._t
     _append(spark, gd, [("insert", ("b",), (1,), {"v1": 2})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert "v2" not in state.columns
+    assert _last_write_skipped_bucket_of(spark, work, "a")
 
     gr = CdcLogGenerator(V2)  # ALTER ADD v2 back (same name, fresh column)
     gr._t = gd._t
@@ -422,9 +452,12 @@ def test_replicate_re_add_column_does_not_resurrect(spark, tmp_path):
         ],
         src,
     )
-    state, desc = replicate_with_schema_evolution(spark, src, V1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, V1, work)
     assert desc.regular_columns == ["v1", "v2"]
-    got = {(r["pk"], r["ck"]): (r["v1"], r["v2"]) for r in state.collect()}
+    got = {
+        (r["pk"], r["ck"]): (r["v1"], r["v2"])
+        for r in state.where("pk NOT LIKE 'f%'").collect()
+    }
     # "a" was updated after the re-add but its v2 must be NULL — the
     # pre-drop "old" value may not resurrect
     assert got == {("a", 1): (9, None), ("b", 1): (2, None), ("c", 1): (3, "new")}
@@ -432,31 +465,45 @@ def test_replicate_re_add_column_does_not_resurrect(spark, tmp_path):
 
 # full: UDT-level twin of the column-level resurrection regression (kept).
 @pytest.mark.full
-def test_replicate_udt_field_re_add_does_not_resurrect(spark, tmp_path):
+def test_replicate_udt_field_re_add_does_not_resurrect(spark, tmp_path, target_bucket_bytes):
     """UDT-field sibling of the re-add scenario: ALTER TYPE DROP a field,
     then ADD one back with the same name. The nested field is NEW — rows
     written before the re-add must read NULL in it, never their pre-drop
-    nested values (bucket files keep the old struct layout on disk)."""
+    nested values (bucket files keep the old struct layout on disk; the
+    filler rows keep "a" in a bucket the post-DROP batch leaves
+    untouched)."""
     src, work = str(tmp_path / "src"), str(tmp_path / "work")
+    target_bucket_bytes(2048)
 
     g1 = CdcLogGenerator(UD2)  # u: struct<a:int, b:string>
-    _append(spark, g1, [("insert", ("a",), (1,), {"u": {"a": 1, "b": "old"}})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, UD1, work, n_buckets=4)
-    assert {r["u"]["b"] for r in state.collect()} == {"old"}
+    _append(
+        spark, g1,
+        [("insert", ("a",), (1,), {"u": {"a": 1, "b": "old"}})]
+        + _fillers(lambda i: {"u": {"a": i}}),
+        src,
+    )
+    state, desc = replicate_with_schema_evolution(spark, src, UD1, work)
+    assert {r["u"]["b"] for r in state.where("pk = 'a'").collect()} == {"old"}
+    # the first write is one bucket; the next pass re-buckets the state
+    g1b = CdcLogGenerator(UD2)
+    g1b._t = g1._t
+    _append(spark, g1b, [("update", ("f0",), (1,), {"u": {"a": -1}})], src)
+    replicate_with_schema_evolution(spark, src, UD1, work)
 
     gd = CdcLogGenerator(UD1)  # ALTER TYPE DROP b
-    gd._t = g1._t
+    gd._t = g1b._t
     _append(spark, gd, [("insert", ("b",), (1,), {"u": {"a": 2}})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, UD1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, UD1, work)
     assert "b" not in [f.name for f in desc.base_field("u").dataType.fields]
+    assert _last_write_skipped_bucket_of(spark, work, "a")
 
     gr = CdcLogGenerator(UD2)  # ALTER TYPE ADD b back
     gr._t = gd._t
     _append(spark, gr, [("insert", ("c",), (1,), {"u": {"a": 3, "b": "new"}})], src)
-    state, desc = replicate_with_schema_evolution(spark, src, UD1, work, n_buckets=4)
+    state, desc = replicate_with_schema_evolution(spark, src, UD1, work)
     assert [f.name for f in desc.base_field("u").dataType.fields] == ["a", "b"]
     got = {
         (r["pk"], r["ck"]): (r["u"]["a"], r["u"]["b"]) if r["u"] is not None else None
-        for r in state.collect()
+        for r in state.where("pk NOT LIKE 'f%'").collect()
     }
     assert got == {("a", 1): (1, None), ("b", 1): (2, None), ("c", 1): (3, "new")}

@@ -26,6 +26,14 @@ from scylla_cdc_java_spark.testing import CdcLogGenerator, FIXTURE_TABLES
 from test_streaming import _assert_state_matches, _write_chunks
 
 
+@pytest.fixture(autouse=True)
+def _several_buckets(target_bucket_bytes):
+    """A 256-byte target bucket size puts even a one-row state above twice
+    the target: the restarted epoch re-buckets the state (every bucket read
+    and rewritten) and applies onto a several-bucket snapshot."""
+    target_bucket_bytes(256)
+
+
 def run_stream_diff(spark, tmp_path, table: str, dml: list[tuple], split=None):
     """Stream *dml* in two epochs with a full engine restart between
     (shared checkpoint + sink manifest), epoch-2 files redelivering ~20%
@@ -41,7 +49,7 @@ def run_stream_diff(spark, tmp_path, table: str, dml: list[tuple], split=None):
     schema = build_cdc_log_schema(desc)
 
     _write_chunks(spark, schema, rows[:split], src, 2, rng)
-    replicate_available_now(spark, src, schema, desc, work, n_buckets=4)
+    replicate_available_now(spark, src, schema, desc, work)
     # restart: epoch 2 lands with redeliveries of already-applied rows
     _write_chunks(spark, schema, rows[split:], src, 2, rng, replay_frac=0.0)
     replayed = [dict(r) for r in rows[:split] if rng.random() < 0.2]
@@ -49,7 +57,7 @@ def run_stream_diff(spark, tmp_path, table: str, dml: list[tuple], split=None):
         spark.createDataFrame(replayed, schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    state = replicate_available_now(spark, src, schema, desc, work, n_buckets=4)
+    state = replicate_available_now(spark, src, schema, desc, work)
     _assert_state_matches(desc, state, dml)
     return state
 

@@ -134,9 +134,14 @@ def _rand_dml(desc, rng, n=60):
         pytest.param("tbl_blobs", marks=pytest.mark.full),
     ],
 )
-def test_replicator_multibatch(spark, table, tmp_path):
+def test_replicator_multibatch(spark, table, tmp_path, target_bucket_bytes):
     """Full pipeline over several microbatches, with cross-batch redelivery
-    (the at-least-once path through the seeded incremental apply)."""
+    (the at-least-once path through the seeded incremental apply). A
+    512-byte target bucket size re-buckets the small state and keeps it in
+    several buckets, as a large state would be."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    target_bucket_bytes(512)
     desc = FIXTURE_TABLES[table]
     rng = random.Random(7)
     dml = _rand_dml(desc, rng)
@@ -150,10 +155,10 @@ def test_replicator_multibatch(spark, table, tmp_path):
         desc,
         str(tmp_path / "work"),
         confidence_ms=0,
-        n_buckets=4,
         max_files_per_trigger=1,
     )
     _assert_state_matches(desc, state, dml)
+    assert ReplicatorSink(desc, str(tmp_path / "work" / "state")).n_buckets > 1
 
 
 def test_multi_table_consumer_matches_single_table(spark, tmp_path):
@@ -185,14 +190,14 @@ def test_multi_table_consumer_matches_single_table(spark, tmp_path):
         specs.append((name, src, desc))
 
     states = (
-        MultiTableConsumer(spark, str(tmp_path / "group"), n_buckets=4)
+        MultiTableConsumer(spark, str(tmp_path / "group"))
         .add_tables(specs)
         .replicate_available_now()
     )
     for name, src, desc in specs:
         single = replicate_available_now(
             spark, src, build_cdc_log_schema(desc), desc,
-            str(tmp_path / "single" / name), n_buckets=4,
+            str(tmp_path / "single" / name),
         )
         assert states[name].columns == single.columns == desc.base_schema.names
         _assert_state_matches(desc, states[name], dml[name])
@@ -246,7 +251,7 @@ def test_replicator_restart_resumes_from_checkpoint(spark, tmp_path):
     work = str(tmp_path / "work")
 
     _write_chunks(spark, schema, rows[:cut], src, 2, rng)
-    replicate_available_now(spark, src, schema, desc, work, n_buckets=4)
+    replicate_available_now(spark, src, schema, desc, work)
 
     # second wave: new changes plus redeliveries of already-applied ones
     _write_chunks(spark, schema, rows[cut:], src, 2, rng)
@@ -255,7 +260,7 @@ def test_replicator_restart_resumes_from_checkpoint(spark, tmp_path):
         spark.createDataFrame(replayed, schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    state = replicate_available_now(spark, src, schema, desc, work, n_buckets=4)
+    state = replicate_available_now(spark, src, schema, desc, work)
     _assert_state_matches(desc, state, dml)
 
 
@@ -437,7 +442,7 @@ def test_run_with_retries_replays_failed_batch(spark, tmp_path):
     schema = build_cdc_log_schema(desc)
     _write_chunks(spark, schema, rows, src, 1, random.Random(0))
 
-    sink = ReplicatorSink(desc, str(tmp_path / "state"), n_buckets=2)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
     calls = {"n": 0}
 
     def flaky(batch_df, batch_id):
@@ -482,7 +487,7 @@ def test_streaming_latency_within_reference_bound(spark, tmp_path):
     )
     schema = build_cdc_log_schema(desc)
     src = str(tmp_path / "src")
-    sink = ReplicatorSink(desc, str(tmp_path / "state"), n_buckets=2)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
     consumer = (
         CDCStreamConsumer(spark)
         .with_source(src, schema)
@@ -511,7 +516,7 @@ def test_streaming_latency_within_reference_bound(spark, tmp_path):
         CDCStreamConsumer.stop(query)
 
 
-def test_replicator_schema_evolution_add_and_drop(spark, tmp_path):
+def test_replicator_schema_evolution_add_and_drop(spark, tmp_path, target_bucket_bytes):
     """AlterAddColIT/AlterDropColIT analog (reference AlterTableBase.java:28
     family): restart the replicator with an ALTERed descriptor — rows
     materialized under the old schema gain NULL for an added column and
@@ -537,12 +542,17 @@ def test_replicator_schema_evolution_add_and_drop(spark, tmp_path):
     assert descriptor_diff(v2, v3) == ([], ["v1"])
 
     state_dir = str(tmp_path / "state")
+    # 600 filler rows and a ~2 KB target bucket size keep the state in
+    # several buckets, so the last batch leaves some of them untouched
+    filler = [("insert", ("f%d" % i,), (1,), {"v1": i}) for i in range(600)]
+    target_bucket_bytes(2048)
     g1 = CdcLogGenerator(v1)
-    sink1 = ReplicatorSink(v1, state_dir, n_buckets=4)
+    sink1 = ReplicatorSink(v1, state_dir)
     sink1(
         g1.spark_df(
             spark,
-            [("insert", ("a",), (1,), {"v1": 10}), ("insert", ("b",), (1,), {"v1": 20})],
+            [("insert", ("a",), (1,), {"v1": 10}), ("insert", ("b",), (1,), {"v1": 20})]
+            + filler,
             shuffle=False,
         ),
         0,
@@ -551,7 +561,7 @@ def test_replicator_schema_evolution_add_and_drop(spark, tmp_path):
     # restart with the column added; log times continue after batch 1
     g2 = CdcLogGenerator(v2)
     g2._t = g1._t
-    sink2 = ReplicatorSink(v2, state_dir, n_buckets=4)
+    sink2 = ReplicatorSink(v2, state_dir)
     sink2(
         g2.spark_df(
             spark,
@@ -565,20 +575,23 @@ def test_replicator_schema_evolution_add_and_drop(spark, tmp_path):
     )
     got = {
         (r["pk"], r["ck"]): (r["v1"], r["v2"])
-        for r in sink2.current_state(spark).collect()
+        for r in sink2.current_state(spark).where("pk NOT LIKE 'f%'").collect()
     }
     assert got == {("a", 1): (10, None), ("a", 2): (11, "x"), ("b", 1): (20, "y")}
 
     # restart again with v1 dropped; untouched buckets also stop exposing it
     g3 = CdcLogGenerator(v3)
     g3._t = g2._t
-    sink3 = ReplicatorSink(v3, state_dir, n_buckets=4)
+    sink3 = ReplicatorSink(v3, state_dir)
     sink3(
         g3.spark_df(spark, [("insert", ("c",), (1,), {"v2": "z"})], shuffle=False), 2
     )
+    manifest = sink3._latest_manifest()
+    assert any(not rel.startswith("v2/") for rel in manifest["buckets"].values())
     state3 = sink3.current_state(spark)
     assert "v1" not in state3.columns
-    got3 = {(r["pk"], r["ck"]): r["v2"] for r in state3.collect()}
+    assert state3.count() == 604
+    got3 = {(r["pk"], r["ck"]): r["v2"] for r in state3.where("pk NOT LIKE 'f%'").collect()}
     assert got3 == {("a", 1): None, ("a", 2): "x", ("b", 1): "y", ("c", 1): "z"}
 
 
@@ -629,11 +642,11 @@ def test_replicator_vacuum_keeps_live_state(spark, tmp_path):
     _write_chunks(spark, schema, rows, src, 4, rng)
     state = replicate_available_now(
         spark, src, schema, desc, str(tmp_path / "work"),
-        n_buckets=4, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     before = sorted(_canon(tuple(r)) for r in state.collect())
 
-    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=4)
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"))
     manifests = [f for f in os.listdir(sink.state_dir) if f.startswith("manifest-")]
     assert len(manifests) > 1  # several versions accumulated
     removed = sink.vacuum(keep_versions=1)
@@ -665,9 +678,9 @@ def test_replicator_vacuum_removes_torn_manifest_commit(spark, tmp_path):
     _write_chunks(spark, schema, rows, src, 2, rng)
     replicate_available_now(
         spark, src, schema, desc, str(tmp_path / "work"),
-        n_buckets=4, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
-    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=4)
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"))
     version = sink._latest_manifest()["version"]
     torn = os.path.join(sink.state_dir, f"manifest-{version + 1}.json.tmp-1a2b3c4d")
     with open(torn, "w") as fh:
@@ -689,7 +702,31 @@ def _bucket_files(sink, manifest):
     return out
 
 
-def test_replicator_writes_one_file_per_bucket(spark, tmp_path):
+def _wide_insert(key, ck, rng):
+    # a 40-character random value: ~60 bytes of parquet per row, so a few
+    # hundred rows outweigh one file's fixed overhead (~1.5 KB)
+    return ("insert", (key,), (ck,), {"v1": rng.randrange(1000), "v2": "%040x" % rng.getrandbits(160)})
+
+
+class _Batches:
+    """Each call encodes a DML wave as one new micro-batch DataFrame (the
+    generator's ``encode`` returns its whole row list) and keeps the DML
+    prefix applied so far for the oracle."""
+
+    def __init__(self, spark, desc):
+        self.spark, self.gen = spark, CdcLogGenerator(desc)
+        self.schema = build_cdc_log_schema(desc)
+        self.dml: list[tuple] = []
+        self.rows = 0
+
+    def __call__(self, wave):
+        rows = self.gen.encode(wave)[self.rows:]
+        self.rows += len(rows)
+        self.dml += wave
+        return self.spark.createDataFrame(rows, self.schema)
+
+
+def test_replicator_writes_one_file_per_bucket(spark, tmp_path, target_bucket_bytes):
     """Every bucket directory the manifest points at holds exactly one
     parquet file — after several deduped micro-batches (AQE is off inside
     a stream, and there are more buckets than shuffle partitions) and
@@ -698,28 +735,23 @@ def test_replicator_writes_one_file_per_bucket(spark, tmp_path):
 
     desc = FIXTURE_TABLES["tbl_simple"]
     rng = random.Random(23)
-    dml = [
-        ("insert", ("k%d" % rng.randrange(80),), (rng.randrange(3),), {"v1": i, "v2": "x"})
-        for i in range(200)
-    ]
-    dml += [("row_delete", ("k%d" % rng.randrange(80),), (rng.randrange(3),)) for _ in range(20)]
+    dml = [_wide_insert("k%d" % rng.randrange(400), rng.randrange(3), rng) for _ in range(1500)]
+    dml += [("row_delete", ("k%d" % rng.randrange(400),), (rng.randrange(3),)) for _ in range(100)]
     rows = CdcLogGenerator(desc).encode(dml)
     src = str(tmp_path / "src")
     schema = build_cdc_log_schema(desc)
     _write_chunks(spark, schema, rows, src, 3, rng, replay_frac=0.2)
-    n_buckets = 16
-    assert n_buckets > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target_bucket_bytes(2048)
     state = replicate_available_now(
-        spark, src, schema, desc, str(tmp_path / "work"),
-        n_buckets=n_buckets, max_files_per_trigger=1,
+        spark, src, schema, desc, str(tmp_path / "work"), max_files_per_trigger=1,
     )
     _assert_state_matches(desc, state, dml)
 
-    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=n_buckets)
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"))
     manifest = sink._latest_manifest()
     assert manifest["version"] >= 1  # at least two micro-batches committed
     files = _bucket_files(sink, manifest)
-    assert len(files) > 8
+    assert len(files) > int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert all(len(f) == 1 for f in files.values()), files
 
     assert sink.conform_snapshot(spark)
@@ -730,23 +762,21 @@ def test_replicator_writes_one_file_per_bucket(spark, tmp_path):
     _assert_state_matches(desc, sink.current_state(spark), dml)
 
 
-def test_replicator_call_lists_paths_in_driver(spark, tmp_path):
+def test_replicator_call_lists_paths_in_driver(spark, tmp_path, target_bucket_bytes):
     """A sink call that reads more bucket directories than Spark's default
     parallel-listing threshold (32) lists them in the driver: no
     ``Listing leaf files`` job runs during the streamed call."""
     from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
 
     desc = FIXTURE_TABLES["tbl_simple"]
-    schema = build_cdc_log_schema(desc)
-    gen = CdcLogGenerator(desc)
-    # encode() returns (and keeps appending to) its internal row list
-    rows = list(gen.encode(
-        [("insert", ("k%d" % i,), (0,), {"v1": i, "v2": "a"}) for i in range(400)]
-    ))
+    batch = _Batches(spark, desc)
+    rng = random.Random(0)
     src = str(tmp_path / "src")
     work = str(tmp_path / "work")
-    _write_chunks(spark, schema, rows, src, 1, random.Random(0))
-    replicate_available_now(spark, src, schema, desc, work, n_buckets=64)
+
+    def wave(dml):
+        batch(dml).coalesce(1).write.mode("append").parquet(src)
+        replicate_available_now(spark, src, batch.schema, desc, work)
 
     def jobs():
         # (id, description) of every job in the status store (UI off too)
@@ -757,21 +787,115 @@ def test_replicator_call_lists_paths_in_driver(spark, tmp_path):
             out[j.jobId()] = j.description().get() if j.description().isDefined() else ""
         return out
 
+    # the first call writes one bucket, the second re-buckets the state
+    target_bucket_bytes(2560)
+    wave([_wide_insert("k%d" % i, 0, rng) for i in range(2500)])
+    wave([_wide_insert("k%d" % i, 0, rng) for i in range(0, 2500, 50)])
     before = jobs()
-    updates = gen.encode(
-        [("insert", ("k%d" % i,), (0,), {"v1": -i, "v2": "b"}) for i in range(0, 400, 3)]
-    )[len(rows):]
-    _write_chunks(spark, schema, updates, src, 1, random.Random(1))
-    replicate_available_now(spark, src, schema, desc, work, n_buckets=64)
+    wave([_wide_insert("k%d" % i, 0, rng) for i in range(0, 2500, 3)])
     new_jobs = {i: d for i, d in jobs().items() if i not in before}
 
-    sink = ReplicatorSink(desc, os.path.join(work, "state"), n_buckets=64)
+    sink = ReplicatorSink(desc, os.path.join(work, "state"))
     last = sink._latest_manifest()
-    assert last["version"] == 1  # one call for the second wave
-    assert sum(rel.startswith("v1/") for rel in last["buckets"].values()) > 32
+    assert last["version"] == 2  # one call per wave
+    assert sink.n_buckets > 32
+    assert sum(rel.startswith("v2/") for rel in last["buckets"].values()) > 32
     assert new_jobs
     listing = [d for d in new_jobs.values() if d.startswith("Listing leaf files")]
     assert not listing, listing
+
+
+def test_replicator_grows_bucket_count_with_state(spark, tmp_path, target_bucket_bytes):
+    """The bucket count follows the committed state: the first write is one
+    bucket, a state grown past twice the target bucket size is re-bucketed
+    to >= 4 (every live bucket rewritten at the new count), each live bucket
+    holds one parquet file, and the state equals the DML replay after every
+    micro-batch."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(31)
+    batch = _Batches(spark, desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    waves = [
+        [_wide_insert("k%d" % i, 0, rng) for i in range(150)],
+        [_wide_insert("k%d" % i, 1, rng) for i in range(150, 600)],
+        [_wide_insert("k%d" % rng.randrange(600), 0, rng) for _ in range(100)]
+        + [("row_delete", ("k%d" % rng.randrange(600),), (1,)) for _ in range(30)],
+        [_wide_insert("k%d" % i, 2, rng) for i in range(20)],
+    ]
+    counts = []
+    target_bucket_bytes(2048)
+    for batch_id, wave in enumerate(waves):
+        sink(batch(wave), batch_id)
+        manifest = sink._latest_manifest()
+        _assert_state_matches(desc, sink.current_state(spark), batch.dml)
+        assert all(len(f) == 1 for f in _bucket_files(sink, manifest).values())
+        assert manifest["bucket_bytes"].keys() == manifest["buckets"].keys()
+        if counts and manifest["n_buckets"] != counts[-1]:
+            rel = f"v{manifest['version']}/"
+            assert all(r.startswith(rel) for r in manifest["buckets"].values())
+        counts.append(manifest["n_buckets"])
+    assert counts[0] == 1
+    assert max(counts) >= 4
+    assert sink.n_buckets == counts[-1]
+
+
+def test_replicator_bucket_count_holds_at_band_edge(spark, tmp_path, target_bucket_bytes):
+    """A state whose size swings across the edge that re-bucketed it does
+    not re-bucket again: the band is [T/2, 2T] per bucket, so after one
+    bucket becomes two, a state moving between under and over 2T keeps
+    two buckets on every trigger."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(37)
+    batch = _Batches(spark, desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    sink(batch([_wide_insert("k%d" % i, 0, rng) for i in range(400)]), 0)
+    assert sink.n_buckets == 1
+    target = int(sum(sink._latest_manifest()["bucket_bytes"].values()) / 2.1)
+
+    counts, sizes = [], []
+    target_bucket_bytes(target)
+    for batch_id in range(1, 5):
+        if batch_id % 2:
+            wave = [("row_delete", ("k%d" % i,), (0,)) for i in range(200, 400)]
+        else:
+            wave = [_wide_insert("k%d" % i, 0, rng) for i in range(200, 400)]
+        sink(batch(wave), batch_id)
+        manifest = sink._latest_manifest()
+        counts.append(manifest["n_buckets"])
+        sizes.append(sum(manifest["bucket_bytes"].values()))
+        _assert_state_matches(desc, sink.current_state(spark), batch.dml)
+    assert counts == [2, 2, 2, 2]
+    assert min(sizes) < 2 * target < max(sizes)  # hovering at one bucket's edge
+
+
+def test_replicator_rebuckets_manifest_without_bucket_count(spark, tmp_path):
+    """A manifest written before the sizing rule (8 buckets, no recorded
+    count or sizes) is re-bucketed by the next trigger — every live bucket
+    rewritten, here into the one bucket a small state gets — and the
+    state matches the DML replay."""
+    from scylla_cdc_java_spark.model.statestore import commit_json
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(41)
+    batch = _Batches(spark, desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    sink(batch([_wide_insert("k%d" % i, 0, rng) for i in range(60)]), 0)
+    buckets, _ = sink._write_buckets(sink.current_state(spark), 1, 8)
+    assert len(buckets) == 8
+    commit_json(os.path.join(sink.state_dir, "manifest-1.json"), {"version": 1, "buckets": buckets})
+    assert sink.n_buckets is None
+
+    sink(batch([_wide_insert("k7", 0, rng), ("row_delete", ("k8",), (0,))]), 1)
+    manifest = sink._latest_manifest()
+    assert manifest["version"] == 2
+    assert manifest["n_buckets"] == 1
+    assert manifest["buckets"] == {"0": "v2/__bucket=0"}
+    _assert_state_matches(desc, sink.current_state(spark), batch.dml)
 
 
 # full: generation rollover pinned by the t6 oracle gate.
@@ -860,7 +984,7 @@ def test_replicator_postimage_mode_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.createDataFrame(rows + images, schema).coalesce(1).write.parquet(src)
     state = replicate_available_now(
-        spark, src, schema, desc, str(tmp_path / "work"), mode="postimage", n_buckets=2
+        spark, src, schema, desc, str(tmp_path / "work"), mode="postimage"
     )
     got = {r["ck"]: r for r in state.collect()}
     assert set(got) == {1}
@@ -871,9 +995,11 @@ def test_replicator_postimage_mode_stream(spark, tmp_path):
 @pytest.mark.full
 @pytest.mark.parametrize("seed", [101, 202])
 @pytest.mark.parametrize("table", ["tbl_multiple_clustering_keys", "tbl_lists"])
-def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path):
+def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path, target_bucket_bytes):
     """Extra fuzz seeds over the trickiest schemas (multi-ck range deletes,
-    list timeuuid order) through the full streaming path."""
+    list timeuuid order) through the full streaming path, in several
+    buckets as in ``test_replicator_multibatch``."""
+    target_bucket_bytes(512)
     desc = FIXTURE_TABLES[table]
     rng = random.Random(seed)
     dml = _rand_dml(desc, rng, n=70)
@@ -886,7 +1012,6 @@ def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path):
         build_cdc_log_schema(desc),
         desc,
         str(tmp_path / "work"),
-        n_buckets=4,
         max_files_per_trigger=1,
     )
     _assert_state_matches(desc, state, dml)
@@ -908,16 +1033,16 @@ def test_replicator_bucket_removed_when_emptied(spark, tmp_path):
     src1 = str(tmp_path / "src")
     _write_chunks(spark, schema, ins, src1, 1, random.Random(0))
     work = str(tmp_path / "work")
-    state = replicate_available_now(spark, src1, schema, desc, work, n_buckets=2)
+    state = replicate_available_now(spark, src1, schema, desc, work)
     assert state.count() == 1
 
     # second wave deletes the only row
     dels = gen.encode([("row_delete", ("solo",), (1,))])[len(ins):]
     _write_chunks(spark, schema, dels, src1, 1, random.Random(1))
-    state2 = replicate_available_now(spark, src1, schema, desc, work, n_buckets=2)
+    state2 = replicate_available_now(spark, src1, schema, desc, work)
     assert state2.count() == 0
 
-    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"), n_buckets=2)
+    sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"))
     manifest = sink._latest_manifest()
     assert manifest["buckets"] == {}  # pointer dropped, not stale
     assert sink.current_state(spark) is None or sink.current_state(spark).count() == 0
