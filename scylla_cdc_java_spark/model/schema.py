@@ -171,45 +171,3 @@ def conform_column(col, have: T.DataType, want: T.DataType):
             col, lambda _, v: conform_column(v, have.valueType, want.valueType)
         )
     return col.cast(want)
-
-
-def conform_state(state, desc: CdcTableDescriptor, keep_extra: tuple = ()):
-    """Reconcile a materialized state frame written under an *older* schema
-    with the current descriptor — the restart path of schema evolution:
-
-    * columns the new schema added are filled with NULL (ALTER ADD: rows
-      written before the alter have no value for the new column);
-    * columns the new schema dropped disappear (ALTER DROP discards data);
-    * primary-key columns must be present (cannot be altered in CQL).
-
-    ``keep_extra`` preserves bookkeeping columns (version, bucket) when
-    present. Used by the replicator when seeding ``initial_state`` from a
-    state table produced before an ALTER (reference rebuilds ChangeSchema
-    when the column-definition hash changes, Driver3WorkerCQL.java:133-159).
-    """
-    from pyspark.sql import functions as F
-
-    cols = set(state.columns)
-    missing_keys = [k for k in desc.primary_key if k not in cols]
-    if missing_keys:
-        raise ValueError(
-            f"state is missing primary-key columns {missing_keys}; "
-            "schema evolution cannot add or drop key columns"
-        )
-    have = {f.name: f for f in state.schema.fields}
-    sel = []
-    for f in desc.base_schema.fields:
-        if f.name in cols:
-            # nested reconciliation: a UDT field added/dropped mid-stream
-            # (ALTER TYPE) changes the struct type, not the column set
-            sel.append(
-                conform_column(F.col(f.name), have[f.name].dataType, f.dataType).alias(
-                    f.name
-                )
-            )
-        else:
-            sel.append(F.lit(None).cast(f.dataType).alias(f.name))
-    for c in keep_extra:
-        if c in cols:
-            sel.append(F.col(c))
-    return state.select(*sel)

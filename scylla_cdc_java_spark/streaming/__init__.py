@@ -9,9 +9,9 @@ sink, and the checkpointLocation as the CDCStateStore.
 ``replicate_available_now``, ``MultiTableConsumer`` and
 ``replicate_with_schema_evolution`` share one consumer -> sink runner
 (``replicator._Replication``): one work-dir layout (``<work>/state``,
-``<work>/checkpoint``) and one materialized-state rule (the bookkeeping
-columns ``cdc$time_micros`` and ``__bucket`` dropped; an empty base-schema
-frame before the first commit).
+``<work>/checkpoint``) and one materialized-state rule (the version
+column ``cdc$time_micros`` dropped; an empty base-schema frame before the
+first commit).
 """
 
 from .consumer import (  # noqa: F401

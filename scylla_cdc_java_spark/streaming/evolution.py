@@ -29,10 +29,10 @@ Spark-native equivalent has two parts:
   requery at file granularity (a file that lands in the instant between
   the footer listing and the source's own listing is still read under
   the pass schema; the listing happens immediately before the pass, so
-  that window is the file-landing race every file source has). The
-  materialized state is reconciled by ``conform_state`` inside the sink
-  (the restart path), so both halves of the ALTER land without user
-  intervention.
+  that window is the file-landing race every file source has). The sink
+  reads the materialized state under the current descriptor's schema
+  (added columns and UDT fields read NULL, dropped ones are not read), so
+  both halves of the ALTER land without user intervention.
 
 Scale posture: signature detection reads one parquet footer; the evolve
 loop adds zero data-plane work — each round is the normal replication
@@ -91,10 +91,10 @@ _IDENTITY_COLS = ("cdc$stream_id", "cdc$batch_seq_no", "cdc$operation")
 def conform_changes(df: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
     """Conform a CDC-log batch frame to ``desc``'s wire schema.
 
-    Mirrors ``conform_state`` for the *log* side: value and
-    ``cdc$deleted_*`` columns the frame lacks (files written before an
-    ALTER ADD) become typed NULLs; value columns the descriptor no longer
-    declares (ALTER DROP) disappear; unknown ``cdc$`` envelope extras
+    The *log* side of the sink's state read under the descriptor's
+    schema: value and ``cdc$deleted_*`` columns the frame lacks (files
+    written before an ALTER ADD) become typed NULLs; value columns the
+    descriptor no longer declares (ALTER DROP) disappear; unknown ``cdc$`` envelope extras
     (e.g. ``generation`` partition dirs, derived time columns) pass
     through untouched. Identity envelope columns must already be present.
     """

@@ -6,10 +6,11 @@ destination is a **copy-on-write bucketed parquet table** driven from
 ``foreachBatch``:
 
 * state rows are hash-bucketed on the partition key (``xxhash64 % n``);
-* each microbatch touches only the buckets its changes hash into: it reads
-  those buckets' current files, folds the changes on top with the apply
-  kernel (seeded with the per-row version column, so replays converge),
-  and writes the result as a new bucket directory;
+* a microbatch reads the current files of the buckets it touches (under
+  the descriptor's state schema, so no footer-merge job runs), folds the
+  changes on top with the apply kernel (seeded with the per-row version
+  column, so replays converge), and writes the result as a new bucket
+  directory;
 * every bucket write goes through ``_write_buckets``, which first
   repartitions on the bucket column: each bucket's rows sit in exactly one
   writer task, so a version directory holds one parquet file per rewritten
@@ -19,11 +20,45 @@ destination is a **copy-on-write bucketed parquet table** driven from
   the rewritten state; the writer tasks still run in parallel
   (``spark.sql.shuffle.partitions`` of them);
 * a JSON manifest per version maps bucket -> data directory and records
-  ``n`` and each live bucket's data bytes; unchanged buckets keep pointing
-  at their old files (no rewrite);
+  ``n``, each live bucket's data bytes, the stream's query id and the
+  ``batch_id`` it commits, the newest ``cdc$time`` committed so far (the
+  consumer lag is now minus that time, ``_Replication.lag``) and the batch's
+  ``metrics`` (rows in, buckets touched and written, bytes written, write
+  and call wall ms); unchanged buckets keep pointing at their old files
+  (no rewrite);
 * the manifest commit is a write-temp-then-rename, and the streaming
-  checkpoint (T4) guarantees each batch is retried until committed —
-  at-least-once end to end, convergent because application is row-LWW.
+  checkpoint (T4) retries each batch until Spark commits it. A crash
+  between the manifest commit and the checkpoint commit replays the batch:
+  the sink finds its ``(query id, batch_id)`` already committed and writes no
+  bucket — the idempotent-sink contract of Structured Streaming. Outside a
+  stream (no query id) every call applies; application is row-LWW, so a
+  repeat converges anyway.
+
+**Spark jobs per trigger.** One, wherever the read set follows from the
+manifest alone: at one bucket (every state below ``2T``) it is the one
+live bucket, and on a trigger that moves ``n`` it is every live bucket.
+The write job then evaluates the micro-batch plan — the stateful
+``dropDuplicatesWithinWatermark`` included — exactly once, and an
+``Observation`` on the batch counts its rows and takes its newest
+``cdc$time`` inside that job. Only a stable many-bucket state (``n > 1``,
+unchanged) runs a pre-pass: ``distinct(__bucket).collect()`` finds the
+changed buckets, so the read set depends on the batch, and the batch is
+evaluated twice. A broadcast semi-join of the state on the batch's bucket
+set was tried in place of the collect and still evaluated the batch
+twice; merge-on-read deltas (no state read at all) are the way to one
+pass at any bucket count.
+
+Three constraints shape the body. Spark commits a stateful operator's
+store only when the batch is evaluated, and Spark 4.1 fails the query
+when a batch ends with its stores uncommitted — so every call evaluates
+the batch once, even a replay (through the ``noop`` writer). A no-data
+batch (the stream runs one when the watermark moves) is only known empty
+once the write job has run: at one bucket it reads and rewrites the state
+and then deletes its ``v<N>`` directory without committing a manifest;
+in the pre-pass case it stops after the pre-pass. And a bucket file
+written before an ALTER reads under the current schema: an added column
+or UDT field reads NULL, a dropped one is not read (``conform_snapshot``
+covers the re-ADD of a dropped name).
 
 **Bucket count.** ``n`` follows the committed state, not an option: it is
 a power of two kept so that ``state_bytes / n`` stays in ``[T/2, 2T]``,
@@ -79,14 +114,17 @@ import json
 import math
 import os
 import re
+import shutil
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..model.schema import CdcTableDescriptor, conform_state
+from ..model.schema import CdcTableDescriptor
 from ..model.statestore import commit_json
 from ..operators.apply import apply_cdc_log
-from ..operators.normalize import TIME_MICROS
+from ..operators.normalize import TIME_MICROS, normalize_changes
 from .consumer import CDCStreamConsumer
 
 _BUCKET = "__bucket"
@@ -100,6 +138,16 @@ _EMPTY = {"version": -1, "buckets": {}, "n_buckets": 1, "bucket_bytes": {}}
 
 def _bucket_expr(pk_cols: list[str], n: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(n)).cast("int")
+
+
+def _observed(seen: Observation) -> tuple[int, int | None]:
+    """The batch's (row count, newest ``cdc$time_micros``) from the write
+    job. Adaptive execution (on when the sink is called outside a stream)
+    prunes the observed node from a plan over an empty batch, and the
+    observation then completes with an empty row, which ``Observation.get``
+    cannot convert: that is an empty batch."""
+    row = seen._jo.getRow()
+    return (row.get(0), row.get(1)) if row.length() else (0, None)
 
 
 def _data_bytes(bucket_dir: str) -> int:
@@ -142,11 +190,12 @@ class ReplicatorSink:
             return json.load(fh)
 
     def _commit_manifest(
-        self, version: int, n: int, buckets: dict[str, str], sizes: dict[str, int]
+        self, version: int, n: int, buckets: dict[str, str], sizes: dict[str, int], **extra
     ) -> None:
         commit_json(
             os.path.join(self.state_dir, f"manifest-{version}.json"),
-            {"version": version, "buckets": buckets, "n_buckets": n, "bucket_bytes": sizes},
+            {"version": version, "buckets": buckets, "n_buckets": n, "bucket_bytes": sizes,
+             **extra},
         )
 
     def _bucket_count(self, manifest: dict) -> int:
@@ -192,6 +241,10 @@ class ReplicatorSink:
         return buckets, sizes
 
     def _read_buckets(self, spark: SparkSession, manifest: dict, buckets) -> DataFrame | None:
+        """The given buckets' rows, read under the descriptor's state schema
+        (base schema + ``cdc$time_micros``): a column or UDT field that a
+        bucket file written before an ALTER ADD lacks reads NULL, one an
+        ALTER DROP removed is not read, and no footer-merge job runs."""
         paths = [
             os.path.join(self.state_dir, manifest["buckets"][b])
             for b in buckets
@@ -199,20 +252,18 @@ class ReplicatorSink:
         ]
         if not paths:
             return None
-        # buckets written before an ALTER lack added columns; merge the
-        # file schemas so they surface as NULL instead of vanishing
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        schema = T.StructType(
+            [*self.desc.base_schema.fields, T.StructField(TIME_MICROS, T.LongType())]
+        )
+        return spark.read.schema(schema).parquet(*paths)
 
     def current_state(self, spark: SparkSession) -> DataFrame | None:
         """The latest committed state across all buckets (version col
-        included), conformed to the current descriptor schema."""
+        included), under the current descriptor's schema."""
         manifest = self._latest_manifest()
         if manifest is None:
             return None
-        state = self._read_buckets(spark, manifest, manifest["buckets"])
-        if state is None:
-            return None
-        return conform_state(state, self.desc, keep_extra=(TIME_MICROS, _BUCKET))
+        return self._read_buckets(spark, manifest, manifest["buckets"])
 
     def conform_snapshot(self, spark: SparkSession) -> bool:
         """Physically rewrite the persisted state snapshot conformed to
@@ -222,9 +273,9 @@ class ReplicatorSink:
 
         Copy-on-write sheds dropped data only LOGICALLY: untouched bucket
         files keep the stale values (whole columns or nested struct
-        fields) on disk, and if an ALTER later re-ADDs the same name,
-        ``mergeSchema`` + ``conform_state`` would read those stale values
-        back — the resurrection the reference's AlterReAddColIT /
+        fields) on disk, and if an ALTER later re-ADDs the same name, the
+        read under the descriptor's schema would find those stale values
+        again by name — the resurrection the reference's AlterReAddColIT /
         AlterUpdateUdtIT semantics forbid (ScyllaDB's own ALTER DROP
         discards the data physically). ALTERs are rare; one state rewrite
         per destructive ALTER is the honest cost. Returns False when
@@ -236,7 +287,12 @@ class ReplicatorSink:
         manifest = self._latest_manifest()
         n = self._bucket_count(manifest)
         version = manifest["version"] + 1
-        self._commit_manifest(version, n, *self._write_buckets(state, version, n))
+        # the rewrite holds the same batches and changes as before it
+        carried = ("query_id", "batch_id", "max_time_micros")
+        self._commit_manifest(
+            version, n, *self._write_buckets(state, version, n),
+            **{k: manifest[k] for k in carried if k in manifest},
+        )
         return True
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
@@ -244,8 +300,6 @@ class ReplicatorSink:
         ``keep_versions`` references, plus superseded manifests and the temp
         files of torn manifest commits. Returns the removed paths. Run
         out-of-band (like Delta VACUUM) — never concurrently with a writer."""
-        import shutil
-
         versions = self._manifest_versions()
         if not versions:
             return []
@@ -270,44 +324,76 @@ class ReplicatorSink:
 
     # -- the sink body --------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        start = time.time()
         spark = batch_df.sparkSession
-        pk = list(self.desc.partition_keys)
         manifest = self._latest_manifest() or _EMPTY
-        n = self._bucket_count(manifest)
-        batch_df = batch_df.withColumn(_BUCKET, _bucket_expr(pk, n))
-        # One pass over the pk-only projection yields the changed-bucket set
-        # (<= n ints — safe to collect) AND the emptiness check; no separate
-        # take(1) pre-read of the source.
-        changed = {str(r[0]) for r in batch_df.select(_BUCKET).distinct().collect()}
-        if not changed:
+        # the stream's persistent id: the same across restarts from one
+        # checkpoint, None when the sink is called outside a stream
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if (
+            query_id is not None
+            and manifest.get("query_id") == query_id
+            and manifest["batch_id"] >= batch_id
+        ):
+            # a replay of a committed batch: the state already holds it.
+            # The batch is still evaluated once — the dedup state store
+            # must commit this batch or the query fails
+            batch_df.write.format("noop").mode("overwrite").save()
             return
+        n = self._bucket_count(manifest)
+        seen = Observation()
+        batch_df = normalize_changes(batch_df).observe(
+            seen, F.count(F.lit(1)).alias("rows"), F.max(TIME_MICROS).alias("max_time")
+        )
         old = manifest["buckets"]
-        # a new bucket count re-hashes every row: read and rewrite them all
-        touched = changed if n == manifest.get("n_buckets") else set(old)
-        initial = self._read_buckets(spark, manifest, touched)
-        if initial is not None:
-            # schema evolution between restarts: state written under an
-            # older descriptor gains NULLs for added columns and sheds
-            # dropped ones before seeding the apply (ALTER ADD/DROP)
-            initial = conform_state(initial, self.desc, keep_extra=(TIME_MICROS,))
-            initial = initial.withColumn(_BUCKET, _bucket_expr(pk, n))
+        if n > 1 and n == manifest.get("n_buckets"):
+            # only here does the read set depend on the batch: one pass over
+            # the pk-only projection yields the changed buckets (<= n ints)
+            bucket = _bucket_expr(list(self.desc.partition_keys), n)
+            touched = {str(r[0]) for r in batch_df.select(bucket).distinct().collect()}
+            if not touched:
+                return
+        else:
+            # one bucket, or a new bucket count that re-hashes every row:
+            # read and rewrite every live bucket
+            touched = set(old)
 
         new_state = apply_cdc_log(
             batch_df,
             self.desc,
             mode=self.mode,
-            initial_state=initial,
+            initial_state=self._read_buckets(spark, manifest, touched),
             with_version_col=True,
         )
-
         version = manifest["version"] + 1
+        write_start = time.time()
         buckets, sizes = self._write_buckets(new_state, version, n)
+        write_ms = round(1e3 * (time.time() - write_start))
+        rows, max_time = _observed(seen)
+        if not rows:
+            # a no-data batch (the watermark moved): keep the state as it is
+            shutil.rmtree(os.path.join(self.state_dir, f"v{version}"))
+            return
+        metrics = {
+            "rows_in": rows,
+            "buckets_touched": len(touched),
+            "buckets_written": len(buckets),
+            "bytes_written": sum(sizes.values()),
+            "write_ms": write_ms,
+        }
         # a touched bucket missing from ``buckets`` had every row deleted
         # by this batch: its pointer is dropped
         for b in old.keys() - touched:
             buckets[b] = old[b]
             sizes[b] = manifest["bucket_bytes"][b]
-        self._commit_manifest(version, n, buckets, sizes)
+        metrics["call_ms"] = round(1e3 * (time.time() - start))
+        self._commit_manifest(
+            version, n, buckets, sizes,
+            query_id=query_id,
+            batch_id=batch_id,
+            max_time_micros=max(max_time, manifest.get("max_time_micros", max_time)),
+            metrics=metrics,
+        )
 
 
 class _Replication:
@@ -340,14 +426,26 @@ class _Replication:
         )
 
     def state(self) -> DataFrame:
-        """The materialized state: the committed snapshot without the
-        bookkeeping columns (exactly ``cdc$time_micros`` and ``__bucket``),
-        or an empty frame of the base schema when nothing is committed."""
+        """The materialized state: the committed snapshot without its
+        version column ``cdc$time_micros``, or an empty frame of the base
+        schema when nothing is committed."""
         spark = self.consumer.spark
         state = self.sink.current_state(spark)
         if state is None:
             return spark.createDataFrame([], self.sink.desc.base_schema)
-        return state.drop(TIME_MICROS, _BUCKET)
+        return state.drop(TIME_MICROS)
+
+    def lag(self, now_ms: float | None = None) -> dict | None:
+        """Consumer lag against the confidence window: ``lag_ms`` (``now_ms``,
+        default the wall clock, minus the newest committed ``cdc$time``),
+        ``confidence_ms`` and whether the lag is ``within_confidence``; None
+        before the first commit."""
+        newest = (self.sink._latest_manifest() or _EMPTY).get("max_time_micros")
+        if newest is None:
+            return None
+        lag_ms = (time.time() * 1e3 if now_ms is None else now_ms) - newest / 1e3
+        c = self.consumer.confidence_ms
+        return {"lag_ms": lag_ms, "confidence_ms": c, "within_confidence": lag_ms <= c}
 
     def catch_up(self) -> DataFrame:
         """One AvailableNow pass over everything in the source; returns

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 import random
+import time
 
 import pytest
 
@@ -595,14 +596,10 @@ def test_replicator_schema_evolution_add_and_drop(spark, tmp_path, target_bucket
     assert got3 == {("a", 1): None, ("a", 2): "x", ("b", 1): "y", ("c", 1): "z"}
 
 
-def test_conform_state_rejects_key_changes(spark):
+def test_descriptor_diff_rejects_key_changes():
     from pyspark.sql import types as T
 
-    from scylla_cdc_java_spark.model.schema import (
-        CdcTableDescriptor,
-        conform_state,
-        descriptor_diff,
-    )
+    from scylla_cdc_java_spark.model.schema import CdcTableDescriptor, descriptor_diff
 
     desc = CdcTableDescriptor(
         name="t",
@@ -611,9 +608,6 @@ def test_conform_state_rejects_key_changes(spark):
         ),
         partition_keys=["pk"],
     )
-    state = spark.createDataFrame([(1, 2)], "other string, v int")
-    with pytest.raises(ValueError, match="primary-key"):
-        conform_state(state, desc)
     desc2 = CdcTableDescriptor(
         name="t",
         base_schema=desc.base_schema,
@@ -693,6 +687,115 @@ def test_replicator_vacuum_removes_torn_manifest_commit(spark, tmp_path):
     _assert_state_matches(desc, sink.current_state(spark), dml)
 
 
+def _stream(run, body, name):
+    """One AvailableNow pass of ``run``'s consumer into ``body``; returns the
+    query after it ends (raises if a call of ``body`` failed)."""
+    query = run.consumer.trigger_available_now().start(body, query_name=name)
+    query.awaitTermination()
+    return query
+
+
+def _recorded(sink, calls):
+    """A ``foreachBatch`` body that runs ``sink`` and appends, per call, the
+    batch id and the state dir's listing before and after it."""
+
+    def body(batch_df, batch_id):
+        before = sorted(os.listdir(sink.state_dir))
+        sink(batch_df, batch_id)
+        calls.append((batch_id, before, sorted(os.listdir(sink.state_dir))))
+
+    return body
+
+
+def _raise(*_, **__):
+    raise RuntimeError("injected crash")
+
+
+@pytest.mark.parametrize("point", ["before_write", "before_manifest", "before_checkpoint"])
+def test_replicator_crash_replay_converges(spark, tmp_path, point):
+    """A crash at each commit point of a trigger fails the query: before
+    the bucket write, between the write and the manifest commit, and
+    between the manifest commit and the stream's checkpoint commit. The
+    restart replays the batch from the checkpoint and the state equals the
+    DML replay. The replay of a batch whose manifest is committed writes no
+    bucket and commits no manifest."""
+    from scylla_cdc_java_spark.streaming.replicator import _Replication
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(19)
+    dml = _rand_dml(desc, rng, n=30)
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 2, rng)
+    run = _Replication(spark, desc, src, schema, str(tmp_path / "work"), "delta", 0, 1)
+    sink = run.sink
+    patched = {"before_write": "_write_buckets", "before_manifest": "_commit_manifest"}.get(point)
+
+    def crashing(batch_df, batch_id):
+        if patched:
+            setattr(sink, patched, _raise)
+        try:
+            sink(batch_df, batch_id)
+        finally:
+            if patched:
+                delattr(sink, patched)
+        _raise()  # the sink returned: crash before the checkpoint commit
+
+    with pytest.raises(Exception, match="injected crash"):
+        _stream(run, crashing, "crash")
+    manifest = sink._latest_manifest()
+    if point == "before_checkpoint":
+        assert (manifest["batch_id"], manifest["version"]) == (0, 0)
+    else:
+        assert manifest is None
+        assert os.path.isdir(os.path.join(sink.state_dir, "v0")) == (point == "before_manifest")
+
+    calls = []
+    _stream(run, _recorded(sink, calls), "replay")
+    _assert_state_matches(desc, run.state(), dml)
+    replay_id, before, after = calls[0]
+    assert replay_id == 0  # the crashed batch runs again first
+    if point == "before_checkpoint":
+        assert before == after  # no bucket rewritten, no manifest committed
+    else:
+        assert "manifest-0.json" in after
+
+
+def test_replicator_no_data_batch_commits_nothing(spark, tmp_path):
+    """A no-data micro-batch (the stream runs one when the watermark moves)
+    leaves no new manifest and no ``v<N>`` directory; the latest manifest
+    records the last data batch and its row count."""
+    from scylla_cdc_java_spark.streaming.replicator import _Replication
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(29)
+    dml = _rand_dml(desc, rng, n=30)
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 2, rng)
+    run = _Replication(spark, desc, src, schema, str(tmp_path / "work"), "delta", 30_000, 1)
+    calls = []
+    query = _stream(run, _recorded(run.sink, calls), "no-data")
+    rows_in = {p["batchId"]: p["numInputRows"] for p in query.recentProgress}
+
+    empty = [(before, after) for b, before, after in calls if rows_in[b] == 0]
+    assert empty, rows_in  # the stream ran at least one no-data batch
+    assert all(before == after for before, after in empty)
+    last = max(b for b, _, _ in calls if rows_in[b] > 0)
+    manifest = run.sink._latest_manifest()
+    assert manifest["batch_id"] == last
+    assert manifest["metrics"]["rows_in"] == rows_in[last]
+    _assert_state_matches(desc, run.state(), dml)
+
+    # outside a stream adaptive execution is on and prunes the observed
+    # node from the plan over an empty batch: still no commit
+    listing = sorted(os.listdir(run.sink.state_dir))
+    run.sink(spark.createDataFrame([], schema), last + 1)
+    assert sorted(os.listdir(run.sink.state_dir)) == listing
+
+
 def _bucket_files(sink, manifest):
     """bucket -> the parquet data files its manifest directory holds."""
     out = {}
@@ -762,6 +865,18 @@ def test_replicator_writes_one_file_per_bucket(spark, tmp_path, target_bucket_by
     _assert_state_matches(desc, sink.current_state(spark), dml)
 
 
+def _jobs(spark):
+    """id -> (description, submission time in s) of every job in the
+    status store (UI off too)."""
+    seq = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = {}
+    for i in range(seq.size()):
+        j = seq.apply(i)
+        desc = j.description().get() if j.description().isDefined() else ""
+        out[j.jobId()] = (desc, j.submissionTime().get().getTime() / 1e3)
+    return out
+
+
 def test_replicator_call_lists_paths_in_driver(spark, tmp_path, target_bucket_bytes):
     """A sink call that reads more bucket directories than Spark's default
     parallel-listing threshold (32) lists them in the driver: no
@@ -778,22 +893,13 @@ def test_replicator_call_lists_paths_in_driver(spark, tmp_path, target_bucket_by
         batch(dml).coalesce(1).write.mode("append").parquet(src)
         replicate_available_now(spark, src, batch.schema, desc, work)
 
-    def jobs():
-        # (id, description) of every job in the status store (UI off too)
-        seq = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-        out = {}
-        for i in range(seq.size()):
-            j = seq.apply(i)
-            out[j.jobId()] = j.description().get() if j.description().isDefined() else ""
-        return out
-
     # the first call writes one bucket, the second re-buckets the state
     target_bucket_bytes(2560)
     wave([_wide_insert("k%d" % i, 0, rng) for i in range(2500)])
     wave([_wide_insert("k%d" % i, 0, rng) for i in range(0, 2500, 50)])
-    before = jobs()
+    before = _jobs(spark)
     wave([_wide_insert("k%d" % i, 0, rng) for i in range(0, 2500, 3)])
-    new_jobs = {i: d for i, d in jobs().items() if i not in before}
+    new_jobs = {i: d for i, (d, _) in _jobs(spark).items() if i not in before}
 
     sink = ReplicatorSink(desc, os.path.join(work, "state"))
     last = sink._latest_manifest()
@@ -803,6 +909,98 @@ def test_replicator_call_lists_paths_in_driver(spark, tmp_path, target_bucket_by
     assert new_jobs
     listing = [d for d in new_jobs.values() if d.startswith("Listing leaf files")]
     assert not listing, listing
+
+
+def test_replicator_call_at_one_bucket_is_one_spark_job(spark, tmp_path):
+    """At one bucket every sink call of a stream is one Spark job, so the
+    micro-batch plan (the stateful dedup included) runs once per trigger:
+    no changed-bucket pre-pass and no footer-merge job for the state read.
+    Counted from the status store: the jobs submitted while each call ran."""
+    from scylla_cdc_java_spark.streaming.replicator import _Replication
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(43)
+    dml = _rand_dml(desc, rng, n=40)
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 3, rng)
+    run = _Replication(spark, desc, src, schema, str(tmp_path / "work"), "delta", 0, 1)
+    calls = []
+
+    def counted(batch_df, batch_id):
+        start = time.time()
+        run.sink(batch_df, batch_id)
+        calls.append((start, time.time()))
+
+    _stream(run, counted, "one-job")
+    _assert_state_matches(desc, run.state(), dml)
+    assert run.sink.n_buckets == 1
+    assert run.sink._latest_manifest()["version"] == 2  # later calls read the state
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    submitted = [t for _, t in _jobs(spark).values()]
+    per_call = [sum(start <= t <= end for t in submitted) for start, end in calls]
+    assert per_call == [1] * len(calls), per_call
+
+
+def test_replicator_stable_buckets_rewrite_only_changed(spark, tmp_path, target_bucket_bytes):
+    """A trigger into a many-bucket state whose bucket count holds reads
+    and rewrites only the buckets its keys hash into (the changed-bucket
+    pre-pass); every other bucket keeps its file, and the manifest's
+    metrics count the rewritten buckets."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink, _bucket_expr
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(47)
+    batch = _Batches(spark, desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    target_bucket_bytes(4096)
+    sink(batch([_wide_insert("k%d" % i, 0, rng) for i in range(600)]), 0)
+    sink(batch([_wide_insert("k%d" % i, 1, rng) for i in range(0, 600, 60)]), 1)
+    before = sink._latest_manifest()
+    n = before["n_buckets"]
+    assert n >= 4  # the second trigger re-bucketed the state
+
+    keys = ["k3", "k300"]
+    sink(batch([_wide_insert(k, 2, rng) for k in keys] + [("row_delete", ("k5",), (0,))]), 2)
+    after = sink._latest_manifest()
+    assert after["n_buckets"] == n
+    hashed = spark.createDataFrame([(k,) for k in keys + ["k5"]], "pk string")
+    changed = {str(r[0]) for r in hashed.select(_bucket_expr(["pk"], n)).collect()}
+    assert len(changed) < n
+    assert {b for b, rel in after["buckets"].items() if rel.startswith("v2/")} == changed
+    assert all(after["buckets"][b] == rel for b, rel in before["buckets"].items() if b not in changed)
+    assert after["metrics"]["buckets_touched"] == after["metrics"]["buckets_written"] == len(changed)
+    _assert_state_matches(desc, sink.current_state(spark), batch.dml)
+
+
+def test_replicator_reports_lag_against_confidence_window(spark, tmp_path):
+    """The manifest records the newest committed ``cdc$time``; the consumer
+    lag is now minus that time and is compared with the confidence
+    window."""
+    from pyspark.sql import functions as F
+
+    from scylla_cdc_java_spark.operators.normalize import TIME_MICROS, normalize_changes
+    from scylla_cdc_java_spark.streaming.replicator import _Replication
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(53)
+    dml = _rand_dml(desc, rng, n=30)
+    rows = CdcLogGenerator(desc).encode(dml)
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    _write_chunks(spark, schema, rows, src, 2, rng)
+    run = _Replication(spark, desc, src, schema, str(tmp_path / "work"), "delta", 30_000, 1)
+    assert run.lag() is None  # nothing committed yet
+    run.catch_up()
+
+    newest = normalize_changes(spark.createDataFrame(rows, schema)).agg(F.max(TIME_MICROS)).first()[0]
+    assert run.sink._latest_manifest()["max_time_micros"] == newest
+    for lag_ms, within in ((1_500, True), (45_000, False)):
+        lag = run.lag(now_ms=newest / 1e3 + lag_ms)
+        assert lag == {"lag_ms": pytest.approx(lag_ms), "confidence_ms": 30_000,
+                       "within_confidence": within}
+    assert run.lag()["lag_ms"] == pytest.approx(time.time() * 1e3 - newest / 1e3, abs=60_000)
 
 
 def test_replicator_grows_bucket_count_with_state(spark, tmp_path, target_bucket_bytes):
