@@ -34,6 +34,21 @@ hot CQL partitions; AQE skew handling applies. Everything before the
 kernel (normalize, op-split) is native/codegen; P2 dedup rides inside
 both paths (max/max_by aggregates on the native one, adjacent-ChangeId
 skipping in the fold).
+
+Plan construction: ``apply_cdc_log`` runs in the driver on every
+replicator trigger, so it builds its plan from a small, fixed set of
+Dataset calls over SQL strings — the op filter, one projection, one seed
+projection, and the kernel's grouping (for the native path one
+``groupBy().agg()`` of a single struct of aggregates, one ``where``, one
+``selectExpr``). Each Column-API call is a py4j round trip, and with
+``spark.python.sql.dataFrameDebugging.enabled`` (on by default; it gives
+DataFrame errors their call site) each Column method also sets and
+clears its call site in the JVM: the same plan built column by column
+took ~1,100 round trips and 0.2–0.4 s per trigger on the 3-column
+``user_state`` table and ~3,200 on an 11-column one; it now takes ~80.
+Identifiers are backtick-quoted (``sql_ident``) and internal column names
+carry an underscore prefix no key or state column starts with
+(``internal_prefix``), so any CQL column name works.
 """
 
 from __future__ import annotations
@@ -43,11 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model.ops import OperationType
-from ..model.schema import (
-    DELETED_ELEMENTS_PREFIX,
-    DELETED_PREFIX,
-    CdcTableDescriptor,
-)
+from ..model.schema import DELETED_PREFIX, CdcTableDescriptor
 from .normalize import TIME_MICROS, normalize_changes
 
 _SEQ = "cdc$batch_seq_no"
@@ -117,11 +128,29 @@ def _plain_desc(desc: CdcTableDescriptor) -> dict:
     }
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted with inner
+    backticks doubled, so a dot, a space, ``$`` or a keyword stays part of
+    one plain column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def internal_prefix(names) -> str:
+    """A run of underscores that no name in ``names`` starts with (case
+    folded, as Spark resolves names): an internal column named
+    ``<prefix><anything>`` cannot shadow any of them."""
+    folded = [n.lower() for n in names]
+    p = "__"
+    while any(n.startswith(p) for n in folded):
+        p += "_"
+    return p
+
+
 def _apply_scalar_native(
-    changes: DataFrame, d: dict, with_version: bool, out_cols: list[str]
+    changes: DataFrame, cols: list[str], d: dict, out_cols: list[str]
 ) -> DataFrame:
     """Fully-native cell-granularity LWW apply for clustering-key-less,
-    scalar-only tables.
+    scalar-only tables; ``cols`` are the columns of ``changes``.
 
     The reference's prepared-statement writes are per-cell last-writer-wins
     with tombstone shadowing (PreparedUpdateOperationHandler.java:19-66,
@@ -141,44 +170,43 @@ def _apply_scalar_native(
     Because every aggregate is max/max_by, at-least-once redelivery (P2)
     deduplicates for free, partial aggregation runs map-side, and the one
     shuffle on the key is the whole plan — no Python, no per-row fold.
+    The plan is three calls over SQL strings — ``groupBy().agg()`` of
+    one struct of every aggregate, ``where``, ``selectExpr`` — so its
+    driver cost does not grow with the column count (see
+    ``apply_cdc_log``).
     """
     pk, regular = d["pk"], d["regular"]
-    opI = F.col(_OP).cast("int")
-    ord_struct = F.struct(
-        F.col(TIME_MICROS).alias("t"), F.col(_SEQ).cast("int").alias("s")
+    op = f"CAST({sql_ident(_OP)} AS INT)"
+    order = f"named_struct('t', {sql_ident(TIME_MICROS)}, 's', CAST({sql_ident(_SEQ)} AS INT))"
+    is_write = f"{op} IN (1, 2, 9)"
+    aggs = {
+        "del": f"max(CASE WHEN {op} IN (3, 4) THEN {order} END)",
+        "marker": f"max(CASE WHEN {op} IN (2, 9) THEN {order} END)",
+        "ver": f"max(CASE WHEN {is_write} THEN {sql_ident(TIME_MICROS)} END)",
+    }
+    for i, c in enumerate(regular):
+        written = [f"{sql_ident(c)} IS NOT NULL", f"{op} = 9"]
+        if DELETED_PREFIX + c in cols:
+            written.append(f"coalesce({sql_ident(DELETED_PREFIX + c)}, false)")
+        when = f"CASE WHEN {is_write} AND ({' OR '.join(written)}) THEN {order} END"
+        aggs[f"w{i}"] = f"max({when})"
+        aggs[f"v{i}"] = f"max_by({sql_ident(c)}, {when})"
+    # every aggregate in one struct column, named so it shadows no key
+    a = internal_prefix(pk) + "agg"
+    fields = ", ".join(f"'{k}', {v}" for k, v in aggs.items())
+    grouped = changes.groupBy(*[sql_ident(c) for c in pk]).agg(
+        F.expr(f"named_struct({fields}) AS {a}")
     )
-    neg = F.struct(
-        F.lit(-(2**63)).cast("long").alias("t"), F.lit(0).cast("int").alias("s")
+
+    tomb = f"coalesce({a}.del, named_struct('t', CAST({-(2**63)} AS BIGINT), 's', 0))"
+    live = [f"{a}.w{i} > {tomb}" for i in range(len(regular))]
+    alive = [f"coalesce({a}.marker > {tomb}, false)"]
+    alive += [f"({w} AND {a}.v{i} IS NOT NULL)" for i, w in enumerate(live)]
+    value = {c: f"CASE WHEN {live[i]} THEN {a}.v{i} END" for i, c in enumerate(regular)}
+    value[TIME_MICROS] = f"{a}.ver"
+    return grouped.where(" OR ".join(alive)).selectExpr(
+        *[sql_ident(c) if c in pk else f"{value[c]} AS {sql_ident(c)}" for c in out_cols]
     )
-    is_write = opI.isin(1, 2, 9)
-    is_marker = opI.isin(2, 9)
-
-    aggs = [
-        F.max(F.when(opI.isin(3, 4), ord_struct)).alias("__del"),
-        F.max(F.when(is_marker, ord_struct)).alias("__marker"),
-        F.max(F.when(is_write, F.col(TIME_MICROS))).alias("__ver"),
-    ]
-    for c in regular:
-        darr = F.col(f"cdc$deleted_{c}") if f"cdc$deleted_{c}" in changes.columns else F.lit(None)
-        written = is_write & (
-            F.col(c).isNotNull() | F.coalesce(darr, F.lit(False)) | (opI == 9)
-        )
-        aggs.append(F.max(F.when(written, ord_struct)).alias(f"__w_{c}"))
-        aggs.append(F.max_by(F.col(c), F.when(written, ord_struct)).alias(f"__v_{c}"))
-    grouped = changes.groupBy(*pk).agg(*aggs)
-
-    del_eff = F.coalesce(F.col("__del"), neg)
-    vals = {c: F.when(F.col(f"__w_{c}") > del_eff, F.col(f"__v_{c}")) for c in regular}
-    marker_alive = F.coalesce(F.col("__marker") > del_eff, F.lit(False))
-    any_cell = F.lit(False)
-    for c in regular:
-        any_cell = any_cell | vals[c].isNotNull()
-    sel = [*pk]
-    if with_version:
-        sel.append(F.col("__ver").alias(TIME_MICROS))
-    sel += [vals[c].alias(c) for c in regular]
-    out = grouped.where(marker_alive | any_cell).select(*sel)
-    return out.select(*out_cols)
 
 
 def apply_cdc_log(
@@ -221,6 +249,16 @@ def apply_cdc_log(
     without TTL evaluation, takes the native cell-LWW aggregation
     (``_apply_scalar_native``); everything else takes the pandas fold.
     Both dedup redelivered ChangeIds (P2).
+
+    The plan costs the driver a fixed handful of Dataset calls, whatever
+    the column count: schema reads of ``changes`` (normalizing, then
+    listing its columns) and of ``initial_state``, then one string-built
+    step each for the op filter, the projection, the seed, and the
+    kernel — SQL aggregate and ``CASE`` expressions on the native path, a
+    positional rename and a grouping on ``pmod(xxhash64(pk),
+    _KERNEL_BUCKETS)`` before ``applyInPandas`` on the fold. The
+    replicator builds it on every trigger, where each Column-API call
+    would be a py4j round trip (see the module docstring).
     """
     if mode not in ("delta", "postimage"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -231,62 +269,51 @@ def apply_cdc_log(
     # the change stream shuffles exactly once — on the partition key —
     # instead of paying a second full shuffle for a standalone
     # dropDuplicates.
-
-    if mode == "delta":
-        changes = changes.where(~F.col(_OP).cast("int").isin([0, 9]))
-    else:
-        changes = changes.where(~F.col(_OP).cast("int").isin([0, 1, 2]))
+    names = changes.columns
+    skipped = "0, 9" if mode == "delta" else "0, 1, 2"
+    changes = changes.where(f"CAST({sql_ident(_OP)} AS INT) NOT IN ({skipped})")
 
     # Project to the columns the fold needs; column pruning reaches the scan.
-    deleted_cols = [
-        c
-        for c in changes.columns
-        if c.startswith(DELETED_PREFIX) and not c.startswith(DELETED_ELEMENTS_PREFIX)
-    ]
-    delem_cols = [c for c in changes.columns if c.startswith(DELETED_ELEMENTS_PREFIX)]
     base_cols = [f.name for f in desc.base_schema.fields]
-    keep = [
-        "cdc$stream_id", TIME_MICROS, _SEQ, _OP, "cdc$ttl",
-        *base_cols, *deleted_cols, *delem_cols,
-    ]
-    changes = changes.select(*[c for c in keep if c in changes.columns])
+    have = set(names)
+    cols = [
+        c
+        for c in ["cdc$stream_id", TIME_MICROS, _SEQ, _OP, "cdc$ttl", *base_cols]
+        if c in have
+    ] + [c for c in names if c.startswith(DELETED_PREFIX)]
+    changes = changes.selectExpr(*[sql_ident(c) for c in cols])
 
     if initial_state is not None:
         # Seed rows enter the fold as POST_IMAGE (op 9) full-row images: the
         # kernel applies them as whole-row overwrites, so any *replayed*
         # change older than the row's version (which the seed already
         # reflects) is clobbered by the seed rather than merged — the delta
-        # semantics that would otherwise resurrect tombstoned cells.
-        seed = initial_state
-        for c in desc.list_columns:
-            if c in seed.columns and isinstance(seed.schema[c].dataType, T.ArrayType):
+        # semantics that would otherwise resurrect tombstoned cells. The
+        # union fills the change-only columns with typed NULLs.
+        seed_schema = initial_state.schema
+        seed = {
+            # max-int seq: the seed wins (time, seq) ties against a replayed
+            # copy of the exact change it already reflects
+            _SEQ: f"{2**31 - 1} AS {sql_ident(_SEQ)}",
+            _OP: f"CAST({int(OperationType.POST_IMAGE)} AS TINYINT) AS {sql_ident(_OP)}",
+            TIME_MICROS: f"CAST({-(2**62)} AS BIGINT) AS {sql_ident(TIME_MICROS)}",
+        }
+        for c in seed_schema.names:
+            if c not in have or c in (_SEQ, _OP):
+                continue
+            seed[c] = sql_ident(c)
+            if c in desc.list_columns and isinstance(seed_schema[c].dataType, T.ArrayType):
                 # materialized list (array) → log encoding map<timeuuid,elem>;
                 # synthetic v1 uuids with time=i keep element order and sort
                 # before any real append timeuuid (~1.4e17 in uuid time units).
-                seed = seed.withColumn(
-                    c,
-                    F.map_from_arrays(
-                        F.transform(
-                            F.col(c),
-                            lambda x, i: F.format_string(
-                                "%08x-0000-1000-8000-000000000000", i
-                            ),
-                        ),
-                        F.col(c),
-                    ),
+                seed[c] = (
+                    f"map_from_arrays(transform({sql_ident(c)}, (x, i) -> format_string("
+                    f"'%08x-0000-1000-8000-000000000000', i)), {sql_ident(c)}) AS {sql_ident(c)}"
                 )
-        for c in changes.columns:
-            if c not in seed.columns and c not in (_SEQ, _OP):
-                if c == TIME_MICROS:
-                    seed = seed.withColumn(c, F.lit(-(2**62)).cast("long"))
-                else:
-                    seed = seed.withColumn(c, F.lit(None).cast(changes.schema[c].dataType))
-        # max-int seq: the seed wins (time, seq) ties against a replayed
-        # copy of the exact change it already reflects
-        seed = seed.withColumn(_SEQ, F.lit(2**31 - 1)).withColumn(
-            _OP, F.lit(int(OperationType.POST_IMAGE)).cast("byte")
+        changes = changes.unionByName(
+            initial_state.selectExpr(*[seed[c] for c in cols if c in seed]),
+            allowMissingColumns=True,
         )
-        changes = changes.unionByName(seed.select(*changes.columns))
 
     out_schema = desc.base_schema
     if with_version_col:
@@ -297,29 +324,31 @@ def apply_cdc_log(
     out_names = [f.name for f in out_schema.fields]
     scalar_only = all(k == "scalar" for k in d["kinds"].values())
     if not d["ck"] and scalar_only and as_of_micros is None:
-        return _apply_scalar_native(changes, d, with_version_col, out_names)
+        return _apply_scalar_native(changes, cols, d, out_names)
 
     kernel = _make_fold_kernel(
-        d, out_names, with_version=with_version_col, as_of=as_of_micros
+        d, cols, out_names, with_version=with_version_col, as_of=as_of_micros
     )
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in d["pk"]]), F.lit(_KERNEL_BUCKETS)
-    ).alias("__kbucket")
-    return (
-        changes.withColumn("__kbucket", bucket)
-        .groupBy("__kbucket")
-        .applyInPandas(kernel, schema=out_schema)
-    )
+    # ``applyInPandas`` looks each input column up through the DataFrame
+    # API, which splits a name at dots and backticks: the kernel's input
+    # columns are named by position and it restores the real names. The
+    # grouping expression adds no named column, so it shadows nothing.
+    changes = changes.selectExpr(*[f"{sql_ident(c)} AS _{i}" for i, c in enumerate(cols)])
+    pk = ", ".join(f"_{cols.index(c)}" for c in d["pk"])
+    bucket = F.expr(f"pmod(xxhash64({pk}), {_KERNEL_BUCKETS})")
+    return changes.groupBy(bucket).applyInPandas(kernel, schema=out_schema)
 
 
 def _make_fold_kernel(
     d: dict,
+    in_cols: list[str],
     out_cols: list[str],
     with_version: bool = False,
     as_of: int | None = None,
 ):
-    """Build the per-partition ordered fold. Nested def so cloudpickle
-    ships it by value; references only stdlib + pandas."""
+    """Build the per-partition ordered fold over input columns named
+    ``in_cols`` (in order; they arrive named by position). Nested def so
+    cloudpickle ships it by value; references only stdlib + pandas."""
     import pandas as pd  # noqa: F401  (captured for the closure)
 
     GREGORIAN = 0x01B21DD213814000
@@ -337,6 +366,7 @@ def _make_fold_kernel(
         import numpy as np
         import pandas as pd
 
+        pdf.columns = in_cols
         # numpy lexsort + columnar access: ~3-5x faster than
         # sort_values + to_dict("records") on wide frames
         order = np.lexsort(

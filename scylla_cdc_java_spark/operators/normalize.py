@@ -33,7 +33,7 @@ def normalize_changes(df: DataFrame, with_vnode: bool = False) -> DataFrame:
             # reinterprets the wall clock in the session tz, which every
             # entry point pins to UTC — identical semantics either way.
             df = df.withColumn(
-                TIME_MICROS, F.unix_micros(F.col(TIME_TS).cast("timestamp"))
+                TIME_MICROS, F.expr(f"unix_micros(CAST(`{TIME_TS}` AS TIMESTAMP))")
             )
         else:
             df = df.withColumn(TIME_MICROS, timeuuid_micros_col("cdc$time"))

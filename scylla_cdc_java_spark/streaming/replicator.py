@@ -41,12 +41,24 @@ The write job then evaluates the micro-batch plan — the stateful
 ``dropDuplicatesWithinWatermark`` included — exactly once, and an
 ``Observation`` on the batch counts its rows and takes its newest
 ``cdc$time`` inside that job. Only a stable many-bucket state (``n > 1``,
-unchanged) runs a pre-pass: ``distinct(__bucket).collect()`` finds the
+unchanged) runs a pre-pass: ``distinct(bucket).collect()`` finds the
 changed buckets, so the read set depends on the batch, and the batch is
 evaluated twice. A broadcast semi-join of the state on the batch's bucket
 set was tried in place of the collect and still evaluated the batch
 twice; merge-on-read deltas (no state read at all) are the way to one
 pass at any bucket count.
+
+**Driver work per trigger.** Around that job the driver reads and commits
+the manifest, lists the new version directory, and builds the plans: the
+batch observation, the state read, the apply and the bucket write. Each
+is built from SQL strings in a fixed number of Dataset calls (the apply's
+are described in ``operators/apply.py``): a one-bucket call makes ~115
+py4j round trips on the 3-column ``user_state`` table and ~150 on an
+11-column one, where a Column-built apply plan made it ~1,250 and ~3,300
+and cost 0.2–0.4 s of driver time per trigger (PySpark 4.1.2). The
+partition column of a bucket write is ``__bucket`` unless a state column
+starts with ``__`` (then it gets more leading underscores), so it never
+overwrites a base column.
 
 Three constraints shape the body. Spark commits a stateful operator's
 store only when the batch is evaluated, and Spark 4.1 fails the query
@@ -123,11 +135,10 @@ from pyspark.sql import types as T
 
 from ..model.schema import CdcTableDescriptor
 from ..model.statestore import commit_json
-from ..operators.apply import apply_cdc_log
+from ..operators.apply import apply_cdc_log, internal_prefix, sql_ident
 from ..operators.normalize import TIME_MICROS, normalize_changes
 from .consumer import CDCStreamConsumer
 
-_BUCKET = "__bucket"
 # a committed manifest; a torn commit leaves ``manifest-N.json.tmp-*``
 _MANIFEST = re.compile(r"manifest-(\d+)\.json")
 # T, the target bytes per bucket (see the module docstring)
@@ -137,7 +148,8 @@ _EMPTY = {"version": -1, "buckets": {}, "n_buckets": 1, "bucket_bytes": {}}
 
 
 def _bucket_expr(pk_cols: list[str], n: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(n)).cast("int")
+    keys = ", ".join(sql_ident(c) for c in pk_cols)
+    return F.expr(f"CAST(pmod(xxhash64({keys}), {n}) AS INT)")
 
 
 def _observed(seen: Observation) -> tuple[int, int | None]:
@@ -165,6 +177,10 @@ class ReplicatorSink:
         self.desc = desc
         self.state_dir = state_dir
         self.mode = mode
+        # the partition column of a bucket write: ``__bucket`` unless the
+        # state has a column that name would shadow
+        names = [*desc.base_schema.names, TIME_MICROS]
+        self._bucket_col = internal_prefix(names) + "bucket"
         os.makedirs(state_dir, exist_ok=True)
 
     @property
@@ -222,20 +238,20 @@ class ReplicatorSink:
         parquet file per bucket; returns the manifest entries (bucket ->
         directory, bucket -> data bytes) of the buckets written (a bucket
         with no rows gets no directory)."""
-        pk = list(self.desc.partition_keys)
+        col = self._bucket_col
         rel = f"v{version}"
         out_dir = os.path.join(self.state_dir, rel)
         (
-            state.withColumn(_BUCKET, _bucket_expr(pk, n))
-            .repartition(_BUCKET)
-            .write.partitionBy(_BUCKET)
+            state.withColumn(col, _bucket_expr(self.desc.partition_keys, n))
+            .repartition(col)
+            .write.partitionBy(col)
             .mode("overwrite")
             .parquet(out_dir)
         )
         buckets = {
             d.split("=", 1)[1]: f"{rel}/{d}"
             for d in os.listdir(out_dir)
-            if d.startswith(f"{_BUCKET}=")
+            if d.startswith(f"{col}=")
         }
         sizes = {b: _data_bytes(os.path.join(self.state_dir, d)) for b, d in buckets.items()}
         return buckets, sizes
@@ -343,13 +359,13 @@ class ReplicatorSink:
         n = self._bucket_count(manifest)
         seen = Observation()
         batch_df = normalize_changes(batch_df).observe(
-            seen, F.count(F.lit(1)).alias("rows"), F.max(TIME_MICROS).alias("max_time")
+            seen, F.expr("count(1)"), F.expr(f"max({sql_ident(TIME_MICROS)})")
         )
         old = manifest["buckets"]
         if n > 1 and n == manifest.get("n_buckets"):
             # only here does the read set depend on the batch: one pass over
             # the pk-only projection yields the changed buckets (<= n ints)
-            bucket = _bucket_expr(list(self.desc.partition_keys), n)
+            bucket = _bucket_expr(self.desc.partition_keys, n)
             touched = {str(r[0]) for r in batch_df.select(bucket).distinct().collect()}
             if not touched:
                 return

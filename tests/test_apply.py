@@ -587,3 +587,135 @@ def test_apply_empty_input(spark):
     desc = FIXTURE_TABLES["tbl_simple"]
     df = spark.createDataFrame([], build_cdc_log_schema(desc))
     assert apply_cdc_log(df, desc).collect() == []
+
+
+def _named_table(name, fields, ck=(), lists=()):
+    """A table keyed on its first column (plus ``ck``) with the given
+    ``(name, type)`` columns; ``lists`` are non-frozen list columns."""
+    from pyspark.sql import types as T
+
+    from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
+
+    return CdcTableDescriptor(
+        name=name,
+        base_schema=T.StructType([T.StructField(n, t) for n, t in fields]),
+        partition_keys=[fields[0][0]],
+        clustering_keys=list(ck),
+        non_frozen_collections=list(lists),
+        list_columns=list(lists),
+    )
+
+
+def _named_dml(desc, rng, n=50):
+    """Random inserts, updates, row and partition deletes over a few keys;
+    scalar cells get values or tombstones, list cells overwrites or
+    appends."""
+    from pyspark.sql import types as T
+
+    dml = []
+    for _ in range(n):
+        pk = ("p%d" % rng.randrange(4),)
+        ck = tuple(rng.randrange(3) for _ in desc.clustering_keys)
+        roll = rng.random()
+        if roll < 0.75:
+            cells = {}
+            for c in desc.regular_columns:
+                if rng.random() < 0.25:
+                    continue  # unset
+                if c in desc.list_columns:
+                    vals = [rng.randrange(9) for _ in range(rng.randrange(1, 3))]
+                    cells[c] = rng.choice([{"overwrite": vals}, {"add": vals}])
+                elif isinstance(desc.base_field(c).dataType, T.StringType):
+                    cells[c] = rng.choice([None, "s%d" % rng.randrange(20)])
+                else:
+                    cells[c] = rng.choice([None, rng.randrange(1000)])
+            dml.append((rng.choice(["insert", "update"]), pk, ck, cells))
+        elif roll < 0.92:
+            dml.append(("row_delete", pk, ck))
+        else:
+            dml.append(("partition_delete", pk))
+    return dml
+
+
+def _assert_state(desc, rows, dml):
+    names = desc.base_schema.names
+    got = sorted(_canon(tuple(r[n] for n in names)) for r in rows)
+    want = sorted(_canon(tuple(r[n] for n in names)) for r in replay_dml(desc, dml))
+    assert got == want, f"{desc.name}: engine={got[:5]} oracle={want[:5]}"
+
+
+def _check_both_ways(spark, desc, dml, fold, state_dir):
+    """Apply ``dml`` to ``desc`` in one pass, in two passes (the first
+    pass's versioned state seeds the second, which redelivers some of the
+    first), and in two ``ReplicatorSink`` calls; each must equal
+    ``replay_dml``. ``fold`` says which apply path the table takes."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    schema = build_cdc_log_schema(desc)
+    gen = CdcLogGenerator(desc)
+    half = len(dml) // 2
+    first = list(gen.encode(dml[:half]))
+    rows = gen.encode(dml[half:])
+    rng = random.Random(len(dml))
+    second = rows[len(first):] + [r for r in first if rng.random() < 0.3]
+    df1 = spark.createDataFrame(first, schema)
+    df2 = spark.createDataFrame(second, schema)
+
+    whole = apply_cdc_log(spark.createDataFrame(rows, schema), desc)
+    plan = whole._jdf.queryExecution().toString()
+    assert ("FlatMapGroupsInPandas" in plan) == fold
+    _assert_state(desc, whole.collect(), dml)
+
+    seed = apply_cdc_log(df1, desc, with_version_col=True)
+    _assert_state(desc, apply_cdc_log(df2, desc, initial_state=seed).collect(), dml)
+
+    sink = ReplicatorSink(desc, state_dir)
+    sink(df1, 0)
+    sink(df2, 1)
+    _assert_state(desc, sink.current_state(spark).collect(), dml)
+
+
+@pytest.mark.parametrize("fold", [False, True], ids=["native", "fold"])
+def test_apply_internal_names_cannot_shadow_base_columns(spark, tmp_path, fold):
+    """Base columns named like the names the apply and the sink use inside
+    their plans (the fold's bucket, the native kernel's aggregates, the
+    sink's partition column) keep their values on both apply paths and
+    through the replicator."""
+    from pyspark.sql import types as T
+
+    I, S = T.IntegerType(), T.StringType()
+    if fold:
+        desc = _named_table(
+            "kbucket", [("pk", S), ("ck", I), ("__kbucket", I), ("__bucket", I)], ck=["ck"]
+        )
+        dml = [
+            ("insert", ("a",), (1,), {"__kbucket": 7, "__bucket": 7}),
+            ("insert", ("b",), (1,), {"__kbucket": 9, "__bucket": 9}),
+        ]
+    else:
+        desc = _named_table("del", [("__del", S), ("__ver", I), ("__bucket", I), ("__w0", S)])
+        dml = [
+            ("insert", ("a",), (), {"__ver": 7, "__bucket": 7, "__w0": "x"}),
+            ("insert", ("b",), (), {"__ver": 9, "__bucket": 9, "__w0": "y"}),
+        ]
+    dml += _named_dml(desc, random.Random(5))
+    _check_both_ways(spark, desc, dml, fold, str(tmp_path / "state"))
+
+
+@pytest.mark.parametrize("fold", [False, True], ids=["native", "fold"])
+def test_apply_hostile_identifiers(spark, tmp_path, fold):
+    """Column names holding a backtick, a dot, a space and ``$``, and SQL
+    keywords, go through both apply paths (the fold's seed includes a list
+    column), a seeded second pass and the replicator unchanged."""
+    from pyspark.sql import types as T
+
+    I, S = T.IntegerType(), T.StringType()
+    fields = [("p k", S), ("a`b", I), ("c.d", S), ("e$f", T.LongType()), ("select", S)]
+    if fold:
+        fields[1:1] = [("order", I)]
+        fields.append(("l.st", T.ArrayType(I)))
+        desc = _named_table("hostile", fields, ck=["order"], lists=["l.st"])
+    else:
+        desc = _named_table("hostile", fields)
+    _check_both_ways(spark, desc, _named_dml(desc, random.Random(11), n=60), fold,
+                     str(tmp_path / "state"))

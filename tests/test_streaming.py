@@ -943,6 +943,85 @@ def test_replicator_call_at_one_bucket_is_one_spark_job(spark, tmp_path):
     assert per_call == [1] * len(calls), per_call
 
 
+def _ten_scalar_table():
+    from pyspark.sql import types as T
+
+    from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
+
+    cols = [(f"c{i}", T.IntegerType() if i % 2 else T.StringType()) for i in range(10)]
+    return CdcTableDescriptor(
+        name="ten_scalars",
+        base_schema=T.StructType(
+            [T.StructField(n, t) for n, t in [("pk", T.StringType()), *cols]]
+        ),
+        partition_keys=["pk"],
+    )
+
+
+# py4j round trips one sink call may make. With PySpark 4.1.2 the call
+# below makes 115 (``user_state``) and 147 (10 scalar columns); building
+# the apply plan through the Column API made it 1,250 and 3,314.
+_SINK_CALL_ROUND_TRIPS = 300
+
+
+@pytest.mark.parametrize("table", ["user_state", "ten_scalars"])
+def test_replicator_call_py4j_round_trip_budget(spark, tmp_path, monkeypatch, table):
+    """A one-bucket sink call into an existing state builds its plans from
+    a few Spark calls over SQL strings, so the driver's py4j round trips
+    stay within a fixed budget whatever the column count. Counted at the
+    py4j connection, with DataFrame debugging on (each Column-API call then
+    also sets and clears its call site in the JVM)."""
+    import threading
+
+    import py4j.clientserver
+
+    from scylla_cdc_java_spark.operators.normalize import normalize_changes
+    from scylla_cdc_java_spark.sources.events_cdc import USER_STATE_DESC
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", "true") == "true"
+    desc = USER_STATE_DESC if table == "user_state" else _ten_scalar_table()
+    rng = random.Random(61)
+
+    def wave(n):
+        out = []
+        for _ in range(n):
+            pk = rng.randrange(50) if table == "user_state" else "k%d" % rng.randrange(50)
+            if rng.random() < 0.1:
+                out.append(("row_delete", (pk,), ()))
+                continue
+            cells = {}
+            for c in desc.regular_columns:
+                kind = desc.base_field(c).dataType.typeName()
+                v = rng.randrange(99)
+                cells[c] = float(v) if kind == "double" else v if kind == "integer" else "s%d" % v
+            out.append((rng.choice(["insert", "update"]), (pk,), (), cells))
+        return out
+
+    batch = _Batches(spark, desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    sink(batch(wave(200)), 0)
+    # a stream's micro-batch arrives normalized (the consumer adds the time)
+    df = normalize_changes(batch(wave(200)))
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counted(self, command):
+        # this thread's calls; py4j's memory commands release Java objects
+        # that Python garbage-collected, whichever test made them
+        if threading.get_ident() == me and not command.startswith("m\n"):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+    sink(df, 1)
+    monkeypatch.undo()
+    assert sink._latest_manifest()["version"] == 1 and sink.n_buckets == 1
+    assert len(sent) <= _SINK_CALL_ROUND_TRIPS, (len(sent), sent[:20])
+    _assert_state_matches(desc, sink.current_state(spark), batch.dml)
+
+
 def test_replicator_stable_buckets_rewrite_only_changed(spark, tmp_path, target_bucket_bytes):
     """A trigger into a many-bucket state whose bucket count holds reads
     and rewrites only the buckets its keys hash into (the changed-bucket
