@@ -15,28 +15,31 @@ Everything is native expressions (no UDF). Hash function shared with the
 SQL oracles: ``h31(s) = int(md5(s)[:15 hex]) % (2^31 - 1)`` — identical in
 Spark (``conv``) and DuckDB (``'0x'||substr``).
 
-Cache-lifetime convention (r11): operators whose RETURNED frame reads a
-shared intermediate from several plan branches (``sh``/``fp``/``sig``)
-pin it with a plain ``.cache()`` and do NOT unpersist — the caller's
-action is what populates and consumes the pin, so there is no safe
-release point inside the operator. These pins are narrow projections
-(hashes + ids, not text), MEMORY_AND_DISK and LRU-evictable; a
-long-lived session composing many calls should
-``spark.catalog.clearCache()`` between logical jobs (bench.py does).
-Training-style operators whose internal consumers are all EAGER
-(pq_codebooks, kmeans_train) instead release their pin before returning;
-eager one-shot intermediates use ``localCheckpoint`` whose blocks free
-with the RDD. Measured r11: eagerly materializing the lazy-return pins
+Cache-lifetime convention: every cache goes through
+``pipeline/cache.py``. Operators whose RETURNED frame reads a shared
+intermediate from several plan branches (``sh``/``fp``/``sig``) cache
+it with :func:`~.cache.cache` and do not release it themselves: the
+caller's action is what populates and consumes it, so the caller's
+:func:`~.cache.cache_scope` (one per ``foreachBatch`` body, as in
+:func:`stream_incremental_dedup`) is the release point; called outside
+any scope, the cache lives until ``spark.catalog.clearCache()``. These
+caches are narrow projections (hashes + ids, not text), MEMORY_AND_DISK
+and LRU-evictable. Training-style operators whose internal consumers
+are all EAGER (pq_codebooks, kmeans_train) cache inside their own
+scope, which releases it before they return; eager one-shot
+intermediates use ``localCheckpoint``, whose blocks free with the RDD.
+Measured r11: eagerly materializing the lazy-return caches
 (count()/localCheckpoint) was 1.1-2x SLOWER at sf0.1 — see
 ngram_jaccard_pairs.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .pins import pin
+from .cache import cache, cache_scope
 from .text import shingles, tokens_col
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
@@ -66,7 +69,7 @@ def hashed_shingle_index(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> D
     :func:`ngram_jaccard_pairs` consumes. Callers that share it across a
     truth and detector chain (the containment quality gate) build it here
     too, so the two chains cannot silently drift onto different grains.
-    Un-cached: the caller owns the pin/lifetime."""
+    Un-cached: the caller owns its cache lifetime."""
     return shingles(df.select(id_col, "text"), n=n).select(
         id_col, F.xxhash64("shingle").alias("sh")
     )
@@ -118,7 +121,7 @@ def ngram_jaccard_pairs(
 
     ``hashed_shingles`` lets a caller that ALREADY built the
     ``(id_col, sh = xxhash64(shingle))`` inverted-index input share it
-    (the caller owns its pin/lifetime) instead of this function scanning
+    (the caller owns its cache lifetime) instead of this function scanning
     and exploding the documents again — the quality harnesses run this
     truth chain next to a detector chain over the *same grain*, and
     sharing saves one full documents scan + shingle explode per call
@@ -169,7 +172,7 @@ def ngram_jaccard_pairs(
     if hashed_shingles is not None:
         sh = hashed_shingles
     else:
-        sh = pin(hashed_shingle_index(df, n=n, id_col=id_col))
+        sh = cache(hashed_shingle_index(df, n=n, id_col=id_col))
     if max_df is not None:
         hot = (
             sh.groupBy("sh")
@@ -294,12 +297,12 @@ def minhash_lsh_pairs(
     of one id+key); it buys the removal of every post-collision shuffle,
     which is the side that explodes when buckets are hot.
     """
-    # the signature table feeds both sides of the banded self-join; pin it
-    # AND materialize it now — inside a single downstream action the two
+    # the signature table feeds both sides of the banded self-join; cache
+    # it AND materialize it now — inside a single downstream action the two
     # branches would race ahead of cache population and each recompute the
     # shingle scan + k-min aggregation. At scale this is the table you'd
     # checkpoint: |docs| rows x k values, tiny next to the corpus.
-    sig = pin(minhash_signatures(df, k=k, n=n, id_col=id_col))
+    sig = cache(minhash_signatures(df, k=k, n=n, id_col=id_col))
     sig.count()
     n_equal = _n_equal_minhashes(k)
     return (
@@ -600,7 +603,7 @@ def winnow_pairs(
     exact semantics for bounded corpora."""
     # plain cache on purpose — see ngram_jaccard_pairs for the r11
     # cache/count/checkpoint measurement
-    fp = pin(winnow_fingerprints(df, k=k, w=w, id_col=id_col))
+    fp = cache(winnow_fingerprints(df, k=k, w=w, id_col=id_col))
     fpj = fp
     if max_df is not None:
         hot = (
@@ -720,7 +723,7 @@ def incremental_dedup(
         both = corpus.select(F.lit(0).alias("__side"), id_col, "text").unionByName(
             incoming.select(F.lit(1).alias("__side"), id_col, "text")
         )
-        sig_all = pin(
+        sig_all = cache(
             minhash_signatures(
                 both.withColumn(
                     "__sid", F.struct(F.col("__side"), F.col(id_col)).alias("__sid")
@@ -739,7 +742,7 @@ def incremental_dedup(
         sig_all.count()
     else:
         sig_c = corpus_signatures
-        sig_i = pin(minhash_signatures(incoming, k=k, n=n, id_col=id_col))
+        sig_i = cache(minhash_signatures(incoming, k=k, n=n, id_col=id_col))
         sig_i.count()
     # carry the signature ON the band rows (_signature_band_side — the
     # minhash_lsh_pairs / simhash-hamming pattern, k ints per row): the
@@ -858,8 +861,10 @@ def stream_incremental_dedup(
         ).join(sigs, [id_col], "left")
 
     def admit(batch: DataFrame, batch_id: int) -> None:
-        b = batch.persist()
-        try:
+        # one scope per micro-batch: it also releases the signature
+        # caches that minhash_lsh_pairs and incremental_dedup take
+        with cache_scope():
+            b = cache(batch)
             if b.isEmpty():
                 return
             ch = F.xxhash64(F.col("text"))
@@ -883,12 +888,16 @@ def stream_incremental_dedup(
             )
             losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
             survivors = b_exact.join(losers, [id_col], "left_anti")
-            # (2) vs the persisted index (idempotent under batch replay)
+            # (2) vs the persisted index (idempotent under batch replay).
+            # Only a missing or empty index or store reads as absent
+            # (AnalysisException); any other read failure (a corrupt part
+            # file) fails the batch so the checkpoint retries it, instead
+            # of admitting every survivor or re-signing the whole index
             spark_l = b.sparkSession
             try:
                 index = spark_l.read.parquet(index_dir).select(id_col, "text")
                 have_index = index.limit(1).count() > 0
-            except Exception:
+            except AnalysisException:
                 have_index = False
             if have_index:
                 # (2b) reconcile the persisted signature store FIRST:
@@ -901,7 +910,7 @@ def stream_incremental_dedup(
                     stored = spark_l.read.parquet(sig_dir)
                     have_sigs = stored.limit(1).count() > 0
                     migrate = have_sigs and "__ch" not in stored.columns
-                except Exception:
+                except AnalysisException:
                     have_sigs, migrate = False, False
                 if have_sigs and not migrate:
                     unsigned = index.join(
@@ -939,15 +948,10 @@ def stream_incremental_dedup(
             # crash between the writes leaves unsigned index rows, which
             # the (2b) reconcile re-signs next batch; the reverse order
             # would leave signatures whose documents were never admitted)
-            admitted = admitted.persist()
-            try:
-                if not admitted.isEmpty():
-                    admitted.write.mode("append").parquet(index_dir)
-                    sign_with_hash(admitted).write.mode("append").parquet(sig_dir)
-            finally:
-                admitted.unpersist()
-        finally:
-            b.unpersist()
+            admitted = cache(admitted)
+            if not admitted.isEmpty():
+                admitted.write.mode("append").parquet(index_dir)
+                sign_with_hash(admitted).write.mode("append").parquet(sig_dir)
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
     writer = stream.writeStream.foreachBatch(admit).option(

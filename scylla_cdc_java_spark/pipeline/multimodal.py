@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
-from .pins import pin
+from .cache import cache
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -227,7 +227,7 @@ def phash_pairs(df: DataFrame, radius: int = 3) -> DataFrame:
     # reuses no aliased exchange, so an uncached upstream (the per-bit
     # FNV decode kernel) would run twice — the dedup_simhash_hamming
     # finding, same fix (one row per media id, LRU-evictable)
-    ph = pin(df.where(F.col("phash").isNotNull()))
+    ph = cache(df.where(F.col("phash").isNotNull()))
     bands = ph.select(
         "media_id",
         "phash",

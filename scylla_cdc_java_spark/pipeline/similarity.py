@@ -24,6 +24,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import cache, cache_scope
+
 
 def quantize_embedding(c: Column | str, scale: int = 1000) -> Column:
     """float32 embeddings quantize through an EXPLICIT double promotion:
@@ -607,58 +609,61 @@ def kmeans_train(
     ``(cid, cv, n_members)`` with ``cv`` the final integer centroid;
     feed it to ``ivf_topk(centroids=...)``.
     """
-    # pin the quantized projection for the Lloyd rounds (each round's
-    # localCheckpoint is an eager pass over q; without the pin every
-    # round re-runs the scan+quantize lineage) — released before the
-    # lazy members pass, which recomputes once: net n_iter-1 scans
-    # saved with no cache outliving the call (the pq_codebooks pattern)
-    q = emb.select(
-        F.col(id_col).alias("vid"), quantize_embedding(vec_col, scale).alias("qv")
-    ).persist()
-    if centroid_mod is not None:
-        cent = q.where(F.col("vid") % centroid_mod == 0)
-    else:
-        cent = select_seeds(q, n_centroids, "vid")
-    cent = cent.select(F.col("vid").alias("cid"), F.col("qv").alias("cv"))
-    assign = None
-    for _ in range(n_iter):
-        cents = cent.agg(
-            F.collect_list(F.struct(F.col("cid"), F.col("cv"))).alias("cents")
-        )
-        best = F.array_max(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    quantized_dot(F.col("qv"), c["cv"]).alias("dot"),
-                    (-c["cid"]).alias("neg"),
-                ),
+    # cache the quantized projection for the Lloyd rounds (each round's
+    # localCheckpoint is an eager pass over q; without the cache every
+    # round re-runs the scan+quantize lineage) — the scope releases it
+    # before the lazy members pass, which recomputes once: net n_iter-1
+    # scans saved with no cache outliving the call (the pq_codebooks pattern)
+    with cache_scope():
+        q = cache(
+            emb.select(
+                F.col(id_col).alias("vid"),
+                quantize_embedding(vec_col, scale).alias("qv"),
             )
         )
-        assign = (
-            q.join(F.broadcast(cents), how="cross")
-            .select("vid", "qv", (-best["neg"]).alias("cid"))
-        )
-        comps = (
-            assign.select("cid", F.posexplode("qv").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn("comp", F.expr("(s - pmod(s, n)) div n"))
-        )
-        # Materialize the k-row centroid table each round: Lloyd's is
-        # inherently iterative, and without this the assign subtree nests
-        # the whole previous iteration TWICE (update + membership), i.e.
-        # 2^n_iter corpus scans in one lazy plan.
-        cent = (
-            comps.groupBy("cid")
-            .agg(
+        if centroid_mod is not None:
+            cent = q.where(F.col("vid") % centroid_mod == 0)
+        else:
+            cent = select_seeds(q, n_centroids, "vid")
+        cent = cent.select(F.col("vid").alias("cid"), F.col("qv").alias("cv"))
+        assign = None
+        for _ in range(n_iter):
+            cents = cent.agg(
+                F.collect_list(F.struct(F.col("cid"), F.col("cv"))).alias("cents")
+            )
+            best = F.array_max(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "comp"))),
-                    lambda x: x["comp"],
-                ).alias("cv")
+                    F.col("cents"),
+                    lambda c: F.struct(
+                        quantized_dot(F.col("qv"), c["cv"]).alias("dot"),
+                        (-c["cid"]).alias("neg"),
+                    ),
+                )
             )
-            .localCheckpoint()
-        )
-    q.unpersist(blocking=False)
+            assign = (
+                q.join(F.broadcast(cents), how="cross")
+                .select("vid", "qv", (-best["neg"]).alias("cid"))
+            )
+            comps = (
+                assign.select("cid", F.posexplode("qv").alias("pos", "val"))
+                .groupBy("cid", "pos")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                .withColumn("comp", F.expr("(s - pmod(s, n)) div n"))
+            )
+            # Materialize the k-row centroid table each round: Lloyd's is
+            # inherently iterative, and without this the assign subtree nests
+            # the whole previous iteration TWICE (update + membership), i.e.
+            # 2^n_iter corpus scans in one lazy plan.
+            cent = (
+                comps.groupBy("cid")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "comp"))),
+                        lambda x: x["comp"],
+                    ).alias("cv")
+                )
+                .localCheckpoint()
+            )
     members = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
     return cent.join(members, "cid", "left").withColumn(
         "n_members", F.coalesce("n_members", F.lit(0))
@@ -1043,86 +1048,77 @@ def pq_codebooks(
     sub_w = F.floor(F.size(qexpr) / F.lit(m))
     # EVERY training action below re-reads this frame: the seed collect,
     # then one Arrow argmin assign pass per Lloyd round — 1 + n_iter + 1
-    # full recomputations of the upstream lineage without a pin. For the
+    # full recomputations of the upstream lineage without a cache. For the
     # raw-corpus path that lineage is a scan+quantize; for the residual
     # tier it is the coarse-assign mapInPandas over the whole corpus, so
     # the recompute storm dominated the tier's wall-clock (measured ~6x
-    # at sf0.1). Persist the narrow quantized projection for the
-    # TRAINING passes only and release it before returning — all
-    # consumers inside this function are eager (driver collects), so the
-    # pin is bounded to the call (the ranked_frames/ntile discipline).
-    # SPARK_GRAFT_PQ_PERSIST=0 opts out of the training pin for
-    # deployments where storage for a corpus-sized quantized projection
-    # is tighter than the recompute (r11 interleaved A/B at sf0.1:
-    # pin on was equal-or-better on the raw-corpus path and ~2x better
-    # on expensive lineages; default stays on)
-    import os as _os
-
-    _pin = _os.environ.get("SPARK_GRAFT_PQ_PERSIST", "1") != "0"
-    q = corpus.select(
-        F.col(id_col).alias("vid"),
-        qexpr.alias("qv"),
-        sub_w.alias("sw"),
-    )
-    if _pin:
-        q = q.persist()
-    # (vid, sub, sv): m rows per vector, sv the subvector
-    subs = q.select(
-        "vid",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-        F.col("qv"),
-        "sw",
-    ).select(
-        "vid",
-        "sub",
-        F.slice(
-            F.col("qv"), (F.col("sub") * F.col("sw") + 1).cast("int"), F.col("sw").cast("int")
-        ).alias("sv"),
-    )
-    # the codebook itself is k×m rows of driver-size metadata: carry it as
-    # the collected map between rounds (one job per round — the corpus-
-    # sized assign+update pipeline — instead of checkpoint+collect pairs)
-    if seed_mod is not None:
-        seed_ids = q.select("vid").where(F.col("vid") % seed_mod == 0)
-    else:
-        seed_ids = select_seeds(q.select("vid"), n_codes, "vid")
-    cb_map = _collect_codebooks(
-        subs.join(F.broadcast(seed_ids), "vid").select(
-            "sub", F.col("vid").alias("code"), F.col("sv").alias("cw")
+    # at sf0.1). Cache the narrow quantized projection for the TRAINING
+    # passes only: every consumer inside the scope is eager (driver
+    # collects) and the returned codebook is driver literals with no
+    # lineage into q, so the scope releases it before returning and no
+    # cache outlives the call (the ranked_frames/ntile discipline).
+    with cache_scope():
+        q = cache(
+            corpus.select(
+                F.col(id_col).alias("vid"),
+                qexpr.alias("qv"),
+                sub_w.alias("sw"),
+            )
         )
-    )
-    if not cb_map and seed_mod is not None:
-        # legacy modulus matched no id (sparse/non-contiguous id space):
-        # fall back to fixed-k instead of training an empty codebook
-        seed_ids = select_seeds(q.select("vid"), n_codes, "vid")
+        # (vid, sub, sv): m rows per vector, sv the subvector
+        subs = q.select(
+            "vid",
+            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
+            F.col("qv"),
+            "sw",
+        ).select(
+            "vid",
+            "sub",
+            F.slice(
+                F.col("qv"),
+                (F.col("sub") * F.col("sw") + 1).cast("int"),
+                F.col("sw").cast("int"),
+            ).alias("sv"),
+        )
+        # the codebook itself is k×m rows of driver-size metadata: carry it as
+        # the collected map between rounds (one job per round — the corpus-
+        # sized assign+update pipeline — instead of checkpoint+collect pairs)
+        if seed_mod is not None:
+            seed_ids = q.select("vid").where(F.col("vid") % seed_mod == 0)
+        else:
+            seed_ids = select_seeds(q.select("vid"), n_codes, "vid")
         cb_map = _collect_codebooks(
             subs.join(F.broadcast(seed_ids), "vid").select(
                 "sub", F.col("vid").alias("code"), F.col("sv").alias("cw")
             )
         )
-    for _ in range(n_iter):
-        assign = subs.mapInPandas(
-            _pq_argmin_kernel(cb_map), schema=_PQ_ASSIGN_SCHEMA
-        )
-        comps = (
-            assign.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn("comp", F.expr("(s - pmod(s, n)) div n"))
-        )
-        cb_map = _collect_codebooks(
-            comps.groupBy("sub", "code").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "comp"))),
-                    lambda x: x["comp"],
-                ).alias("cw")
+        if not cb_map and seed_mod is not None:
+            # legacy modulus matched no id (sparse/non-contiguous id space):
+            # fall back to fixed-k instead of training an empty codebook
+            seed_ids = select_seeds(q.select("vid"), n_codes, "vid")
+            cb_map = _collect_codebooks(
+                subs.join(F.broadcast(seed_ids), "vid").select(
+                    "sub", F.col("vid").alias("code"), F.col("sv").alias("cw")
+                )
             )
-        )
-    # every pass over q has run (training is all eager collects); the
-    # returned codebook is driver literals with no lineage into q, so
-    # the pin releases cleanly here — no cache outlives the call
-    if _pin:
-        q.unpersist(blocking=False)
+        for _ in range(n_iter):
+            assign = subs.mapInPandas(
+                _pq_argmin_kernel(cb_map), schema=_PQ_ASSIGN_SCHEMA
+            )
+            comps = (
+                assign.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
+                .groupBy("sub", "code", "pos")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                .withColumn("comp", F.expr("(s - pmod(s, n)) div n"))
+            )
+            cb_map = _collect_codebooks(
+                comps.groupBy("sub", "code").agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "comp"))),
+                        lambda x: x["comp"],
+                    ).alias("cw")
+                )
+            )
     spark = corpus.sparkSession
     rows = [
         (int(s), int(c), [int(x) for x in cw])
@@ -1687,12 +1683,12 @@ def build_embedding_index(
         corpus.select(id_col), pairs, id_col=id_col, a_col="vec_a", b_col="vec_b"
     )
     # Checkpoint the survivors: downstream they feed the centroid-seed
-    # collect, the codebook trainer's pinned projection, the encode pass
+    # collect, the codebook trainer's cached projection, the encode pass
     # and the assignment table — four executions of the corpus⋈clusters
-    # join without a pin. r10 measured a cache()+count() here ~18%
+    # join without a cache. r10 measured a cache()+count() here ~18%
     # SLOWER (the trainer then re-read its own lineage 3x anyway, so the
     # materialization job was pure overhead); after r11's codebook-
-    # internal pin the balance flipped: interleaved A/B at sf0.1 shows
+    # internal cache the balance flipped: interleaved A/B at sf0.1 shows
     # the checkpoint ~20% faster (8.06/6.52 s -> 6.08/5.20 s), and at
     # scale it is one survivors join instead of four.
     surv = corpus.join(
@@ -1823,7 +1819,7 @@ def ivf_pq_residual_topk(
 
     # corpus: nearest cell + residual, one map pass. Checkpoint it: the
     # residual frame feeds the codebook trainer (eager collects), the
-    # encode pass AND the assigned table — without a pin the coarse
+    # encode pass AND the assigned table — without a cache the coarse
     # GEMM kernel re-runs over the whole corpus once per consumer
     # (measured ~6x the tier's wall at sf0.1 — the "one map pass" the
     # docstring promises was running five times). localCheckpoint
@@ -2001,8 +1997,8 @@ def stream_index_encode(
     os.makedirs(index_dir, exist_ok=True)
 
     def encode_batch(batch: DataFrame, batch_id: int) -> None:
-        b = batch.persist()
-        try:
+        with cache_scope():
+            b = cache(batch)
             if b.isEmpty():
                 return
             spark_l = b.sparkSession
@@ -2022,14 +2018,9 @@ def stream_index_encode(
                 existing = None
             if existing is not None:
                 enc = enc.join(existing, [id_col], "left_anti")
-            enc = enc.persist()
-            try:
-                if not enc.isEmpty():
-                    enc.write.mode("append").parquet(index_dir)
-            finally:
-                enc.unpersist()
-        finally:
-            b.unpersist()
+            enc = cache(enc)
+            if not enc.isEmpty():
+                enc.write.mode("append").parquet(index_dir)
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
     writer = stream.writeStream.foreachBatch(encode_batch).option(

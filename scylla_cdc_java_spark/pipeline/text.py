@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import cache
+
 # Tiny per-language stopword inventories for the n-gram/stopword heuristic.
 LANG_STOPWORDS: dict[str, list[str]] = {
     "en": ["the", "a", "of", "and", "is"],
@@ -711,25 +713,23 @@ def bm25_scores(
     stats frame is a single row — the join is a broadcast nested loop of
     width 1. The tokenized projection feeds two plan branches (the stats
     aggregate and the scoring scan), so without materialization the
-    corpus would be tokenized twice; ``base`` is therefore persisted —
-    it is the NARROW projection (id, doc length, one int per query term;
-    the token array is dropped before caching), so the cached footprint
-    is bytes per doc, spilling to disk past memory. Scale: O(|corpus|)
-    map work + one 1-row agg, corpus tokenized once.
+    corpus would be tokenized twice; ``base`` is therefore cached
+    (:func:`~.cache.cache`) — it is the NARROW projection (id, doc
+    length, one int per query term; the token array is dropped before
+    caching), so the cached footprint is bytes per doc, spilling to disk
+    past memory. Scale: O(|corpus|) map work + one 1-row agg, corpus
+    tokenized once.
     """
-    from pyspark import StorageLevel
-
     toks = F.col("__toks")
     tf_cols = {
         f"__tf_{i}": F.size(F.filter(toks, lambda x: x == F.lit(t)))
         for i, t in enumerate(query_terms)
     }
-    base = (
+    base = cache(
         df.select(id_col, tokens_col(text_col).alias("__toks"))
         .withColumn("__dl", F.size(toks))
         .withColumns(tf_cols)
         .drop("__toks")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     stats = base.agg(
         F.count(F.lit(1)).alias("__n"),

@@ -25,6 +25,7 @@ from .functions.streamid import vnode_col
 from .functions.timeuuid import GREGORIAN_OFFSET_100NS, timeuuid_micros_col
 from .operators.apply import apply_cdc_log, pair_range_deletes
 from .operators.preimage import preimage_report
+from .pipeline.cache import cache, cache_scope
 from .pipeline.dedup import (
     dedup_clusters,
     exact_dedup_groups,
@@ -32,7 +33,6 @@ from .pipeline.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
-from .pipeline.pins import pin as _pin
 from .pipeline.multimodal import documents_as_media, extract_features, sample_frames
 from .pipeline.similarity import (
     cosine_topk_bruteforce,
@@ -4996,9 +4996,9 @@ def q_dedup_simhash_hamming(spark, sf_dir):
 
     # cache: the banded self-join reads this from BOTH sides, and Spark
     # never reuses the aliased exchange (zero ReusedExchange across the
-    # whole registry's plans) — without the pin the full token-explode
+    # whole registry's plans) — without the cache the full token-explode
     # simhash aggregation runs twice. One row per doc; LRU-evictable.
-    sh = _pin(simhash(_docs(spark, sf_dir)).select("doc_id", "simhash"))
+    sh = cache(simhash(_docs(spark, sf_dir)).select("doc_id", "simhash"))
     bands = sh.select(
         "doc_id",
         "simhash",
@@ -5087,12 +5087,12 @@ def _hashed_shingles(docs):
     """The shared inverted-index input ``(doc_id, sh = xxhash64(shingle))``
     over distinct word 3-grams — built by the SAME grain definition
     ngram_jaccard_pairs uses internally (dedup.hashed_shingle_index, so the
-    truth and detector chains cannot drift apart) and pinned (see
+    truth and detector chains cannot drift apart) and cached (see
     ngram_jaccard_pairs for the r11 cache/count/checkpoint measurement;
     plain lazy cache won)."""
     from .pipeline.dedup import hashed_shingle_index
 
-    return _pin(hashed_shingle_index(docs, n=3))
+    return cache(hashed_shingle_index(docs, n=3))
 
 
 def _containment_pairs(sh, max_df: int = 50, threshold: float = 0.5):
@@ -5165,7 +5165,7 @@ def q_dedup_containment_quality(spark, sf_dir):
     exactly the number that separates the two dedup policies."""
     docs = _docs(spark, sf_dir)
     # truth and detector consume the IDENTICAL grain here (distinct
-    # hashed word 3-grams), so both chains share ONE shingle scan/pin —
+    # hashed word 3-grams), so both chains share ONE cached shingle scan —
     # one documents scan + explode instead of two (r12; the other quality
     # gates' detectors use different grains and cannot share)
     sh = _hashed_shingles(docs)
@@ -7132,37 +7132,34 @@ def q_agg_stock_value_ntile(spark, sf_dir):
         F.col("ps_availqty").cast("long")
         * (F.col("ps_supplycost") * F.lit(100).cast("decimal(3,0)")).cast("long")
     )
-    ps = (
-        derived_partsupp(spark, sf_dir)
-        .join(F.broadcast(sn), F.col("ps_suppkey") == F.col("s_suppkey"))
-        .select(
-            "ps_partkey",
-            "ps_suppkey",
-            "n_name",
-            vdec.alias("__vdec"),
-            cents.alias("__cents"),
+    # the two-pass rank makes THREE passes over its input (approxQuantile,
+    # count matrix, final join); the input here is COMPUTED (explode +
+    # joins), not a parquet scan, so cache it for the two EAGER passes —
+    # ~15% off the gate at sf0.1, and the canonical shape at scale (narrow
+    # projection, MEMORY_AND_DISK, LRU-evictable). The scope releases it
+    # once both have run, so a long-lived session composing many ranked
+    # frames doesn't accumulate cached inputs; the lazy third pass
+    # recomputes the narrow projection — measured ~0.2 s at sf0.1, the
+    # right trade against an unbounded cache.
+    with cache_scope():
+        ps = cache(
+            derived_partsupp(spark, sf_dir)
+            .join(F.broadcast(sn), F.col("ps_suppkey") == F.col("s_suppkey"))
+            .select(
+                "ps_partkey",
+                "ps_suppkey",
+                "n_name",
+                vdec.alias("__vdec"),
+                cents.alias("__cents"),
+            )
         )
-        # the two-pass rank makes THREE passes over its input
-        # (approxQuantile, count matrix, final join); the input here is
-        # COMPUTED (explode + joins), not a parquet scan, so materialize
-        # it once — ~15% off the gate at sf0.1, and the canonical shape
-        # at scale (narrow projection, MEMORY_AND_DISK, LRU-evictable)
-        .persist()
-    )
-    ranked = ranked_frames(
-        ps, "n_name", ["__cents", "ps_partkey", "ps_suppkey"], n_tiles=4
-    )
-    out = ranked.groupBy("n_name", "quartile").agg(
+        ranked = ranked_frames(
+            ps, "n_name", ["__cents", "ps_partkey", "ps_suppkey"], n_tiles=4
+        )
+    return ranked.groupBy("n_name", "quartile").agg(
         F.count(F.lit(1)).alias("n_ps"),
         F.sum("__vdec").cast("double").alias("total_value"),
     )
-    # both of ranked_frames' EAGER passes (approxQuantile + the offsets
-    # collect) have run by now; release the pin so a long-lived session
-    # composing many ranked frames doesn't accumulate cached inputs. The
-    # lazy third pass recomputes the narrow projection — measured ~0.2 s
-    # at sf0.1, the right trade against an unbounded cache pin.
-    ps.unpersist(blocking=False)
-    return out
 
 
 def _oracle_stock_ntile() -> str:

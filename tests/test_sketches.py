@@ -400,6 +400,80 @@ class TestStreamIncrementalDedup:
         admitted = [r["doc_id"] for r in spark.read.parquet(idx).collect()]
         assert admitted == [1]
 
+    def test_no_cache_outlives_a_micro_batch(self, spark, tmp_path):
+        """Each micro-batch runs in one cache_scope: after three
+        AvailableNow runs, one new source file each, the session caches
+        nothing — not the batch and admitted frames, nor the signature
+        caches that minhash_lsh_pairs and incremental_dedup take."""
+        import os
+        import time
+
+        from scylla_cdc_java_spark.pipeline.dedup import stream_incremental_dedup
+
+        src = str(tmp_path / "src")
+        idx = str(tmp_path / "index")
+        os.makedirs(src)
+        base = "the quick brown fox jumps over the lazy dog today again"
+        novel = "novel content that matches nothing in the corpus index"
+        batches = [
+            [(1, base), (2, "completely different words about spark engines here")],
+            [(3, base.replace("dog", "cat")), (4, novel)],
+            [(5, novel), (6, "a third batch brings one more unrelated document")],
+        ]
+        spark.catalog.clearCache()
+        for rows in batches:
+            time.sleep(0.05)  # distinct source-file mtimes
+            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+                1
+            ).write.mode("append").parquet(src)
+            stream_incremental_dedup(
+                spark, src, idx, str(tmp_path / "ckpt"), threshold=0.2
+            ).awaitTermination()
+        admitted = sorted(
+            r["doc_id"] for r in spark.read.parquet(idx).select("doc_id").collect()
+        )
+        assert admitted == [1, 2, 4, 6]
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_corrupt_index_fails_the_batch(self, spark, tmp_path):
+        """Only a missing or empty index reads as "no index". A corrupt
+        part file must fail the micro-batch (the checkpoint retries it)
+        instead of admitting every survivor, a copy of an indexed
+        document included."""
+        import glob
+        import os
+        import time
+
+        from pyspark.errors import StreamingQueryException
+
+        from scylla_cdc_java_spark.pipeline.dedup import stream_incremental_dedup
+
+        src = str(tmp_path / "src")
+        idx = str(tmp_path / "index")
+        ckpt = str(tmp_path / "ckpt")
+        os.makedirs(src)
+        text = "alpha beta gamma delta epsilon zeta eta theta"
+
+        def ingest(doc_id):
+            spark.createDataFrame([(doc_id, text)], "doc_id long, text string").coalesce(
+                1
+            ).write.mode("append").parquet(src)
+            return stream_incremental_dedup(spark, src, idx, ckpt, threshold=0.2)
+
+        ingest(1).awaitTermination()
+        for part in glob.glob(os.path.join(idx, "part-*.parquet")):
+            with open(part, "wb") as f:
+                f.write(b"not a parquet file")
+            crc = os.path.join(idx, f".{os.path.basename(part)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        parts = sorted(os.listdir(idx))
+        time.sleep(0.05)  # distinct source-file mtimes
+        q = ingest(2)  # doc 2 repeats doc 1's text
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination()
+        assert sorted(os.listdir(idx)) == parts  # nothing appended
+
 
 # ---- differential property test: native BPE fold vs pure-Python ------------
 
@@ -1322,25 +1396,80 @@ def test_bpe_train_local_path_matches_distributed(spark):
         assert local == dist, f"batch={batch}: local={local} dist={dist}"
 
 
-def test_release_pins_unpersists_lazy_return_caches(spark):
-    """r12 (VERDICT r11 #8): operators that pin a self-join input for
-    their lazy returned frame register it; release_pins() drops every
-    registered pin so a long-lived session can reclaim storage without
-    a blanket clearCache()."""
-    from scylla_cdc_java_spark.pipeline import pins
-    from scylla_cdc_java_spark.pipeline.dedup import winnow_pairs
+def test_cache_scope_unpersists_on_exit(spark):
+    """cache() records a frame in the innermost cache_scope() open on the
+    calling thread; leaving the scope, by return or by exception,
+    unpersists exactly the frames recorded in it, while a frame cached
+    outside every scope stays cached for the session."""
+    import threading
 
-    pins.release_pins()  # clean slate
+    from scylla_cdc_java_spark.pipeline.cache import cache, cache_scope
+    from scylla_cdc_java_spark.pipeline.dedup import winnow_fingerprints, winnow_pairs
+
+    def cached(df):
+        lvl = df.storageLevel  # looked up by plan in the cache manager
+        return lvl.useMemory or lvl.useDisk
+
+    spark.catalog.clearCache()
     docs = spark.createDataFrame(
         [(i, ("abcdefgh" * 4) + str(i % 3)) for i in range(20)],
         "doc_id long, text string",
     )
-    out = winnow_pairs(docs)
-    out.count()  # populate the fp pin
-    assert pins._PINS, "winnow_pairs should register its fingerprint pin"
-    pinned = list(pins._PINS)
-    assert any(df.storageLevel.useMemory for df in pinned)
-    n = pins.release_pins()
-    assert n == len(pinned)
-    assert not pins._PINS
-    assert all(not df.storageLevel.useMemory for df in pinned)
+    fp = winnow_fingerprints(docs)  # the plan winnow_pairs caches inside
+    with cache_scope():
+        winnow_pairs(docs).count()
+        assert cached(fp), "winnow_pairs should cache its fingerprint frame"
+    assert not cached(fp)
+
+    with pytest.raises(RuntimeError):
+        with cache_scope():
+            winnow_pairs(docs).count()
+            assert cached(fp)
+            raise RuntimeError("batch failed")
+    assert not cached(fp)
+
+    with cache_scope():
+        outer = cache(docs.select("doc_id"))
+        with cache_scope():
+            inner = cache(docs.select("text"))
+            assert cached(outer) and cached(inner)
+        assert cached(outer) and not cached(inner)
+    assert not cached(outer)
+
+    # outside every scope, on this thread or on another one while this
+    # thread has a scope open (scopes are per thread), a cache stays
+    kept = cache(docs.select("doc_id", "text"))
+    with cache_scope():
+        cache(docs.select("doc_id"))
+        other = threading.Thread(target=lambda: cache(docs.select("text")))
+        other.start()
+        other.join(timeout=120)
+        assert not other.is_alive()
+    assert cached(kept) and cached(docs.select("text"))
+    assert not cached(docs.select("doc_id"))
+    spark.catalog.clearCache()
+
+
+def test_cache_scope_tolerates_a_stopped_session():
+    """Leaving a scope whose frames belong to a stopped session raises
+    nothing, and every frame's unpersist is still tried (a stopped
+    session's unpersist raises Py4JJavaError, a Py4JError)."""
+    from py4j.protocol import Py4JError
+
+    from scylla_cdc_java_spark.pipeline.cache import cache, cache_scope
+
+    class StoppedFrame:
+        tried = False
+
+        def cache(self):
+            return self
+
+        def unpersist(self, blocking):
+            self.tried = True
+            raise Py4JError("session stopped")
+
+    frames = [StoppedFrame(), StoppedFrame()]
+    with cache_scope():
+        for frame in frames:
+            cache(frame)
+    assert all(frame.tried for frame in frames)
