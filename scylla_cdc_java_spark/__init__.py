@@ -19,8 +19,8 @@ A from-scratch re-expression of the capabilities of scylladb/scylla-cdc-java
 Everything is DataFrame-first: logical plans are declared with the
 PySpark DataFrame/SQL API so Catalyst can push filters, prune columns
 and pick join strategies; Python UDFs are confined to Arrow-batched
-``applyInPandas`` kernels where built-in operators cannot express the
-semantics (ordered stateful apply).
+pandas kernels (``mapInPandas``/``applyInPandas``) where built-in
+operators cannot express the semantics (the ordered stateful apply).
 """
 
 __version__ = "0.1.0"

@@ -9,7 +9,6 @@ from .timeuuid import (
 )
 from .streamid import (
     make_stream_id,
-    stream_id_hex_col,
     vnode_from_stream_id,
     vnode_col,
 )
@@ -31,7 +30,6 @@ __all__ = [
     "timeuuid_micros_col",
     "timeuuid_ts_col",
     "make_stream_id",
-    "stream_id_hex_col",
     "vnode_from_stream_id",
     "vnode_col",
     "format_change",

@@ -3,10 +3,10 @@
 F3: the vnode index lives in bits 4..25 of the low 64-bit word (bytes
 8..15) of the stream id: ``(lowerQword & 0x3FFFFF0) >> 4``
 (reference: scylla-cdc-base/.../model/StreamId.java:15-21).
-F6: hex rendering (StreamId.java:36-41).
+F6, the hex rendering (StreamId.java:36-41), is Spark's own ``hex``.
 
-Both are provided as pure Python (driver-side planning, tests) and as
-native Spark column expressions (JVM-side, codegen) — the mask covers
+F3 is provided as pure Python (driver-side planning, tests) and as a
+native Spark column expression (JVM-side, codegen) — the mask covers
 only the low 32 bits, so we convert just the last 8 hex chars.
 """
 
@@ -42,9 +42,3 @@ def vnode_col(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     low32 = F.conv(F.substring(F.hex(c), 25, 8), 16, 10).cast("long")
     return F.shiftright(low32.bitwiseAND(F.lit(_VNODE_MASK)), 4).cast("long")
-
-
-def stream_id_hex_col(col: Column | str) -> Column:
-    """F6: BinaryType stream id -> uppercase base16 string."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.hex(c)

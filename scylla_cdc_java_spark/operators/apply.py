@@ -17,23 +17,25 @@ operations/ handler tree) as batch DataFrame operators:
   - **native cell-LWW** (``_apply_scalar_native``) when the table has no
     clustering key, no non-frozen collection, and no TTL evaluation is
     asked for: one duplicate-insensitive JVM aggregation, no Python;
-  - **the pandas fold** (``_make_fold_kernel``) for everything else: an
-    ``applyInPandas`` over hash-bucket groups of the partition key. One
-    shuffle co-locates every change that can affect a CQL partition (row
-    ops, partition deletes, range bounds), then an ordered fold inside
-    the Arrow batch applies each partition's changes in
+  - **the pandas fold** (``_make_fold_kernel``) for everything else: one
+    ``mapInPandas`` pass per shuffle partition. One shuffle on the
+    partition key co-locates every change that can affect a CQL partition
+    (row ops, partition deletes, range bounds), Spark sorts each shuffle
+    partition by (key, cdc$time, batch_seq_no, stream id), and the fold
+    walks the sorted rows once, applying each partition's changes in
     (cdc$time, batch_seq_no) order — the same per-stream total order the
     reference relies on
     (WorkerTest.testWorkerConsumesSingleVNodeChangesInOrder).
 
 Scale posture: either path's only shuffle is the one on the key — the
-minimum co-location requirement for CQL semantics. The fold groups on
-``hash(pk) % _KERNEL_BUCKETS``, so kernel-call count stays bounded instead
-of growing with key cardinality. Skewed partitions degrade exactly like
-hot CQL partitions; AQE skew handling applies. Everything before the
-kernel (normalize, op-split) is native/codegen; P2 dedup rides inside
-both paths (max/max_by aggregates on the native one, adjacent-ChangeId
-skipping in the fold).
+minimum co-location requirement for CQL semantics. The fold makes one
+Python call per task, whatever the key count, and holds one CQL partition
+plus one Arrow batch at a time, so its memory does not grow with the
+shuffle partition's size; a hot CQL partition costs what it costs in
+Scylla, and AQE may coalesce small shuffle partitions but never splits
+one. Everything before the kernel (normalize, op-split) is
+native/codegen; P2 dedup rides inside both paths (max/max_by aggregates on
+the native one, adjacent-ChangeId skipping in the fold).
 
 Plan construction: ``apply_cdc_log`` runs in the driver on every
 replicator trigger, so it builds its plan from a small, fixed set of
@@ -63,11 +65,6 @@ from .normalize import TIME_MICROS, normalize_changes
 
 _SEQ = "cdc$batch_seq_no"
 _OP = "cdc$operation"
-# The fold groups on ``hash(pk) % _KERNEL_BUCKETS`` rather than the raw
-# partition key: one kernel call folds every CQL partition of its bucket,
-# so invocations (and task bookkeeping) stay bounded while the shuffle
-# volume is identical and co-location still holds.
-_KERNEL_BUCKETS = 1024
 
 
 def pair_range_deletes(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
@@ -255,17 +252,21 @@ def apply_cdc_log(
     listing its columns) and of ``initial_state``, then one string-built
     step each for the op filter, the projection, the seed, and the
     kernel — SQL aggregate and ``CASE`` expressions on the native path, a
-    positional rename and a grouping on ``pmod(xxhash64(pk),
-    _KERNEL_BUCKETS)`` before ``applyInPandas`` on the fold. The
-    replicator builds it on every trigger, where each Column-API call
-    would be a py4j round trip (see the module docstring).
+    positional rename, ``repartition`` on the key, ``sortWithinPartitions``
+    and ``mapInPandas`` on the fold. The replicator builds it on every
+    trigger, where each Column-API call would be a py4j round trip (see
+    the module docstring).
+
+    Scale posture: one shuffle on the partition key; the fold is one
+    Python call per shuffle partition and holds one CQL partition plus one
+    Arrow batch at a time, so a large backfill streams through it.
     """
     if mode not in ("delta", "postimage"):
         raise ValueError(f"unknown mode {mode!r}")
     d = _plain_desc(desc)
     changes = normalize_changes(changes)
     # P2 dedup happens INSIDE either path (duplicate ChangeIds are
-    # adjacent after the fold's in-group sort; max/max_by ignore them), so
+    # adjacent after the fold's sort; max/max_by ignore them), so
     # the change stream shuffles exactly once — on the partition key —
     # instead of paying a second full shuffle for a standalone
     # dropDuplicates.
@@ -329,14 +330,19 @@ def apply_cdc_log(
     kernel = _make_fold_kernel(
         d, cols, out_names, with_version=with_version_col, as_of=as_of_micros
     )
-    # ``applyInPandas`` looks each input column up through the DataFrame
-    # API, which splits a name at dots and backticks: the kernel's input
-    # columns are named by position and it restores the real names. The
-    # grouping expression adds no named column, so it shadows nothing.
+    # ``mapInPandas`` hands the kernel its input through the DataFrame API,
+    # which splits a name at dots and backticks: the kernel's input columns
+    # are named by position and it restores the real names.
     changes = changes.selectExpr(*[f"{sql_ident(c)} AS _{i}" for i, c in enumerate(cols)])
-    pk = ", ".join(f"_{cols.index(c)}" for c in d["pk"])
-    bucket = F.expr(f"pmod(xxhash64({pk}), {_KERNEL_BUCKETS})")
-    return changes.groupBy(bucket).applyInPandas(kernel, schema=out_schema)
+    pk = [f"_{cols.index(c)}" for c in d["pk"]]
+    # Stream id sorts last, so the duplicate deliveries of one ChangeId
+    # (stream, time, seq) are adjacent rows for the fold to skip.
+    order = [f"_{cols.index(c)}" for c in (TIME_MICROS, _SEQ, "cdc$stream_id") if c in cols]
+    return (
+        changes.repartition(*pk)
+        .sortWithinPartitions(*pk, *order)
+        .mapInPandas(kernel, schema=out_schema)
+    )
 
 
 def _make_fold_kernel(
@@ -346,9 +352,13 @@ def _make_fold_kernel(
     with_version: bool = False,
     as_of: int | None = None,
 ):
-    """Build the per-partition ordered fold over input columns named
-    ``in_cols`` (in order; they arrive named by position). Nested def so
-    cloudpickle ships it by value; references only stdlib + pandas."""
+    """Build the ordered fold over one task's rows, sorted by (partition
+    key, cdc$time, batch_seq_no, stream id), in input columns named
+    ``in_cols`` (in order; they arrive named by position). The fold keeps
+    state for the current partition key only and emits that key's rows
+    when the key changes and once more at the end, so a CQL partition may
+    span Arrow batches. Nested def so cloudpickle ships it by value;
+    references only stdlib + pandas."""
     import pandas as pd  # noqa: F401  (captured for the closure)
 
     GREGORIAN = 0x01B21DD213814000
@@ -362,23 +372,10 @@ def _make_fold_kernel(
 
         return (_uuid.UUID(u).time - GREGORIAN) // 10, u
 
-    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-        import pandas as pd
+    def fold(batches):
+        import math
 
-        pdf.columns = in_cols
-        # numpy lexsort + columnar access: ~3-5x faster than
-        # sort_values + to_dict("records") on wide frames
-        order = np.lexsort(
-            (pdf["cdc$batch_seq_no"].to_numpy(), pdf["cdc$time_micros"].to_numpy())
-        )
-        cols = {c: pdf[c].to_numpy()[order] for c in pdf.columns}
-        n_rows = len(order)
-        # one kernel call folds EVERY CQL partition of its hash bucket:
-        # state nests pk -> ck -> entry, range-delete pairing is keyed per
-        # pk (the reference keys its buffer per stream, RangeDeleteState)
-        rows: dict[tuple, dict[tuple, dict]] = {}
-        pending_left: dict[tuple, tuple] = {}  # pk -> (ck_bound, inclusive)
+        import pandas as pd
 
         def bound_ok(ck_t, bound, inclusive, is_left):
             for a, b in zip(ck_t, bound):
@@ -472,8 +469,6 @@ def _make_fold_kernel(
                 return
             raise AssertionError(kind)
 
-        import math
-
         def sv(x):
             # Arrow->pandas turns nullable ints into float NaN and nullable
             # bools into object NaN; NaN is truthy, so sanitize to None.
@@ -490,167 +485,173 @@ def _make_fold_kernel(
                 return int(x)
             return x
 
-        op_arr = cols["cdc$operation"]
-        time_arr = cols["cdc$time_micros"]
-        seq_arr = cols["cdc$batch_seq_no"]
-        ttl_arr = cols.get("cdc$ttl")
-        sid_arr = cols.get("cdc$stream_id")
-        pk_arrs = [cols[c] for c in pk_cols]
-        ck_arrs = [cols[c] for c in ck_cols]
-        reg_arrs = {c: cols.get(c) for c in regular}
-        del_arrs = {c: cols.get(f"cdc$deleted_{c}") for c in regular}
-        delem_arrs = {c: cols.get(f"cdc$deleted_elements_{c}") for c in regular}
-        run_key, run_seen = None, set()
-        for x in range(n_rows):
-            if sid_arr is not None:
-                # P2 in-fold dedup: duplicate deliveries of one ChangeId
-                # (stream, time, seq) are adjacent after the sort; seed
-                # rows (null stream id) are never deduped.
-                key = (int(time_arr[x]), int(seq_arr[x]))
-                if key != run_key:
-                    run_key, run_seen = key, set()
-                sid = sid_arr[x]
-                if sid is not None:
-                    sid = bytes(sid)
-                    if sid in run_seen:
-                        continue
-                    run_seen.add(sid)
-            op = int(op_arr[x])
-            pk_t = tuple(
-                iv(a[x]) if not isinstance(a[x], (bytes, bytearray)) else bytes(a[x])
-                for a in pk_arrs
-            )
-            ck_t = tuple(iv(a[x]) for a in ck_arrs)
-            if op == 4:  # partition delete
-                rows.pop(pk_t, None)
-                pending_left.pop(pk_t, None)
-                continue
-            if op in (5, 6):
-                pending_left[pk_t] = (ck_t, op == 5)
-                continue
-            if op in (7, 8):
-                pend = pending_left.pop(pk_t, None)
-                if pend is not None and pk_t in rows:
-                    lb, lincl = pend
-                    rincl = op == 7
-                    part = rows[pk_t]
-                    doomed = [
-                        k
-                        for k in part
-                        if bound_ok(k, lb, lincl, True) and bound_ok(k, ck_t, rincl, False)
-                    ]
-                    for k in doomed:
-                        del part[k]
-                continue
-            if op == 3:  # row delete
-                part = rows.get(pk_t)
-                if part is not None:
-                    part.pop(ck_t, None)
-                continue
-            # writes: 1 update / 2 insert / 9 postimage
-            part = rows.setdefault(pk_t, {})
-            entry = part.get(ck_t)
-            if entry is None:
-                entry = part[ck_t] = {"marker": False, "cells": {}, "exp": {}}
-            entry["ver"] = int(time_arr[x])
-            ttl_val = sv(ttl_arr[x]) if ttl_arr is not None else None
-            exp_val = (
-                int(time_arr[x]) + int(ttl_val) * 1_000_000 if ttl_val else None
-            )
-            if op in (2, 9):
-                entry["marker"] = True
-                entry["marker_exp"] = exp_val
-            for col in regular:
-                arr = reg_arrs[col]
-                value = arr[x] if arr is not None else None
-                if kinds[col] == "scalar" and not isinstance(value, (bytes, bytearray)):
-                    value = iv(value)
-                else:
-                    value = sv(value) if isinstance(value, float) else value
-                if op == 9:
-                    # full-row image (real post-image, or an initial_state
-                    # seed row): overwrite every column — absent value is an
-                    # absent cell, collections replaced not merged
-                    deleted = True
-                else:
-                    darr = del_arrs[col]
-                    deleted = bool(sv(darr[x] if darr is not None else None) or False)
-                earr = delem_arrs[col]
-                del_elems = earr[x] if earr is not None else None
-                if isinstance(del_elems, float):
-                    del_elems = sv(del_elems)
-                if del_elems is not None and not isinstance(del_elems, (list, tuple)):
-                    del_elems = list(del_elems)
-                if value is None and not deleted and del_elems is None:
-                    continue  # unset
-                ee = None
-                if as_of is not None and kinds[col] != "scalar":
-                    ee = entry.setdefault("eexp", {}).setdefault(col, {})
-                write_cell(entry["cells"], col, value, deleted, del_elems, ee, exp_val)
-                if kinds[col] == "scalar":
-                    if value is not None:
-                        entry["exp"][col] = exp_val
-                    elif deleted:
-                        entry["exp"].pop(col, None)
-            if not entry["marker"] and not entry["cells"]:
-                del part[ck_t]  # update that wrote only tombstones to a dead row
+        def emit(pk_t, part, out):
+            # append the live rows of one folded CQL partition to ``out``
+            for ck_t, entry in part.items():
+                cells, marker = entry["cells"], entry["marker"]
+                if as_of is not None:
+                    expmap = entry.get("exp", {})
+                    eexp = entry.get("eexp", {})
+                    new_cells = {}
+                    for c, v in cells.items():
+                        if kinds[c] == "scalar":
+                            if expmap.get(c) is None or expmap[c] > as_of:
+                                new_cells[c] = v
+                            continue
+                        ee = eexp.get(c, {})
 
-        out = []
-        for pk_t, part in rows.items():
-          for ck_t, entry in part.items():
-            cells, marker = entry["cells"], entry["marker"]
-            if as_of is not None:
-                expmap = entry.get("exp", {})
-                eexp = entry.get("eexp", {})
-                new_cells = {}
-                for c, v in cells.items():
-                    if kinds[c] == "scalar":
-                        if expmap.get(c) is None or expmap[c] > as_of:
+                        def live(k):
+                            e = ee.get(k)
+                            return e is None or e > as_of
+
+                        if kinds[c] == "set":
+                            v = [e for e in v if live(e)]
+                        elif kinds[c] in ("map", "list"):
+                            v = {k: val for k, val in v.items() if live(k)}
+                        else:  # udt: expired fields null out
+                            v = {n: (val if live(n) else None) for n, val in v.items()}
+                            if not any(val is not None for val in v.values()):
+                                v = None
+                        if v:
                             new_cells[c] = v
+                    cells = new_cells
+                    mexp = entry.get("marker_exp")
+                    if marker and mexp is not None and mexp <= as_of:
+                        marker = False
+                if not marker and not cells:
+                    continue
+                rec = {}
+                for c, v in zip(pk_cols, pk_t):
+                    rec[c] = v
+                for c, v in zip(ck_cols, ck_t):
+                    rec[c] = v
+                if with_version:
+                    rec[TIME_MICROS] = entry.get("ver")
+                for col in regular:
+                    v = cells.get(col)
+                    kind = kinds[col]
+                    if v is None:
+                        rec[col] = None
+                    elif kind == "list":
+                        rec[col] = [val for _, val in sorted(v.items(), key=lambda kv: timeuuid_key(kv[0]))]
+                    elif kind == "udt":
+                        rec[col] = tuple(v[n] for n in udt_fields[col])
+                    else:
+                        rec[col] = v
+                out.append(rec)
+
+        # state of the current CQL partition only, carried across batches:
+        # its ck -> entry rows, its open left range bound (the reference
+        # buffers one per stream, RangeDeleteState), and the last ChangeId
+        # applied, for P2 dedup
+        pk_t, part, pending, last_id = None, {}, None, None
+        for pdf in batches:
+            pdf.columns = in_cols
+            cols = {c: pdf[c].to_numpy() for c in in_cols}
+            op_arr = cols["cdc$operation"]
+            time_arr = cols["cdc$time_micros"]
+            seq_arr = cols["cdc$batch_seq_no"]
+            ttl_arr = cols.get("cdc$ttl")
+            sid_arr = cols.get("cdc$stream_id")
+            pk_arrs = [cols[c] for c in pk_cols]
+            ck_arrs = [cols[c] for c in ck_cols]
+            reg_arrs = {c: cols.get(c) for c in regular}
+            del_arrs = {c: cols.get(f"cdc$deleted_{c}") for c in regular}
+            delem_arrs = {c: cols.get(f"cdc$deleted_elements_{c}") for c in regular}
+            out = []
+            for x in range(len(pdf)):
+                key = tuple(
+                    iv(a[x]) if not isinstance(a[x], (bytes, bytearray)) else bytes(a[x])
+                    for a in pk_arrs
+                )
+                if key != pk_t:
+                    emit(pk_t, part, out)
+                    pk_t, part, pending, last_id = key, {}, None, None
+                sid = sid_arr[x] if sid_arr is not None else None
+                if sid is not None:
+                    # P2 in-fold dedup: duplicate deliveries of one ChangeId
+                    # (stream, time, seq) are adjacent after the sort; seed
+                    # rows (null stream id) are never deduped.
+                    change_id = (int(time_arr[x]), int(seq_arr[x]), bytes(sid))
+                    if change_id == last_id:
                         continue
-                    ee = eexp.get(c, {})
-
-                    def live(k):
-                        e = ee.get(k)
-                        return e is None or e > as_of
-
-                    if kinds[c] == "set":
-                        v = [e for e in v if live(e)]
-                    elif kinds[c] in ("map", "list"):
-                        v = {k: val for k, val in v.items() if live(k)}
-                    else:  # udt: expired fields null out
-                        v = {n: (val if live(n) else None) for n, val in v.items()}
-                        if not any(val is not None for val in v.values()):
-                            v = None
-                    if v:
-                        new_cells[c] = v
-                cells = new_cells
-                mexp = entry.get("marker_exp")
-                if marker and mexp is not None and mexp <= as_of:
-                    marker = False
-            if not marker and not cells:
-                continue
-            rec = {}
-            for c, v in zip(pk_cols, pk_t):
-                rec[c] = v
-            for c, v in zip(ck_cols, ck_t):
-                rec[c] = v
-            if with_version:
-                rec[TIME_MICROS] = entry.get("ver")
-            for col in regular:
-                v = cells.get(col)
-                kind = kinds[col]
-                if v is None:
-                    rec[col] = None
-                elif kind == "list":
-                    rec[col] = [val for _, val in sorted(v.items(), key=lambda kv: timeuuid_key(kv[0]))]
-                elif kind == "map":
-                    rec[col] = v
-                elif kind == "udt":
-                    rec[col] = tuple(v[n] for n in udt_fields[col])
-                else:
-                    rec[col] = v
-            out.append(rec)
-        return pd.DataFrame(out, columns=out_cols)
+                    last_id = change_id
+                op = int(op_arr[x])
+                ck_t = tuple(iv(a[x]) for a in ck_arrs)
+                if op == 4:  # partition delete
+                    part.clear()
+                    pending = None
+                    continue
+                if op in (5, 6):
+                    pending = (ck_t, op == 5)
+                    continue
+                if op in (7, 8):
+                    if pending is not None:
+                        lb, lincl = pending
+                        rincl = op == 7
+                        doomed = [
+                            k
+                            for k in part
+                            if bound_ok(k, lb, lincl, True) and bound_ok(k, ck_t, rincl, False)
+                        ]
+                        for k in doomed:
+                            del part[k]
+                    pending = None
+                    continue
+                if op == 3:  # row delete
+                    part.pop(ck_t, None)
+                    continue
+                # writes: 1 update / 2 insert / 9 postimage
+                entry = part.get(ck_t)
+                if entry is None:
+                    entry = part[ck_t] = {"marker": False, "cells": {}, "exp": {}}
+                entry["ver"] = int(time_arr[x])
+                ttl_val = sv(ttl_arr[x]) if ttl_arr is not None else None
+                exp_val = (
+                    int(time_arr[x]) + int(ttl_val) * 1_000_000 if ttl_val else None
+                )
+                if op in (2, 9):
+                    entry["marker"] = True
+                    entry["marker_exp"] = exp_val
+                for col in regular:
+                    arr = reg_arrs[col]
+                    value = arr[x] if arr is not None else None
+                    if kinds[col] == "scalar" and not isinstance(value, (bytes, bytearray)):
+                        value = iv(value)
+                    else:
+                        value = sv(value) if isinstance(value, float) else value
+                    if op == 9:
+                        # full-row image (real post-image, or an initial_state
+                        # seed row): overwrite every column — absent value is an
+                        # absent cell, collections replaced not merged
+                        deleted = True
+                    else:
+                        darr = del_arrs[col]
+                        deleted = bool(sv(darr[x] if darr is not None else None) or False)
+                    earr = delem_arrs[col]
+                    del_elems = earr[x] if earr is not None else None
+                    if isinstance(del_elems, float):
+                        del_elems = sv(del_elems)
+                    if del_elems is not None and not isinstance(del_elems, (list, tuple)):
+                        del_elems = list(del_elems)
+                    if value is None and not deleted and del_elems is None:
+                        continue  # unset
+                    ee = None
+                    if as_of is not None and kinds[col] != "scalar":
+                        ee = entry.setdefault("eexp", {}).setdefault(col, {})
+                    write_cell(entry["cells"], col, value, deleted, del_elems, ee, exp_val)
+                    if kinds[col] == "scalar":
+                        if value is not None:
+                            entry["exp"][col] = exp_val
+                        elif deleted:
+                            entry["exp"].pop(col, None)
+                if not entry["marker"] and not entry["cells"]:
+                    del part[ck_t]  # update that wrote only tombstones to a dead row
+            if out:
+                yield pd.DataFrame(out, columns=out_cols)
+        out = []
+        emit(pk_t, part, out)
+        if out:
+            yield pd.DataFrame(out, columns=out_cols)
 
     return fold

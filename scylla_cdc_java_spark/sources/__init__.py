@@ -1,3 +1,3 @@
-from .tables import load_table, register_views
+from .tables import load_table
 
-__all__ = ["load_table", "register_views"]
+__all__ = ["load_table"]

@@ -397,8 +397,3 @@ def ts_filter(df: DataFrame, col: str, op: str, bound: str) -> DataFrame:
     if raw_ntz in df.columns:
         return df.where(f(F.col(raw_ntz), F.lit(bound).cast("timestamp_ntz")))
     return df.where(f(F.col(col), F.lit(bound).cast("timestamp")))
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for name in names or TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -103,10 +103,9 @@ one writer task, one file — and the next trigger splits it (the
 ``foreachBatch`` frame is RDD-backed: ``inputFiles()`` is empty, so the
 sink cannot size the first write from its input). The apply before that
 write still runs on every core. Measured on a 4-core box, a 2.4M-row first
-batch (a 26 MB state) took 27–37 s at one bucket and 28–30 s at the 8
-buckets the next trigger moves it to (two runs each): the fold, not the one
-writer task, bounds the backfill there; on a many-core cluster the single
-writer may dominate (unmeasured). And ``T`` must stay well above one
+batch (a 30 MB state) took 26–30 s at one bucket (two runs): the fold,
+not the one writer task, bounds the backfill there; on a many-core cluster
+the single writer may dominate (unmeasured). And ``T`` must stay well above one
 parquet file's fixed overhead (~1.5 KB for a narrow table), or the footers
 alone keep the buckets of a many-key state above ``2T`` and each trigger
 re-buckets.

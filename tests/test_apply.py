@@ -220,11 +220,8 @@ def test_postimage_mode(spark):
     assert got[0]["pk"] == "a" and got[0]["v1"] == 2 and got[0]["v2"] == "x"
 
 
-@pytest.mark.parametrize("table", list(FIXTURE_TABLES))
-def test_fuzz_differential(spark, table):
-    """Seeded random DML fuzz per fixture schema, shuffled + duplicated."""
-    desc = FIXTURE_TABLES[table]
-    rng = random.Random(hash(table) & 0xFFFF)
+def _fuzz_dml(desc, rng) -> list[tuple]:
+    """120 random statements of every kind on four partition keys."""
     pks = [("p%d" % i,) for i in range(4)]
     n_ck = len(desc.clustering_keys)
 
@@ -278,7 +275,73 @@ def test_fuzz_differential(spark, table):
             dml.append(("range_delete", pk, (lo, rng.random() < 0.5), (hi, rng.random() < 0.5)))
         else:
             dml.append(("partition_delete", pk))
-    run_diff(spark, table, dml)
+    return dml
+
+
+@pytest.mark.parametrize("table", list(FIXTURE_TABLES))
+def test_fuzz_differential(spark, table):
+    """Seeded random DML fuzz per fixture schema, shuffled + duplicated."""
+    desc = FIXTURE_TABLES[table]
+    run_diff(spark, table, _fuzz_dml(desc, random.Random(hash(table) & 0xFFFF)))
+
+
+@pytest.mark.parametrize(
+    "table",
+    ["tbl_simple", "tbl_multiple_clustering_keys", "tbl_lists", "tbl_sets", "tbl_maps", "tbl_udts"],
+)
+def test_fold_across_arrow_batch_boundaries(spark, table):
+    """At two rows per Arrow batch every CQL partition, duplicate
+    deliveries and a range delete's two bounds land in different batches
+    of one fold call; the fold carries the partition's state across them
+    and the fuzz differential still equals the oracle."""
+    desc = FIXTURE_TABLES[table]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        run_diff(spark, table, _fuzz_dml(desc, random.Random(table)))
+    finally:
+        spark.conf.unset(key)
+
+
+def test_fold_seeded_passes_across_arrow_batch_boundaries(spark, tmp_path):
+    """The fold-path ``_check_both_ways`` cases (a seeded second pass, a
+    list column's seed encoding, two replicator calls) still equal the
+    oracle at two rows per Arrow batch, where seed rows and the changes
+    after them land in different batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        test_apply_hostile_identifiers(spark, tmp_path / "hostile", True)
+        test_apply_internal_names_cannot_shadow_base_columns(spark, tmp_path / "names", True)
+    finally:
+        spark.conf.unset(key)
+
+
+def test_fold_kernel_calls_within_shuffle_partitions(spark, monkeypatch):
+    """The fold makes one Python kernel call per task, however many
+    partition keys the changes touch: over 2,000 keys, calls stay within
+    ``spark.sql.shuffle.partitions``. Counted by wrapping the kernel with
+    a Spark accumulator."""
+    from scylla_cdc_java_spark.operators import apply as apply_mod
+
+    calls = spark.sparkContext.accumulator(0)
+    make = apply_mod._make_fold_kernel
+
+    def counting_kernel(*args, **kwargs):
+        kernel = make(*args, **kwargs)
+
+        def counted(data):
+            calls.add(1)
+            return kernel(data)
+
+        return counted
+
+    monkeypatch.setattr(apply_mod, "_make_fold_kernel", counting_kernel)
+    dml = [("insert", ("k%d" % i,), (i % 8,), {"v1": i, "v2": "s"}) for i in range(2000)]
+    dml += [("update", ("k%d" % i,), (i % 8,), {"v1": -i}) for i in range(0, 2000, 3)]
+    dml += [("row_delete", ("k%d" % i,), (i % 8,)) for i in range(0, 2000, 7)]
+    run_diff(spark, "tbl_simple", dml)
+    assert 0 < calls.value <= int(spark.conf.get("spark.sql.shuffle.partitions")), calls.value
 
 
 def _scalar_dml(rng, desc, n=150, partition_frac=0.08):
@@ -339,7 +402,8 @@ def test_native_scalar_apply_ckless_fuzz(spark, seed):
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
     native = apply_cdc_log(df, desc, mode="delta")
-    assert "FlatMapGroupsInPandas" not in native._jdf.queryExecution().executedPlan().toString()
+    plan = native._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
@@ -512,25 +576,10 @@ def test_reconfigure_workers_diff():
 
 
 def test_apply_per_key_grouping_fallback(spark):
-    """Two partition keys that hash into one kernel bucket share a fold
-    call but fold independently: a row or partition delete on one never
-    touches the other's rows."""
-    from pyspark.sql import functions as F
-
-    from scylla_cdc_java_spark.operators.apply import _KERNEL_BUCKETS
-
-    desc = FIXTURE_TABLES["tbl_simple"]
-    bucket = F.pmod(F.xxhash64("pk"), F.lit(_KERNEL_BUCKETS))
-    pair = (
-        spark.range(4 * _KERNEL_BUCKETS)
-        .select(F.format_string("k%d", "id").alias("pk"))
-        .groupBy(bucket.alias("b"))
-        .agg(F.sort_array(F.collect_list("pk")).alias("pks"))
-        .where(F.size("pks") >= 2)
-        .orderBy("b")
-        .first()["pks"]
-    )
-    a, b = pair[0], pair[1]
+    """Two partition keys in one shuffle partition share a fold call but
+    fold independently: a row or partition delete on one never touches
+    the other's rows."""
+    a, b = "k1", "k2"
     dml = [
         ("insert", (a,), (1,), {"v1": 1, "v2": "x"}),
         ("insert", (b,), (1,), {"v1": 10, "v2": "y"}),
@@ -541,7 +590,13 @@ def test_apply_per_key_grouping_fallback(spark):
         ("insert", (b,), (3,), {"v1": 30, "v2": "v"}),
         ("update", (a,), (2,), {"v1": 2}),
     ]
-    rows = run_diff(spark, "tbl_simple", dml, dup=0.3)
+    key = "spark.sql.shuffle.partitions"
+    parts = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        rows = run_diff(spark, "tbl_simple", dml, dup=0.3)
+    finally:
+        spark.conf.set(key, parts)
     assert sorted((r["pk"], r["ck"]) for r in rows) == sorted(
         [(a, 2), (a, 3), (b, 3)]
     )
@@ -663,7 +718,7 @@ def _check_both_ways(spark, desc, dml, fold, state_dir):
 
     whole = apply_cdc_log(spark.createDataFrame(rows, schema), desc)
     plan = whole._jdf.queryExecution().toString()
-    assert ("FlatMapGroupsInPandas" in plan) == fold
+    assert ("MapInPandas" in plan) == fold
     _assert_state(desc, whole.collect(), dml)
 
     seed = apply_cdc_log(df1, desc, with_version_col=True)

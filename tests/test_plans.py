@@ -48,7 +48,11 @@ def test_apply_scalar_native_no_python(spark):
     one aggregation exchange, zero Python/Arrow eval nodes."""
     plan = _plan(spark, "r1_apply_delta")
     assert plan.count("Exchange") <= 2, "apply must not regain a dedup shuffle"
-    for node in ("FlatMapGroupsInPandas", "FlatMapGroupsInArrow", "BatchEvalPython", "ArrowEvalPython"):
+    python_nodes = (
+        "MapInPandas", "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+        "BatchEvalPython", "ArrowEvalPython",
+    )
+    for node in python_nodes:
         assert node not in plan, f"native apply path regressed to {node}"
     # string-valued max_by buffers aggregate via SortAggregate; either way
     # it is one JVM aggregation with a map-side partial phase
@@ -56,7 +60,7 @@ def test_apply_scalar_native_no_python(spark):
 
 
 def _is_fold(plan: str) -> bool:
-    return "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan
+    return "MapInPandas" in plan
 
 
 def test_apply_native_gate_runs_fold(spark):
@@ -100,7 +104,7 @@ def test_apply_kernel_single_shuffle(spark):
     """Collection/ck tables keep the single-shuffle fold-kernel shape."""
     plan = _plan(spark, "r9_delta_full_mix")
     assert _is_fold(plan)
-    # exchanges: one for the kernel bucket groupBy (+ AQE bookkeeping)
+    # exchanges: one for the fold's repartition on the key (+ AQE bookkeeping)
     assert plan.count("Exchange") <= 2, "kernel must keep its single co-location shuffle"
 
 

@@ -92,7 +92,9 @@ def main() -> int:
             scols = df.columns
             srows = [tuple(r) for r in df.collect()]
         except Exception as e:  # noqa: BLE001
-            results[name] = {"status": "SPARK_ERROR", "error": str(e)[:300]}
+            results[name] = {
+                "status": "SPARK_ERROR", "secs": round(time.time() - t0, 2), "error": str(e)[:300]
+            }
             failed.append(name)
             continue
         entry = {"rows": len(srows), "secs": round(time.time() - t0, 2)}
@@ -151,7 +153,7 @@ def main() -> int:
         results[name] = entry
 
     for name, r in results.items():
-        line = f"{name:28s} {r.get('status'):11s} rows={r.get('rows', '-')}"
+        line = f"{name:28s} {r.get('status'):11s} rows={r.get('rows', '-')} secs={r['secs']}"
         if r.get("status") not in ("MATCH", "ROWS_ONLY"):
             line += " " + json.dumps({k: v for k, v in r.items() if k not in ("status", "rows", "secs")})[:400]
         print(line)
