@@ -4,10 +4,12 @@ Re-expresses the reference's replicator sink program (R1-R10, reference
 scylla-cdc-replicator/.../ReplicatorConsumer.java:37-124 and the
 operations/ handler tree) as batch DataFrame operators:
 
-* ``pair_range_deletes`` — J1 batch analog: pair the two bound rows of a
+* ``pair_range_deletes`` — J1 batch report: pair the two bound rows of a
   range delete per stream with ``lead()`` over the per-stream order
   (reference buffers the left bound in keyed state,
-  RangeDeleteState.java:8-38).
+  RangeDeleteState.java:8-38). Application does not use it: the fold
+  pairs the bounds itself, and a versioned state keeps an open left bound
+  for the next apply.
 * ``apply_cdc_log`` — cell-level CQL write semantics
   (insert/update/row-delete/partition-delete/range-delete, null-vs-unset
   via ``cdc$deleted_*``, non-frozen collection deltas, pre/post-image
@@ -65,6 +67,12 @@ from .normalize import TIME_MICROS, normalize_changes
 
 _SEQ = "cdc$batch_seq_no"
 _OP = "cdc$operation"
+# The op a replicated state row re-enters the next apply as, kept in the
+# state's seed-op column (``seed_op_column``): a live row is a full-row image
+# with its row marker (op 9) or without one (``_IMAGE_NO_MARKER``, an op no
+# CDC log carries), an open left range bound is its own op 5 or 6. NULL (a
+# state written before the column existed) reads as op 9.
+_IMAGE_NO_MARKER = 10
 
 
 def pair_range_deletes(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
@@ -117,6 +125,7 @@ def _plain_desc(desc: CdcTableDescriptor) -> dict:
         "ck": list(desc.clustering_keys),
         "regular": list(desc.regular_columns),
         "kinds": kinds,
+        "seed_op": seed_op_column(desc),
         "udt_fields": {
             col: [f.name for f in desc.base_field(col).dataType.fields]
             for col in desc.regular_columns
@@ -143,6 +152,33 @@ def internal_prefix(names) -> str:
     return p
 
 
+def seed_op_column(desc: CdcTableDescriptor) -> str:
+    """The name of the versioned state's seed-op column: ``<prefix>seed_op``
+    with the ``internal_prefix`` of the state's columns, so it shadows no
+    base column."""
+    return internal_prefix([*desc.base_schema.names, TIME_MICROS]) + "seed_op"
+
+
+def state_schema(desc: CdcTableDescriptor) -> T.StructType:
+    """The schema of a versioned state (``with_version_col=True``): the
+    base schema, ``cdc$time_micros`` and the seed-op column."""
+    return T.StructType(
+        [
+            *desc.base_schema.fields,
+            T.StructField(TIME_MICROS, T.LongType()),
+            T.StructField(seed_op_column(desc), T.ByteType()),
+        ]
+    )
+
+
+def state_rows(state: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
+    """The rows of a versioned state (``with_version_col=True``): base
+    columns and ``cdc$time_micros``, without the open range bounds and the
+    seed-op column."""
+    k = seed_op_column(desc)
+    return state.where(f"coalesce({sql_ident(k)}, 9) NOT IN (5, 6)").drop(k)
+
+
 def _apply_scalar_native(
     changes: DataFrame, cols: list[str], d: dict, out_cols: list[str]
 ) -> DataFrame:
@@ -157,9 +193,10 @@ def _apply_scalar_native(
 
     * per pk: latest tombstone ``(t, seq)`` (row and partition deletes
       coincide without a clustering key, and range deletes cannot exist),
-      latest marker write (insert/post-image), and per column the latest
-      *written* state (a value or an explicit ``cdc$deleted_*`` tombstone;
-      op-9 images write every column);
+      latest marker write (insert/post-image, or a seeded image without
+      the marker, which clears it), and per column the latest *written*
+      state (a value or an explicit ``cdc$deleted_*`` tombstone; images
+      write every column);
     * a cell is live iff its last write is newer than the tombstone and
       carried a value; the row is emitted iff the marker or any cell is
       live.
@@ -175,14 +212,17 @@ def _apply_scalar_native(
     pk, regular = d["pk"], d["regular"]
     op = f"CAST({sql_ident(_OP)} AS INT)"
     order = f"named_struct('t', {sql_ident(TIME_MICROS)}, 's', CAST({sql_ident(_SEQ)} AS INT))"
-    is_write = f"{op} IN (1, 2, 9)"
+    image = f"{op} IN (9, {_IMAGE_NO_MARKER})"
+    is_write = f"({op} IN (1, 2) OR {image})"
+    marks = f"CASE WHEN {op} IN (2, 9, {_IMAGE_NO_MARKER}) THEN {order} END"
     aggs = {
         "del": f"max(CASE WHEN {op} IN (3, 4) THEN {order} END)",
-        "marker": f"max(CASE WHEN {op} IN (2, 9) THEN {order} END)",
+        "marker": f"max({marks})",
+        "marked": f"max_by({op} <> {_IMAGE_NO_MARKER}, {marks})",
         "ver": f"max(CASE WHEN {is_write} THEN {sql_ident(TIME_MICROS)} END)",
     }
     for i, c in enumerate(regular):
-        written = [f"{sql_ident(c)} IS NOT NULL", f"{op} = 9"]
+        written = [f"{sql_ident(c)} IS NOT NULL", image]
         if DELETED_PREFIX + c in cols:
             written.append(f"coalesce({sql_ident(DELETED_PREFIX + c)}, false)")
         when = f"CASE WHEN {is_write} AND ({' OR '.join(written)}) THEN {order} END"
@@ -197,10 +237,11 @@ def _apply_scalar_native(
 
     tomb = f"coalesce({a}.del, named_struct('t', CAST({-(2**63)} AS BIGINT), 's', 0))"
     live = [f"{a}.w{i} > {tomb}" for i in range(len(regular))]
-    alive = [f"coalesce({a}.marker > {tomb}, false)"]
-    alive += [f"({w} AND {a}.v{i} IS NOT NULL)" for i, w in enumerate(live)]
+    marker = f"coalesce({a}.marked AND {a}.marker > {tomb}, false)"
+    alive = [marker, *[f"({w} AND {a}.v{i} IS NOT NULL)" for i, w in enumerate(live)]]
     value = {c: f"CASE WHEN {live[i]} THEN {a}.v{i} END" for i, c in enumerate(regular)}
     value[TIME_MICROS] = f"{a}.ver"
+    value[d["seed_op"]] = f"CAST(CASE WHEN {marker} THEN 9 ELSE {_IMAGE_NO_MARKER} END AS TINYINT)"
     return grouped.where(" OR ".join(alive)).selectExpr(
         *[sql_ident(c) if c in pk else f"{value[c]} AS {sql_ident(c)}" for c in out_cols]
     )
@@ -221,14 +262,21 @@ def apply_cdc_log(
     Output schema = the base-table schema (list columns materialized back
     to arrays in timeuuid order, O3).
 
-    ``with_version_col=True`` appends ``cdc$time_micros`` = the time of the
-    last change applied to each surviving row. Feeding that state back as
+    ``with_version_col=True`` returns a *versioned state* (``state_schema``):
+    it appends ``cdc$time_micros`` = the time of the last change applied to
+    each surviving row, and the seed-op column, which records whether the
+    row has its row marker. A CQL partition whose last range delete still
+    waits for its right bound keeps one more row there: the open left
+    bound's clustering prefix (trailing NULLs) at its own time, no regular
+    value (``state_rows`` leaves such rows out). Feeding that state back as
     ``initial_state`` of a later apply makes incremental application
     convergent under at-least-once replay at *row* granularity — the Spark
     analog of the reference's idempotent ``USING TIMESTAMP`` writes
     (ExecutingPreparedStatementHandler.java:45-53), which are convergent at
     *cell* granularity. A replayed change older than the row's version sorts
-    before the seeded row in the fold and is overwritten by it.
+    before the seeded row in the fold and is overwritten by it, and an open
+    bound pairs with a right bound of the later apply, as the reference's
+    ``RangeDeleteState`` holds it (RangeDeleteState.java:8-38).
 
     ``as_of_micros`` enables TTL visibility: a write carrying ``cdc$ttl``
     (seconds — the reference passes it through verbatim via ``USING TTL``,
@@ -285,18 +333,26 @@ def apply_cdc_log(
     changes = changes.selectExpr(*[sql_ident(c) for c in cols])
 
     if initial_state is not None:
-        # Seed rows enter the fold as POST_IMAGE (op 9) full-row images: the
-        # kernel applies them as whole-row overwrites, so any *replayed*
-        # change older than the row's version (which the seed already
-        # reflects) is clobbered by the seed rather than merged — the delta
-        # semantics that would otherwise resurrect tombstoned cells. The
-        # union fills the change-only columns with typed NULLs.
+        # Seed rows enter the fold as full-row images (op 9, or op 10 for a
+        # row without its marker): the kernel applies them as whole-row
+        # overwrites, so any *replayed* change older than the row's version
+        # (which the seed already reflects) is clobbered by the seed rather
+        # than merged — the delta semantics that would otherwise resurrect
+        # tombstoned cells. The union fills the change-only columns with
+        # typed NULLs.
         seed_schema = initial_state.schema
+        # max-int seq: the seed wins (time, seq) ties against a replayed
+        # copy of the exact change it already reflects
+        op_sql, seq_sql = f"CAST({int(OperationType.POST_IMAGE)} AS TINYINT)", f"{2**31 - 1}"
+        if d["seed_op"] in seed_schema.names:
+            # a versioned state: its open range bound enters as its op 5/6
+            # at its own time, with a seq that sorts before its right bound
+            k = sql_ident(d["seed_op"])
+            op_sql = f"coalesce({k}, {op_sql})"
+            seq_sql = f"CASE WHEN {k} IN (5, 6) THEN -1 ELSE {seq_sql} END"
         seed = {
-            # max-int seq: the seed wins (time, seq) ties against a replayed
-            # copy of the exact change it already reflects
-            _SEQ: f"{2**31 - 1} AS {sql_ident(_SEQ)}",
-            _OP: f"CAST({int(OperationType.POST_IMAGE)} AS TINYINT) AS {sql_ident(_OP)}",
+            _SEQ: f"{seq_sql} AS {sql_ident(_SEQ)}",
+            _OP: f"{op_sql} AS {sql_ident(_OP)}",
             TIME_MICROS: f"CAST({-(2**62)} AS BIGINT) AS {sql_ident(TIME_MICROS)}",
         }
         for c in seed_schema.names:
@@ -316,11 +372,7 @@ def apply_cdc_log(
             allowMissingColumns=True,
         )
 
-    out_schema = desc.base_schema
-    if with_version_col:
-        out_schema = T.StructType(
-            [*out_schema.fields, T.StructField(TIME_MICROS, T.LongType())]
-        )
+    out_schema = state_schema(desc) if with_version_col else desc.base_schema
 
     out_names = [f.name for f in out_schema.fields]
     scalar_only = all(k == "scalar" for k in d["kinds"].values())
@@ -363,9 +415,11 @@ def _make_fold_kernel(
 
     GREGORIAN = 0x01B21DD213814000
     pk_cols, ck_cols, regular, kinds = d["pk"], d["ck"], d["regular"], d["kinds"]
-    udt_fields = d["udt_fields"]
-    # mode-dependent op filtering happens before the kernel; op 9 rows are
-    # always applied as full-row images here (real post-images or seeds)
+    udt_fields, seed_op = d["udt_fields"], d["seed_op"]
+    # mode-dependent op filtering happens before the kernel; op 9 and 10
+    # rows are always applied as full-row images here (real post-images or
+    # seeds), op 10 without the row marker
+    no_marker = _IMAGE_NO_MARKER
 
     def timeuuid_key(u: str):
         import uuid as _uuid
@@ -485,8 +539,9 @@ def _make_fold_kernel(
                 return int(x)
             return x
 
-        def emit(pk_t, part, out):
-            # append the live rows of one folded CQL partition to ``out``
+        def emit(pk_t, part, pending, out):
+            # append the live rows of one folded CQL partition to ``out``,
+            # and to a versioned state its open left range bound
             for ck_t, entry in part.items():
                 cells, marker = entry["cells"], entry["marker"]
                 if as_of is not None:
@@ -527,6 +582,7 @@ def _make_fold_kernel(
                     rec[c] = v
                 if with_version:
                     rec[TIME_MICROS] = entry.get("ver")
+                    rec[seed_op] = 9 if marker else no_marker
                 for col in regular:
                     v = cells.get(col)
                     kind = kinds[col]
@@ -539,11 +595,18 @@ def _make_fold_kernel(
                     else:
                         rec[col] = v
                 out.append(rec)
+            if with_version and pending is not None:
+                ck_t, inclusive, t = pending
+                rec = dict.fromkeys(out_cols)
+                rec.update(zip(pk_cols, pk_t))
+                rec.update(zip(ck_cols, ck_t))
+                rec[TIME_MICROS], rec[seed_op] = t, 5 if inclusive else 6
+                out.append(rec)
 
         # state of the current CQL partition only, carried across batches:
-        # its ck -> entry rows, its open left range bound (the reference
-        # buffers one per stream, RangeDeleteState), and the last ChangeId
-        # applied, for P2 dedup
+        # its ck -> entry rows, its open left range bound (ck prefix,
+        # inclusive, time; the reference buffers one per stream,
+        # RangeDeleteState), and the last ChangeId applied, for P2 dedup
         pk_t, part, pending, last_id = None, {}, None, None
         for pdf in batches:
             pdf.columns = in_cols
@@ -565,7 +628,7 @@ def _make_fold_kernel(
                     for a in pk_arrs
                 )
                 if key != pk_t:
-                    emit(pk_t, part, out)
+                    emit(pk_t, part, pending, out)
                     pk_t, part, pending, last_id = key, {}, None, None
                 sid = sid_arr[x] if sid_arr is not None else None
                 if sid is not None:
@@ -583,11 +646,11 @@ def _make_fold_kernel(
                     pending = None
                     continue
                 if op in (5, 6):
-                    pending = (ck_t, op == 5)
+                    pending = (ck_t, op == 5, int(time_arr[x]))
                     continue
                 if op in (7, 8):
                     if pending is not None:
-                        lb, lincl = pending
+                        lb, lincl, _ = pending
                         rincl = op == 7
                         doomed = [
                             k
@@ -613,6 +676,8 @@ def _make_fold_kernel(
                 if op in (2, 9):
                     entry["marker"] = True
                     entry["marker_exp"] = exp_val
+                elif op == no_marker:
+                    entry["marker"] = False
                 for col in regular:
                     arr = reg_arrs[col]
                     value = arr[x] if arr is not None else None
@@ -620,7 +685,7 @@ def _make_fold_kernel(
                         value = iv(value)
                     else:
                         value = sv(value) if isinstance(value, float) else value
-                    if op == 9:
+                    if op >= 9:
                         # full-row image (real post-image, or an initial_state
                         # seed row): overwrite every column — absent value is an
                         # absent cell, collections replaced not merged
@@ -650,7 +715,7 @@ def _make_fold_kernel(
             if out:
                 yield pd.DataFrame(out, columns=out_cols)
         out = []
-        emit(pk_t, part, out)
+        emit(pk_t, part, pending, out)
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 

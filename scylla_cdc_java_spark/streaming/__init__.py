@@ -12,6 +12,13 @@ sink, and the checkpointLocation as the CDCStateStore.
 ``<work>/checkpoint``) and one materialized-state rule (the version
 column ``cdc$time_micros`` dropped; an empty base-schema frame before the
 first commit).
+
+Cross-batch pairing has no operator of its own: a range delete's left
+bound that waits for its right bound in a later micro-batch is a row of
+the sink's committed state (the reference's ``RangeDeleteState``,
+RangeDeleteState.java:8-38), and the apply kernel pairs it when the right
+bound arrives. A post-image (R8) is applied as a full-row image without
+its delta row, so it needs no pairing.
 """
 
 from .consumer import (  # noqa: F401
@@ -20,10 +27,6 @@ from .consumer import (  # noqa: F401
     run_with_retries,
     tumbling_window_counts,
     with_confidence_window,
-)
-from .pairing import (  # noqa: F401
-    pair_postimages_stream,
-    pair_range_deletes_stream,
 )
 from .replicator import ReplicatorSink, replicate_available_now  # noqa: F401
 from .evolution import (  # noqa: F401

@@ -5,6 +5,16 @@ against a destination cluster (ReplicatorConsumer.java:110-124). Here the
 destination is a **copy-on-write bucketed parquet table** driven from
 ``foreachBatch``:
 
+* a state row is a base-table row plus its version ``cdc$time_micros``
+  and the seed-op column (``apply.state_schema``, ``__seed_op`` unless a
+  base column starts with ``__``): 9 for a row with its row marker, 10
+  for one without (written by updates only), 5 or 6 for a CQL partition's
+  open left range bound (clustering prefix, its own ``cdc$time_micros``,
+  no regular value), held until the right bound arrives in a later batch,
+  as the reference's ``RangeDeleteState`` holds it
+  (RangeDeleteState.java:8-38). A bucket file written before the column
+  existed reads it as NULL: a row with its marker. ``current_state`` leaves
+  out open bounds and the column;
 * state rows are hash-bucketed on the partition key (``xxhash64 % n``);
 * a microbatch reads the current files of the buckets it touches (under
   the descriptor's state schema, so no footer-merge job runs), folds the
@@ -130,11 +140,16 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..model.schema import CdcTableDescriptor
 from ..model.statestore import commit_json
-from ..operators.apply import apply_cdc_log, internal_prefix, sql_ident
+from ..operators.apply import (
+    apply_cdc_log,
+    internal_prefix,
+    sql_ident,
+    state_rows,
+    state_schema,
+)
 from ..operators.normalize import TIME_MICROS, normalize_changes
 from .consumer import CDCStreamConsumer
 
@@ -151,14 +166,21 @@ def _bucket_expr(pk_cols: list[str], n: int):
     return F.expr(f"CAST(pmod(xxhash64({keys}), {n}) AS INT)")
 
 
-def _observed(seen: Observation) -> tuple[int, int | None]:
+_BATCH_STATS = ("count(1)", f"max({sql_ident(TIME_MICROS)})")
+
+
+def _observed(seen: Observation, changes: DataFrame) -> tuple[int, int | None]:
     """The batch's (row count, newest ``cdc$time_micros``) from the write
     job. Adaptive execution (on when the sink is called outside a stream)
-    prunes the observed node from a plan over an empty batch, and the
-    observation then completes with an empty row, which ``Observation.get``
-    cannot convert: that is an empty batch."""
+    prunes the observed node from a plan whose write input turns out
+    empty — an empty batch, or one that deleted every row it read — and
+    the observation then completes with an empty row, which
+    ``Observation.get`` cannot convert: only then are the unobserved
+    ``changes`` counted by a job of their own."""
     row = seen._jo.getRow()
-    return (row.get(0), row.get(1)) if row.length() else (0, None)
+    if row.length():
+        return row.get(0), row.get(1)
+    return tuple(changes.selectExpr(*_BATCH_STATS).first())
 
 
 def _data_bytes(bucket_dir: str) -> int:
@@ -256,10 +278,12 @@ class ReplicatorSink:
         return buckets, sizes
 
     def _read_buckets(self, spark: SparkSession, manifest: dict, buckets) -> DataFrame | None:
-        """The given buckets' rows, read under the descriptor's state schema
-        (base schema + ``cdc$time_micros``): a column or UDT field that a
-        bucket file written before an ALTER ADD lacks reads NULL, one an
-        ALTER DROP removed is not read, and no footer-merge job runs."""
+        """The given buckets' rows, open bounds included, read under the
+        descriptor's state schema (base schema + ``cdc$time_micros`` + the
+        seed-op column): a column or UDT field that a bucket file written
+        before an ALTER ADD lacks reads NULL (so does the seed-op column of
+        a file written before it existed), one an ALTER DROP removed is not
+        read, and no footer-merge job runs."""
         paths = [
             os.path.join(self.state_dir, manifest["buckets"][b])
             for b in buckets
@@ -267,14 +291,17 @@ class ReplicatorSink:
         ]
         if not paths:
             return None
-        schema = T.StructType(
-            [*self.desc.base_schema.fields, T.StructField(TIME_MICROS, T.LongType())]
-        )
-        return spark.read.schema(schema).parquet(*paths)
+        return spark.read.schema(state_schema(self.desc)).parquet(*paths)
 
     def current_state(self, spark: SparkSession) -> DataFrame | None:
         """The latest committed state across all buckets (version col
-        included), under the current descriptor's schema."""
+        included), under the current descriptor's schema: its rows, without
+        the open range bounds and the seed-op column."""
+        state = self._committed_state(spark)
+        return None if state is None else state_rows(state, self.desc)
+
+    def _committed_state(self, spark: SparkSession) -> DataFrame | None:
+        """Every row of the latest committed version, open bounds included."""
         manifest = self._latest_manifest()
         if manifest is None:
             return None
@@ -296,7 +323,7 @@ class ReplicatorSink:
         per destructive ALTER is the honest cost. Returns False when
         there is no committed state. Never run concurrently with the
         streaming writer (same rule as vacuum)."""
-        state = self.current_state(spark)
+        state = self._committed_state(spark)
         if state is None:
             return False
         manifest = self._latest_manifest()
@@ -357,9 +384,8 @@ class ReplicatorSink:
             return
         n = self._bucket_count(manifest)
         seen = Observation()
-        batch_df = normalize_changes(batch_df).observe(
-            seen, F.expr("count(1)"), F.expr(f"max({sql_ident(TIME_MICROS)})")
-        )
+        changes = normalize_changes(batch_df)
+        batch_df = changes.observe(seen, *[F.expr(e) for e in _BATCH_STATS])
         old = manifest["buckets"]
         if n > 1 and n == manifest.get("n_buckets"):
             # only here does the read set depend on the batch: one pass over
@@ -384,7 +410,7 @@ class ReplicatorSink:
         write_start = time.time()
         buckets, sizes = self._write_buckets(new_state, version, n)
         write_ms = round(1e3 * (time.time() - write_start))
-        rows, max_time = _observed(seen)
+        rows, max_time = _observed(seen, changes)
         if not rows:
             # a no-data batch (the watermark moved): keep the state as it is
             shutil.rmtree(os.path.join(self.state_dir, f"v{version}"))

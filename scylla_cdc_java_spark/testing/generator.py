@@ -12,6 +12,7 @@ Fixture schemas mirror ReplicatorCorrectnessTestIT.java:193-252.
 from __future__ import annotations
 
 import random
+import zlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -125,7 +126,9 @@ class CdcLogGenerator:
         return self._t
 
     def _stream_for(self, pk_tuple) -> bytes:
-        h = hash(pk_tuple) & 0x7FFFFFFF
+        # crc32, not hash(): str hashes are salted per process, and a seeded
+        # log must encode the same stream ids in every process
+        h = zlib.crc32(repr(pk_tuple).encode()) & 0x7FFFFFFF
         return make_stream_id(h % self.n_vnodes, index=h % 4)
 
     def _fresh_uuid(self, micros: int) -> str:

@@ -301,14 +301,20 @@ def test_streaming_window_counts_and_dedup(spark, tmp_path):
     assert total is None or total <= len(rows)
 
 
+def _write_files(spark, schema, chunks, src):
+    """One parquet file per chunk, with distinct mtimes, so a stream with
+    ``maxFilesPerTrigger=1`` reads them one per micro-batch, in order."""
+    os.makedirs(src)
+    for chunk in chunks:
+        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("append").parquet(src)
+        time.sleep(1.1)
+
+
 def test_range_delete_pairing_across_batches(spark, tmp_path):
-    """J1 keyed state: a left bound in batch 1 pairs with its right bound
-    arriving in batch 2 — impossible for the batch lead() analog."""
-    import os
-    import time as _time
-
-    from scylla_cdc_java_spark.streaming import pair_range_deletes_stream
-
+    """J1 across micro-batches: each range delete's left bound lands in an
+    earlier file, and so an earlier trigger, than its right bound. The sink
+    keeps the open bound in its state until the right bound arrives, and
+    the replicated state equals the DML replay."""
     desc = FIXTURE_TABLES["tbl_multiple_clustering_keys"]
     dml = [
         *[("insert", ("p",), (i, j), {"v": i * 10 + j}) for i in range(2) for j in range(2)],
@@ -316,89 +322,140 @@ def test_range_delete_pairing_across_batches(spark, tmp_path):
         ("range_delete", ("q",), ((2, None), False), ((4, None), True)),
     ]
     rows = CdcLogGenerator(desc).encode(dml)
-    # split so each range delete's left bound lands in an earlier file than
-    # its right bound (bounds are the last 4 rows: L1 R1 L2 R2)
     schema = build_cdc_log_schema(desc)
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    for i, chunk in enumerate([rows[:-3], rows[-3:-1], rows[-1:]]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes → deterministic file order
-
-    stream = spark.readStream.schema(schema).format("parquet").option(
-        "maxFilesPerTrigger", 1
-    ).load(src)
-    paired = pair_range_deletes_stream(stream, desc)
-    q = (
-        paired.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("paired_rd")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    # the bounds are the last 4 rows: L1 R1 L2 R2
+    _write_files(spark, schema, [rows[:-3], rows[-3:-1], rows[-1:]], src)
+    state = replicate_available_now(
+        spark, src, schema, desc, str(tmp_path / "work"), max_files_per_trigger=1
     )
-    q.awaitTermination()
-    got = {
-        (r["pk"], r["left_ck1"], r["left_ck2"], r["right_ck1"], r["right_ck2"],
-         r["left_inclusive"], r["right_inclusive"])
-        for r in spark.sql("select * from paired_rd").collect()
-    }
-    assert got == {
-        ("p", 0, 0, 1, None, True, False),
-        ("q", 2, None, 4, None, False, True),
-    }
+    _assert_state_matches(desc, state, dml)
 
 
 # full: cross-batch pairing representative kept = range_delete variant;
 # postimage semantics pinned by the j2/r8 oracle gates.
 @pytest.mark.full
 def test_postimage_pairing_across_batches(spark, tmp_path):
-    """J2 keyed state: op-kind remembered across microbatch boundary."""
-    import copy
-    import os
-    import time as _time
-
-    from scylla_cdc_java_spark.streaming import pair_postimages_stream
-
+    """R8 across micro-batches: a postimage-mode replication whose delta
+    rows and post-images land in different files, one per trigger, equals
+    the DML replay."""
     desc = FIXTURE_TABLES["tbl_simple"]
-    gen = CdcLogGenerator(desc)
-    rows = gen.encode(
-        [
-            ("insert", ("a",), (1,), {"v1": 1, "v2": "x"}),
-            ("update", ("a",), (1,), {"v1": 2}),
-        ]
-    )
+    dml = [
+        ("insert", ("a",), (1,), {"v1": 1, "v2": "x"}),
+        ("update", ("a",), (1,), {"v1": 2}),
+    ]
+    rows = CdcLogGenerator(desc).encode(dml)
     images = []
-    for r in rows:
-        img = copy.deepcopy(r)
-        img["cdc$operation"] = 9
-        img["cdc$batch_seq_no"] = r["cdc$batch_seq_no"] + 1
-        images.append(img)
+    for i, r in enumerate(rows):
+        # the row as the statement left it, at the delta row's cdc$time
+        [after] = replay_dml(desc, dml[: i + 1])
+        images.append({**r, **after, "cdc$operation": 9, "cdc$batch_seq_no": 1})
     schema = build_cdc_log_schema(desc)
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    # delta rows in batch 1, their post-images in batch 2
-    for chunk in ([rows[0], images[0], rows[1]], [images[1]]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
+    _write_files(spark, schema, [[rows[0], images[0], rows[1]], [images[1]]], src)
+    state = replicate_available_now(
+        spark, src, schema, desc, str(tmp_path / "work"), mode="postimage",
+        max_files_per_trigger=1,
+    )
+    _assert_state_matches(desc, state, dml)
 
-    stream = spark.readStream.schema(schema).format("parquet").option(
-        "maxFilesPerTrigger", 1
-    ).load(src)
-    tagged = pair_postimages_stream(stream, desc)
-    q = (
-        tagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tagged_pi")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+
+def _sink_dml(desc, rng, n):
+    """Random statements over 2 partition keys x 3 clustering values: inserts,
+    one-column updates (of rows never inserted too, so without a row
+    marker), NULL cell writes, row, partition and range deletes (bounds on a
+    clustering prefix, either inclusivity)."""
+    n_ck = len(desc.clustering_keys)
+
+    def value(c):
+        if rng.random() < 0.5:
+            return None
+        if desc.base_field(c).dataType.typeName() == "string":
+            return "s%d" % rng.randrange(9)
+        return rng.randrange(9)
+
+    dml = []
+    for _ in range(n):
+        pk = ("p%d" % rng.randrange(2),)
+        ck = tuple(rng.randrange(3) for _ in range(n_ck))
+        roll = rng.random()
+        if roll < 0.15:
+            dml.append(("insert", pk, ck, {c: value(c) for c in desc.regular_columns}))
+        elif roll < 0.7:
+            c = rng.choice(desc.regular_columns)
+            dml.append(("update", pk, ck, {c: value(c)}))
+        elif roll < 0.85:
+            dml.append(("row_delete", pk, ck))
+        elif roll < 0.9 or not n_ck:
+            dml.append(("partition_delete", pk))
+        else:
+            k = rng.randrange(1, n_ck + 1)
+            lo = tuple(rng.randrange(2) if i < k else None for i in range(n_ck))
+            hi = tuple(rng.randrange(1, 3) if i < k else None for i in range(n_ck))
+            dml.append(("range_delete", pk, (lo, rng.random() < 0.5), (hi, rng.random() < 0.5)))
+    return dml
+
+
+def _ckless_table():
+    from pyspark.sql import types as T
+
+    from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
+
+    return CdcTableDescriptor(
+        name="tbl_ckless",
+        base_schema=T.StructType(
+            [T.StructField("pk", T.StringType()), T.StructField("v1", T.IntegerType()),
+             T.StructField("v2", T.StringType())]
+        ),
+        partition_keys=["pk"],
     )
-    q.awaitTermination()
-    got = sorted(
-        (r["pk"], r["ck"], r["stmt_kind"]) for r in spark.sql("select * from tagged_pi").collect()
-    )
-    assert got == [("a", 1, 1), ("a", 1, 2)]
+
+
+@pytest.mark.parametrize("table", ["tbl_simple", "tbl_multiple_clustering_keys", "tbl_ckless"])
+def test_sink_calls_match_replay_at_every_cut(spark, table, tmp_path):
+    """Sink differential: a seeded log in time order, no redelivery, cut at
+    random row positions into direct ``ReplicatorSink`` calls, one cut
+    between the two bound rows of a range delete that removes rows. After
+    every call the state equals the replay of the statements delivered
+    whole so far: an open left bound waits in the state for its right
+    bound, a row written only by updates keeps no row marker across calls,
+    and a call that deletes every row is committed."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = _ckless_table() if table == "tbl_ckless" else FIXTURE_TABLES[table]
+    rng = random.Random(13)
+    dml = _sink_dml(desc, rng, n=60)
+    gen = CdcLogGenerator(desc, seed=13)
+    # ends[i]: the row count once statement i is encoded
+    ends = [len(gen.encode([stmt])) for stmt in dml]
+    rows = gen.encode([])
+    cuts = set(rng.sample(range(1, len(rows)), 9))
+    splits = [
+        ends[i] - 1
+        for i, stmt in enumerate(dml)
+        if stmt[0] == "range_delete" and replay_dml(desc, dml[:i]) != replay_dml(desc, dml[: i + 1])
+    ]
+    assert bool(splits) == bool(desc.clustering_keys)
+    if splits:
+        cuts.add(rng.choice(splits))
+    # a last call deletes every partition: it writes no row, and the sink
+    # must still commit it
+    cuts.add(len(rows))
+    tail = [("partition_delete", ("p%d" % i,)) for i in range(2)]
+    ends += [len(gen.encode([stmt])) for stmt in tail]
+    dml += tail
+    rows = gen.encode([])
+    schema = build_cdc_log_schema(desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    prev = 0
+    for call, cut in enumerate([*sorted(cuts), len(rows)]):
+        sink(spark.createDataFrame(rows[prev:cut], schema), call)
+        prev = cut
+        delivered = dml[: sum(e <= cut for e in ends)]
+        state = sink.current_state(spark)
+        if state is None:
+            state = spark.createDataFrame([], desc.base_schema)
+        _assert_state_matches(desc, state, delivered)
 
 
 def test_run_with_retries_logs_each_failure(caplog):

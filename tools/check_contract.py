@@ -8,6 +8,9 @@ rounded to 9 significant digits, timestamps to ISO micros, rows sorted).
 
 Usage: PYTHONPATH=/root/repo python tools/check_contract.py \
     [--sf-dir /root/testdata/sf0.01] [--only name1,name2] [-v]
+
+Each run also rewrites plans/contract_runs.json with every checked gate's
+status, row count and seconds.
 """
 
 from __future__ import annotations
@@ -19,7 +22,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# per-gate results of the last run, rewritten by each run
+RUNS_PATH = os.path.join(REPO, "plans", "contract_runs.json")
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
@@ -157,6 +163,11 @@ def main() -> int:
         if r.get("status") not in ("MATCH", "ROWS_ONLY"):
             line += " " + json.dumps({k: v for k, v in r.items() if k not in ("status", "rows", "secs")})[:400]
         print(line)
+    with open(RUNS_PATH, "w") as fh:
+        gates = {
+            name: {k: r.get(k) for k in ("status", "rows", "secs")} for name, r in results.items()
+        }
+        json.dump({"sf_dir": args.sf_dir, "gates": gates}, fh, indent=1)
     n_match = sum(1 for r in results.values() if r.get("status") == "MATCH")
     print(f"\n{n_match}/{len(results)} MATCH; failed: {failed or 'none'}")
     spark.stop()
