@@ -70,9 +70,13 @@ _OP = "cdc$operation"
 # The op a replicated state row re-enters the next apply as, kept in the
 # state's seed-op column (``seed_op_column``): a live row is a full-row image
 # with its row marker (op 9) or without one (``_IMAGE_NO_MARKER``, an op no
-# CDC log carries), an open left range bound is its own op 5 or 6. NULL (a
-# state written before the column existed) reads as op 9.
+# CDC log carries), a deleted row is a row tombstone (op 3), an open left
+# range bound is its own op 5 or 6. NULL (a state written before the column
+# existed) reads as op 9.
 _IMAGE_NO_MARKER = 10
+# the seq a seeded row tombstone re-enters at: after every change at its
+# time (a redelivered one included), before the op 9/10 image at that time
+_TOMBSTONE_SEQ = 2**31 - 2
 
 
 def pair_range_deletes(changes: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
@@ -171,12 +175,17 @@ def state_schema(desc: CdcTableDescriptor) -> T.StructType:
     )
 
 
+def live_row_sql(desc: CdcTableDescriptor) -> str:
+    """SQL: a row of a versioned state is a live row (seed op 9 or 10), not
+    a row tombstone or an open range bound."""
+    return f"coalesce({sql_ident(seed_op_column(desc))}, 9) IN (9, {_IMAGE_NO_MARKER})"
+
+
 def state_rows(state: DataFrame, desc: CdcTableDescriptor) -> DataFrame:
     """The rows of a versioned state (``with_version_col=True``): base
-    columns and ``cdc$time_micros``, without the open range bounds and the
-    seed-op column."""
-    k = seed_op_column(desc)
-    return state.where(f"coalesce({sql_ident(k)}, 9) NOT IN (5, 6)").drop(k)
+    columns and ``cdc$time_micros`` of its live rows, without the row
+    tombstones, the open range bounds and the seed-op column."""
+    return state.where(live_row_sql(desc)).drop(seed_op_column(desc))
 
 
 def _apply_scalar_native(
@@ -199,7 +208,10 @@ def _apply_scalar_native(
       write every column);
     * a cell is live iff its last write is newer than the tombstone and
       carried a value; the row is emitted iff the marker or any cell is
-      live.
+      live. A versioned state (``out_cols`` holds the seed-op column) keeps
+      every other key as a row tombstone at its latest change: the state
+      after it is empty, so a redelivered older write sorts before it and
+      stays dead.
 
     Because every aggregate is max/max_by, at-least-once redelivery (P2)
     deduplicates for free, partial aggregation runs map-side, and the one
@@ -238,11 +250,17 @@ def _apply_scalar_native(
     tomb = f"coalesce({a}.del, named_struct('t', CAST({-(2**63)} AS BIGINT), 's', 0))"
     live = [f"{a}.w{i} > {tomb}" for i in range(len(regular))]
     marker = f"coalesce({a}.marked AND {a}.marker > {tomb}, false)"
-    alive = [marker, *[f"({w} AND {a}.v{i} IS NOT NULL)" for i, w in enumerate(live)]]
+    alive = " OR ".join(
+        [marker, *[f"({w} AND {a}.v{i} IS NOT NULL)" for i, w in enumerate(live)]]
+    )
     value = {c: f"CASE WHEN {live[i]} THEN {a}.v{i} END" for i, c in enumerate(regular)}
-    value[TIME_MICROS] = f"{a}.ver"
-    value[d["seed_op"]] = f"CAST(CASE WHEN {marker} THEN 9 ELSE {_IMAGE_NO_MARKER} END AS TINYINT)"
-    return grouped.where(" OR ".join(alive)).selectExpr(
+    value[TIME_MICROS] = f"CASE WHEN {alive} THEN {a}.ver ELSE greatest({a}.del.t, {a}.ver) END"
+    value[d["seed_op"]] = (
+        f"CAST(CASE WHEN {marker} THEN 9 WHEN {alive} THEN {_IMAGE_NO_MARKER} ELSE 3 END AS TINYINT)"
+    )
+    if d["seed_op"] not in out_cols:
+        grouped = grouped.where(alive)
+    return grouped.selectExpr(
         *[sql_ident(c) if c in pk else f"{value[c]} AS {sql_ident(c)}" for c in out_cols]
     )
 
@@ -265,16 +283,20 @@ def apply_cdc_log(
     ``with_version_col=True`` returns a *versioned state* (``state_schema``):
     it appends ``cdc$time_micros`` = the time of the last change applied to
     each surviving row, and the seed-op column, which records whether the
-    row has its row marker. A CQL partition whose last range delete still
-    waits for its right bound keeps one more row there: the open left
-    bound's clustering prefix (trailing NULLs) at its own time, no regular
-    value (``state_rows`` leaves such rows out). Feeding that state back as
+    row has its row marker. A row that a delete removed (a row, partition
+    or range delete; on the fold also one whose last cell a write killed)
+    stays as a row tombstone: its key, the time of that change, seed op 3,
+    no regular value. A CQL partition whose last range delete still waits
+    for its right bound keeps one more row there: the open left bound's
+    clustering prefix (trailing NULLs) at its own time, no regular value
+    (``state_rows`` keeps only the live rows). Feeding that state back as
     ``initial_state`` of a later apply makes incremental application
     convergent under at-least-once replay at *row* granularity — the Spark
     analog of the reference's idempotent ``USING TIMESTAMP`` writes
     (ExecutingPreparedStatementHandler.java:45-53), which are convergent at
     *cell* granularity. A replayed change older than the row's version sorts
-    before the seeded row in the fold and is overwritten by it, and an open
+    before the seeded row and is overwritten by it, one older than a row
+    tombstone sorts before the tombstone and is deleted again, and an open
     bound pairs with a right bound of the later apply, as the reference's
     ``RangeDeleteState`` holds it (RangeDeleteState.java:8-38).
 
@@ -345,11 +367,15 @@ def apply_cdc_log(
         # copy of the exact change it already reflects
         op_sql, seq_sql = f"CAST({int(OperationType.POST_IMAGE)} AS TINYINT)", f"{2**31 - 1}"
         if d["seed_op"] in seed_schema.names:
-            # a versioned state: its open range bound enters as its op 5/6
-            # at its own time, with a seq that sorts before its right bound
+            # a versioned state: a row tombstone enters as a row delete at
+            # its time, after any replayed change at that time; an open range
+            # bound as its op 5/6 at its own time, before its right bound
             k = sql_ident(d["seed_op"])
             op_sql = f"coalesce({k}, {op_sql})"
-            seq_sql = f"CASE WHEN {k} IN (5, 6) THEN -1 ELSE {seq_sql} END"
+            seq_sql = (
+                f"CASE WHEN {k} IN (5, 6) THEN -1 WHEN {k} = 3 THEN {_TOMBSTONE_SEQ} "
+                f"ELSE {seq_sql} END"
+            )
         seed = {
             _SEQ: f"{seq_sql} AS {sql_ident(_SEQ)}",
             _OP: f"{op_sql} AS {sql_ident(_OP)}",
@@ -539,9 +565,10 @@ def _make_fold_kernel(
                 return int(x)
             return x
 
-        def emit(pk_t, part, pending, out):
+        def emit(pk_t, part, tombs, pending, out):
             # append the live rows of one folded CQL partition to ``out``,
-            # and to a versioned state its open left range bound
+            # and to a versioned state its row tombstones and its open left
+            # range bound
             for ck_t, entry in part.items():
                 cells, marker = entry["cells"], entry["marker"]
                 if as_of is not None:
@@ -595,19 +622,25 @@ def _make_fold_kernel(
                     else:
                         rec[col] = v
                 out.append(rec)
-            if with_version and pending is not None:
+            if not with_version:
+                return
+            marks = [(ck_t, t, 3) for ck_t, t in tombs.items() if ck_t not in part]
+            if pending is not None:
                 ck_t, inclusive, t = pending
+                marks.append((ck_t, t, 5 if inclusive else 6))
+            for ck_t, t, op in marks:
                 rec = dict.fromkeys(out_cols)
                 rec.update(zip(pk_cols, pk_t))
                 rec.update(zip(ck_cols, ck_t))
-                rec[TIME_MICROS], rec[seed_op] = t, 5 if inclusive else 6
+                rec[TIME_MICROS], rec[seed_op] = t, op
                 out.append(rec)
 
         # state of the current CQL partition only, carried across batches:
-        # its ck -> entry rows, its open left range bound (ck prefix,
+        # its ck -> entry rows, ck -> time of the change that last removed
+        # that row (a row tombstone), its open left range bound (ck prefix,
         # inclusive, time; the reference buffers one per stream,
         # RangeDeleteState), and the last ChangeId applied, for P2 dedup
-        pk_t, part, pending, last_id = None, {}, None, None
+        pk_t, part, tombs, pending, last_id = None, {}, {}, None, None
         for pdf in batches:
             pdf.columns = in_cols
             cols = {c: pdf[c].to_numpy() for c in in_cols}
@@ -628,8 +661,8 @@ def _make_fold_kernel(
                     for a in pk_arrs
                 )
                 if key != pk_t:
-                    emit(pk_t, part, pending, out)
-                    pk_t, part, pending, last_id = key, {}, None, None
+                    emit(pk_t, part, tombs, pending, out)
+                    pk_t, part, tombs, pending, last_id = key, {}, {}, None, None
                 sid = sid_arr[x] if sid_arr is not None else None
                 if sid is not None:
                     # P2 in-fold dedup: duplicate deliveries of one ChangeId
@@ -640,13 +673,15 @@ def _make_fold_kernel(
                         continue
                     last_id = change_id
                 op = int(op_arr[x])
+                t = int(time_arr[x])
                 ck_t = tuple(iv(a[x]) for a in ck_arrs)
                 if op == 4:  # partition delete
+                    tombs.update(dict.fromkeys(part, t))
                     part.clear()
                     pending = None
                     continue
                 if op in (5, 6):
-                    pending = (ck_t, op == 5, int(time_arr[x]))
+                    pending = (ck_t, op == 5, t)
                     continue
                 if op in (7, 8):
                     if pending is not None:
@@ -659,20 +694,21 @@ def _make_fold_kernel(
                         ]
                         for k in doomed:
                             del part[k]
+                            tombs[k] = t
                     pending = None
                     continue
-                if op == 3:  # row delete
+                if op == 3:  # row delete (or a seeded row tombstone)
                     part.pop(ck_t, None)
+                    tombs[ck_t] = t
                     continue
                 # writes: 1 update / 2 insert / 9 postimage
                 entry = part.get(ck_t)
+                was_live = entry is not None
                 if entry is None:
                     entry = part[ck_t] = {"marker": False, "cells": {}, "exp": {}}
-                entry["ver"] = int(time_arr[x])
+                entry["ver"] = t
                 ttl_val = sv(ttl_arr[x]) if ttl_arr is not None else None
-                exp_val = (
-                    int(time_arr[x]) + int(ttl_val) * 1_000_000 if ttl_val else None
-                )
+                exp_val = t + int(ttl_val) * 1_000_000 if ttl_val else None
                 if op in (2, 9):
                     entry["marker"] = True
                     entry["marker_exp"] = exp_val
@@ -710,12 +746,18 @@ def _make_fold_kernel(
                             entry["exp"][col] = exp_val
                         elif deleted:
                             entry["exp"].pop(col, None)
-                if not entry["marker"] and not entry["cells"]:
-                    del part[ck_t]  # update that wrote only tombstones to a dead row
+                if entry["marker"] or entry["cells"]:
+                    tombs.pop(ck_t, None)
+                else:
+                    # a write that left only tombstones: a live row it killed
+                    # keeps a row tombstone at this time
+                    del part[ck_t]
+                    if was_live:
+                        tombs[ck_t] = t
             if out:
                 yield pd.DataFrame(out, columns=out_cols)
         out = []
-        emit(pk_t, part, pending, out)
+        emit(pk_t, part, tombs, pending, out)
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 

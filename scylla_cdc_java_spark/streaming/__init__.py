@@ -2,9 +2,10 @@
 
 The reference is a streaming CDC consumer; this package is its idiomatic
 Spark expression: file-stream source over CDC-shaped parquet, watermark as
-the confidence window, ``dropDuplicatesWithinWatermark`` as the resume
-filter (always on), ``foreachBatch`` + the apply kernel as the replicator
-sink, and the checkpointLocation as the CDCStateStore.
+the confidence window, ``foreachBatch`` + the apply kernel as an idempotent
+replicator sink (row versions and row tombstones in its state, so the
+stream needs no stateful dedup), and the checkpointLocation as the
+CDCStateStore.
 
 ``replicate_available_now``, ``MultiTableConsumer`` and
 ``replicate_with_schema_evolution`` share one consumer -> sink runner

@@ -20,20 +20,29 @@ Mapping (SURVEY.md §2.9 / §3.1):
   GenerationBasedCDCMetadataModel.java:118-141).
 * T10 graceful stop         → ``StreamingQuery.stop()`` + awaitTermination
   (reference Worker.performActionsUntilStopRequested, Worker.java:132-151).
-* P2 dedup/resume           → ``dropDuplicatesWithinWatermark`` on the
-  change identity (reference Driver3WorkerCQL.java:162-173).
+* P2 dedup/resume           → an idempotent sink, as the reference's
+  ``USING TIMESTAMP`` writes are (ExecutingPreparedStatementHandler.java:
+  45-53): the replicator keeps row versions and row tombstones, so a
+  redelivered change converges without stream state. Changes older than
+  the confidence window are dropped by the sink's horizon, as the
+  watermark dropped late rows. ``dedup_within_watermark`` still composes
+  onto ``changes()`` for other consumers (reference
+  Driver3WorkerCQL.java:162-173).
 * K1 user consumer callback → ``foreachBatch`` (the batch is the Spark-native
   granularity; per-row callbacks would serialize the stream through Python).
 
-Scale posture: the source parallelism is file-split based; downstream
-stateful ops shuffle on their keys exactly once. The confidence watermark
-bounds state for dedup and window aggregations, so state size is
-O(streams x watermark), not O(history).
+Scale posture: the source parallelism is file-split based and the change
+stream itself keeps no state, so adaptive execution plans each
+micro-batch. Stateful operators composed downstream (dedup, windows)
+shuffle on their keys exactly once, and the confidence watermark bounds
+their state to O(streams x watermark), not O(history).
 """
 
 from __future__ import annotations
 
 import logging
+import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -118,9 +127,13 @@ class CDCStreamConsumer:
         ...
         consumer.stop(query)          # T10
 
-    Cross-batch dedup (P2) is always on: the replicator sink keeps no
-    tombstones, so a redelivered insert older than a later delete of the
-    same row would otherwise bring the deleted row back.
+    The change stream is stateless: cross-batch redelivery (P2) is the
+    sink's concern, and the replicator sink is idempotent (row versions and
+    row tombstones in its state, a horizon of one confidence window). A
+    checkpoint written while the stream still ran the stateful
+    ``dropDuplicatesWithinWatermark`` holds that operator's state under
+    ``state/``; Spark refuses to restart a stateless query on it, so
+    ``start`` deletes that directory, which holds nothing else.
     """
 
     spark: SparkSession
@@ -157,7 +170,7 @@ class CDCStreamConsumer:
         return self
 
     def changes(self) -> DataFrame:
-        """The normalized, watermarked, deduped change stream.
+        """The normalized, watermarked change stream (no stateful operator).
 
         The source is a file stream over CDC-shaped parquet: ``source_dir``
         may contain ``generation=<id>`` partition directories, which
@@ -168,12 +181,13 @@ class CDCStreamConsumer:
         reader = self.spark.readStream.schema(self.schema).format("parquet")
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        df = with_confidence_window(reader.load(self.source_dir), self.confidence_ms)
-        return dedup_within_watermark(df)
+        return with_confidence_window(reader.load(self.source_dir), self.confidence_ms)
 
     def _launch(self, writer):
         """Apply the checkpoint and trigger settings, then start."""
         if self.checkpoint_dir:
+            # the retired dedup operator's state (see the class docstring)
+            shutil.rmtree(os.path.join(self.checkpoint_dir, "state"), ignore_errors=True)
             writer = writer.option("checkpointLocation", self.checkpoint_dir)
         if self.available_now:
             writer = writer.trigger(availableNow=True)

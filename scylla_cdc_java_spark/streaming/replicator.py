@@ -8,13 +8,23 @@ destination is a **copy-on-write bucketed parquet table** driven from
 * a state row is a base-table row plus its version ``cdc$time_micros``
   and the seed-op column (``apply.state_schema``, ``__seed_op`` unless a
   base column starts with ``__``): 9 for a row with its row marker, 10
-  for one without (written by updates only), 5 or 6 for a CQL partition's
-  open left range bound (clustering prefix, its own ``cdc$time_micros``,
-  no regular value), held until the right bound arrives in a later batch,
-  as the reference's ``RangeDeleteState`` holds it
-  (RangeDeleteState.java:8-38). A bucket file written before the column
-  existed reads it as NULL: a row with its marker. ``current_state`` leaves
-  out open bounds and the column;
+  for one without (written by updates only), 3 for a row tombstone (the
+  key of a deleted row at the time it was deleted, no regular value), 5
+  or 6 for a CQL partition's open left range bound (clustering prefix,
+  its own ``cdc$time_micros``, no regular value), held until the right
+  bound arrives in a later batch, as the reference's ``RangeDeleteState``
+  holds it (RangeDeleteState.java:8-38). A bucket file written before the
+  column existed reads it as NULL: a row with its marker.
+  ``current_state`` keeps only the rows (9 and 10) and drops the column;
+* the sink is idempotent, as the reference's ``USING TIMESTAMP`` writes
+  are (ExecutingPreparedStatementHandler.java:45-53): a redelivered change
+  older than a row's version is overwritten by the row, and one older
+  than a row tombstone is deleted again, so the stream needs no stateful
+  dedup. The **horizon** is the newest ``cdc$time`` committed so far minus
+  the stream's confidence window (``confidence_ms``): a call drops the
+  batch rows older than it (the late rows the stream's watermark dropped
+  before), and the tombstones and open bounds older than it from the
+  buckets it writes (``_since`` says why the comparison is on structs);
 * state rows are hash-bucketed on the partition key (``xxhash64 % n``);
 * a microbatch reads the current files of the buckets it touches (under
   the descriptor's state schema, so no footer-merge job runs), folds the
@@ -44,21 +54,23 @@ destination is a **copy-on-write bucketed parquet table** driven from
   stream (no query id) every call applies; application is row-LWW, so a
   repeat converges anyway.
 
-**Spark jobs per trigger.** One, wherever the read set follows from the
-manifest alone: at one bucket (every state below ``2T``) it is the one
-live bucket, and on a trigger that moves ``n`` it is every live bucket.
-The write job then evaluates the micro-batch plan — the stateful
-``dropDuplicatesWithinWatermark`` included — exactly once, and an
-``Observation`` on the batch counts its rows and takes its newest
-``cdc$time`` inside that job. Only a stable many-bucket state (``n > 1``,
-unchanged) runs a pre-pass: ``distinct(bucket).collect()`` finds the
-changed buckets, so the read set depends on the batch, and the batch is
-evaluated twice. A broadcast semi-join of the state on the batch's bucket
-set was tried in place of the collect and still evaluated the batch
-twice; merge-on-read deltas (no state read at all) are the way to one
-pass at any bucket count.
+**Spark work per trigger.** One SQL execution, the bucket write, wherever
+the read set follows from the manifest alone: at one bucket (every state
+below ``2T``) it is the one live bucket, and on a trigger that moves ``n``
+it is every live bucket. The stream is stateless, so adaptive execution
+plans the write: it runs as a few jobs, one per query stage, coalesces
+the small shuffle partitions and starts no Python runner for an empty
+one. The execution evaluates the micro-batch once, and an ``Observation``
+on the batch counts its rows (after the horizon) and takes its newest
+``cdc$time``. Only a stable many-bucket state (``n > 1``, unchanged) runs
+a pre-pass: ``distinct(bucket).collect()`` finds the changed buckets, so
+the read set depends on the batch, and the batch is evaluated twice. A
+broadcast semi-join of the state on the batch's bucket set was tried in
+place of the collect and still evaluated the batch twice; merge-on-read
+deltas (no state read at all) are the way to one pass at any bucket
+count.
 
-**Driver work per trigger.** Around that job the driver reads and commits
+**Driver work per trigger.** Around that execution the driver reads and commits
 the manifest, lists the new version directory, and builds the plans: the
 batch observation, the state read, the apply and the bucket write. Each
 is built from SQL strings in a fixed number of Dataset calls (the apply's
@@ -70,17 +82,14 @@ partition column of a bucket write is ``__bucket`` unless a state column
 starts with ``__`` (then it gets more leading underscores), so it never
 overwrites a base column.
 
-Three constraints shape the body. Spark commits a stateful operator's
-store only when the batch is evaluated, and Spark 4.1 fails the query
-when a batch ends with its stores uncommitted — so every call evaluates
-the batch once, even a replay (through the ``noop`` writer). A no-data
-batch (the stream runs one when the watermark moves) is only known empty
-once the write job has run: at one bucket it reads and rewrites the state
-and then deletes its ``v<N>`` directory without committing a manifest;
-in the pre-pass case it stops after the pre-pass. And a bucket file
-written before an ALTER reads under the current schema: an added column
-or UDT field reads NULL, a dropped one is not read (``conform_snapshot``
-covers the re-ADD of a dropped name).
+Two constraints shape the body. A batch with no row inside the horizon
+(all late, or empty) is only known empty once the write has run: at one
+bucket it reads and rewrites the state and then deletes its ``v<N>``
+directory without committing a manifest; in the pre-pass case it stops
+after the pre-pass. A replay of a committed batch returns without
+evaluating it. And a bucket file written before an ALTER reads under the
+current schema: an added column or UDT field reads NULL, a dropped one is
+not read (``conform_snapshot`` covers the re-ADD of a dropped name).
 
 **Bucket count.** ``n`` follows the committed state, not an option: it is
 a power of two kept so that ``state_bytes / n`` stays in ``[T/2, 2T]``,
@@ -146,6 +155,7 @@ from ..model.statestore import commit_json
 from ..operators.apply import (
     apply_cdc_log,
     internal_prefix,
+    live_row_sql,
     sql_ident,
     state_rows,
     state_schema,
@@ -171,12 +181,11 @@ _BATCH_STATS = ("count(1)", f"max({sql_ident(TIME_MICROS)})")
 
 def _observed(seen: Observation, changes: DataFrame) -> tuple[int, int | None]:
     """The batch's (row count, newest ``cdc$time_micros``) from the write
-    job. Adaptive execution (on when the sink is called outside a stream)
-    prunes the observed node from a plan whose write input turns out
-    empty — an empty batch, or one that deleted every row it read — and
-    the observation then completes with an empty row, which
-    ``Observation.get`` cannot convert: only then are the unobserved
-    ``changes`` counted by a job of their own."""
+    execution. Adaptive execution prunes the observed node from a plan
+    whose write input turns out empty — an empty batch, or one that
+    deleted every row it read — and the observation then completes with
+    an empty row, which ``Observation.get`` cannot convert: only then are
+    the unobserved ``changes`` counted by a job of their own."""
     row = seen._jo.getRow()
     if row.length():
         return row.get(0), row.get(1)
@@ -191,13 +200,33 @@ def _data_bytes(bucket_dir: str) -> int:
     )
 
 
-class ReplicatorSink:
-    """Callable ``foreachBatch`` body: ``sink(batch_df, batch_id)``."""
+def _since(horizon: int) -> str:
+    """SQL: the row's ``cdc$time_micros`` is not older than ``horizon``. The
+    bound is a struct literal, which generated code reads from its
+    references array: a plain BIGINT literal is written into the code, so
+    each trigger's new horizon would compile the stage again."""
+    return (
+        f"named_struct('t', {sql_ident(TIME_MICROS)}) >= "
+        f"named_struct('t', CAST({int(horizon)} AS BIGINT))"
+    )
 
-    def __init__(self, desc: CdcTableDescriptor, state_dir: str, mode: str = "delta"):
+
+class ReplicatorSink:
+    """Callable ``foreachBatch`` body: ``sink(batch_df, batch_id)``.
+    ``confidence_ms`` is the stream's confidence window (by default the
+    consumer's), which sets the horizon (see the module docstring)."""
+
+    def __init__(
+        self,
+        desc: CdcTableDescriptor,
+        state_dir: str,
+        mode: str = "delta",
+        confidence_ms: int = CDCStreamConsumer.confidence_ms,
+    ):
         self.desc = desc
         self.state_dir = state_dir
         self.mode = mode
+        self.confidence_ms = confidence_ms
         # the partition column of a bucket write: ``__bucket`` unless the
         # state has a column that name would shadow
         names = [*desc.base_schema.names, TIME_MICROS]
@@ -278,12 +307,12 @@ class ReplicatorSink:
         return buckets, sizes
 
     def _read_buckets(self, spark: SparkSession, manifest: dict, buckets) -> DataFrame | None:
-        """The given buckets' rows, open bounds included, read under the
-        descriptor's state schema (base schema + ``cdc$time_micros`` + the
-        seed-op column): a column or UDT field that a bucket file written
-        before an ALTER ADD lacks reads NULL (so does the seed-op column of
-        a file written before it existed), one an ALTER DROP removed is not
-        read, and no footer-merge job runs."""
+        """The given buckets' rows, tombstones and open bounds included,
+        read under the descriptor's state schema (base schema +
+        ``cdc$time_micros`` + the seed-op column): a column or UDT field
+        that a bucket file written before an ALTER ADD lacks reads NULL (so
+        does the seed-op column of a file written before it existed), one an
+        ALTER DROP removed is not read, and no footer-merge job runs."""
         paths = [
             os.path.join(self.state_dir, manifest["buckets"][b])
             for b in buckets
@@ -295,13 +324,15 @@ class ReplicatorSink:
 
     def current_state(self, spark: SparkSession) -> DataFrame | None:
         """The latest committed state across all buckets (version col
-        included), under the current descriptor's schema: its rows, without
-        the open range bounds and the seed-op column."""
+        included), under the current descriptor's schema: its live rows,
+        without the row tombstones, the open range bounds and the seed-op
+        column."""
         state = self._committed_state(spark)
         return None if state is None else state_rows(state, self.desc)
 
     def _committed_state(self, spark: SparkSession) -> DataFrame | None:
-        """Every row of the latest committed version, open bounds included."""
+        """Every row of the latest committed version, tombstones and open
+        bounds included."""
         manifest = self._latest_manifest()
         if manifest is None:
             return None
@@ -377,14 +408,14 @@ class ReplicatorSink:
             and manifest.get("query_id") == query_id
             and manifest["batch_id"] >= batch_id
         ):
-            # a replay of a committed batch: the state already holds it.
-            # The batch is still evaluated once — the dedup state store
-            # must commit this batch or the query fails
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
+            return  # a replay of a committed batch: the state already holds it
         n = self._bucket_count(manifest)
         seen = Observation()
         changes = normalize_changes(batch_df)
+        newest = manifest.get("max_time_micros")
+        since = None if newest is None else _since(newest - 1000 * self.confidence_ms)
+        if since:
+            changes = changes.where(since)
         batch_df = changes.observe(seen, *[F.expr(e) for e in _BATCH_STATS])
         old = manifest["buckets"]
         if n > 1 and n == manifest.get("n_buckets"):
@@ -406,13 +437,17 @@ class ReplicatorSink:
             initial_state=self._read_buckets(spark, manifest, touched),
             with_version_col=True,
         )
+        if since:
+            # row tombstones and open bounds older than the horizon are
+            # dropped: no change they could meet is applied any more
+            new_state = new_state.where(f"{live_row_sql(self.desc)} OR {since}")
         version = manifest["version"] + 1
         write_start = time.time()
         buckets, sizes = self._write_buckets(new_state, version, n)
         write_ms = round(1e3 * (time.time() - write_start))
         rows, max_time = _observed(seen, changes)
         if not rows:
-            # a no-data batch (the watermark moved): keep the state as it is
+            # no batch row inside the horizon (all late, or none): keep the state
             shutil.rmtree(os.path.join(self.state_dir, f"v{version}"))
             return
         metrics = {
@@ -422,8 +457,9 @@ class ReplicatorSink:
             "bytes_written": sum(sizes.values()),
             "write_ms": write_ms,
         }
-        # a touched bucket missing from ``buckets`` had every row deleted
-        # by this batch: its pointer is dropped
+        # a touched bucket missing from ``buckets`` holds nothing any more
+        # (every row deleted, every tombstone behind the horizon): its
+        # pointer is dropped
         for b in old.keys() - touched:
             buckets[b] = old[b]
             sizes[b] = manifest["bucket_bytes"][b]
@@ -456,7 +492,9 @@ class _Replication:
         confidence_ms: int,
         max_files_per_trigger: int | None = None,
     ):
-        self.sink = ReplicatorSink(desc, os.path.join(work_dir, "state"), mode=mode)
+        self.sink = ReplicatorSink(
+            desc, os.path.join(work_dir, "state"), mode=mode, confidence_ms=confidence_ms
+        )
         self.consumer = CDCStreamConsumer(
             spark,
             source_dir,

@@ -266,17 +266,29 @@ def test_replicator_restart_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_streaming_window_counts_and_dedup(spark, tmp_path):
-    """Smoke: watermarked tumbling-window aggregation (T1/T2) and
-    dropDuplicatesWithinWatermark (P2) run as a real stream."""
-    from scylla_cdc_java_spark.streaming import CDCStreamConsumer, tumbling_window_counts
+    """Watermarked tumbling-window aggregation (T1/T2) over
+    ``dropDuplicatesWithinWatermark`` (P2) composed onto the consumer's
+    stateless change stream, as a real stream: a last file far in the
+    future closes every window of the log, and the windows count each
+    change exactly once although the second file redelivers 30% of the
+    first."""
+    from scylla_cdc_java_spark.streaming import (
+        CDCStreamConsumer,
+        dedup_within_watermark,
+        tumbling_window_counts,
+    )
 
     desc = FIXTURE_TABLES["tbl_simple"]
     dml = [("insert", ("p%d" % (i % 3),), (i,), {"v1": i, "v2": "x"}) for i in range(30)]
-    rows = CdcLogGenerator(desc).encode(dml)
+    gen = CdcLogGenerator(desc)
+    rows = [dict(r) for r in gen.encode(dml)]
     src = str(tmp_path / "src")
     schema = build_cdc_log_schema(desc)
     rng = random.Random(3)
     _write_chunks(spark, schema, rows, src, 2, rng, replay_frac=0.3)
+    gen._t += 600_000_000  # ten minutes on: the watermark passes every window
+    flush = gen.encode([("insert", ("p0",), (99,), {"v1": 0})])[-1:]
+    spark.createDataFrame(flush, schema).coalesce(1).write.mode("append").parquet(src)
 
     consumer = (
         CDCStreamConsumer(spark)
@@ -285,7 +297,7 @@ def test_streaming_window_counts_and_dedup(spark, tmp_path):
         .with_checkpoint(str(tmp_path / "ckpt"))
         .trigger_available_now()
     )
-    counts = tumbling_window_counts(consumer.changes(), window_ms=60_000)
+    counts = tumbling_window_counts(dedup_within_watermark(consumer.changes()), window_ms=60_000)
     q = (
         counts.writeStream.outputMode("append")
         .format("memory")
@@ -296,9 +308,7 @@ def test_streaming_window_counts_and_dedup(spark, tmp_path):
     )
     q.awaitTermination()
     total = spark.sql("select sum(n_changes) as n from win_counts").collect()[0]["n"]
-    # dedup within watermark must not overcount; closed windows only, so
-    # the final (unclosed) window's rows may be missing from the memory sink
-    assert total is None or total <= len(rows)
+    assert total == len(rows)
 
 
 def _write_files(spark, schema, chunks, src):
@@ -456,6 +466,149 @@ def test_sink_calls_match_replay_at_every_cut(spark, table, tmp_path):
         if state is None:
             state = spark.createDataFrame([], desc.base_schema)
         _assert_state_matches(desc, state, delivered)
+
+
+def _statement_rows(desc, dml, seed):
+    """Encode ``dml`` in time order; returns the rows, each statement's
+    (first row, end row) and each statement's ``cdc$time`` in micros."""
+    gen = CdcLogGenerator(desc, seed=seed)
+    spans, times = [], []
+    for stmt in dml:
+        start = len(gen.encode([]))
+        spans.append((start, len(gen.encode([stmt]))))
+        times.append(gen._t)
+    return gen.encode([]), spans, times
+
+
+@pytest.mark.parametrize("table", ["tbl_simple", "tbl_multiple_clustering_keys", "tbl_ckless"])
+def test_sink_calls_with_redelivery_match_replay(spark, table, tmp_path):
+    """Sink differential under at-least-once delivery: a seeded log in time
+    order (row, partition and range deletes) cut at statement boundaries
+    into 10 direct ``ReplicatorSink`` calls, each of which also re-sends
+    random whole earlier CDC batches that are inside the confidence window
+    (30 s behind the newest change committed). After every call the state
+    equals the replay of the statements delivered so far: a redelivered
+    write of a deleted row meets the row tombstone and stays deleted."""
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = _ckless_table() if table == "tbl_ckless" else FIXTURE_TABLES[table]
+    rng = random.Random(17)
+    dml = _sink_dml(desc, rng, n=120)
+    rows, spans, times = _statement_rows(desc, dml, 17)
+    cuts = [*sorted(rng.sample(range(1, len(dml)), 9)), len(dml)]
+    schema = build_cdc_log_schema(desc)
+    sink = ReplicatorSink(desc, str(tmp_path / "state"))
+    resent = 0
+    prev = 0
+    for call, cut in enumerate(cuts):
+        batch = rows[spans[prev][0]:spans[cut - 1][1]]
+        if prev:
+            horizon = times[prev - 1] - 1000 * sink.confidence_ms
+            for i in range(prev):
+                if times[i] >= horizon and rng.random() < 0.3:
+                    batch += rows[spans[i][0]:spans[i][1]]
+                    resent += 1
+        rng.shuffle(batch)
+        sink(spark.createDataFrame([dict(r) for r in batch], schema), call)
+        prev = cut
+        state = sink.current_state(spark)
+        if state is None:
+            state = spark.createDataFrame([], desc.base_schema)
+        _assert_state_matches(desc, state, dml[:cut])
+    assert resent > 20
+
+
+def test_sink_horizon_drops_old_rows_and_tombstones(spark, tmp_path):
+    """The horizon is the newest committed ``cdc$time`` minus the confidence
+    window. A batch row older than it is dropped, a row tombstone older
+    than it is gone from the bucket files the call writes, and a newer
+    tombstone is kept."""
+    from scylla_cdc_java_spark.operators.apply import seed_op_column
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    schema = build_cdc_log_schema(desc)
+    gen = CdcLogGenerator(desc)
+    gen.encode([("insert", ("a",), (1,), {"v1": 1}), ("row_delete", ("a",), (1,))])
+    gen._t += 40_000_000
+    first = gen.encode([("insert", ("b",), (1,), {"v1": 2}), ("row_delete", ("b",), (1,))])
+    sink = ReplicatorSink(desc, str(tmp_path / "state"), confidence_ms=30_000)
+    sink(spark.createDataFrame([dict(r) for r in first], schema), 0)
+
+    def tombstones():
+        k = seed_op_column(desc)
+        state = sink._committed_state(spark).where(f"{k} = 3")
+        return sorted((r["pk"], r["ck"]) for r in state.collect())
+
+    assert tombstones() == [("a", 1), ("b", 1)]
+    # an insert at the log's start, 40 s behind: older than the horizon
+    old = CdcLogGenerator(desc).encode([("insert", ("c",), (1,), {"v1": 3})])
+    new = gen.encode([("insert", ("d",), (1,), {"v1": 4})])[-1:]
+    sink(spark.createDataFrame([dict(r) for r in old + new], schema), 1)
+    assert sink._latest_manifest()["metrics"]["rows_in"] == 1
+    assert tombstones() == [("b", 1)]
+    _assert_state_matches(desc, sink.current_state(spark), [("insert", ("d",), (1,), {"v1": 4})])
+
+
+def test_sink_horizon_keeps_generated_code(spark, tmp_path):
+    """Two horizons give the same whole-stage generated code, so a trigger
+    does not compile the stage again: the horizon is a struct literal,
+    which the code reads from its references. A plain BIGINT literal is
+    written into the code."""
+    from scylla_cdc_java_spark.operators.normalize import normalize_changes
+    from scylla_cdc_java_spark.streaming.replicator import _since
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    schema = build_cdc_log_schema(desc)
+    rows = CdcLogGenerator(desc).encode([("insert", ("a",), (1,), {"v1": 1})])
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    changes = normalize_changes(spark.read.schema(schema).parquet(src))
+
+    def code(cond):
+        stages = changes.where(cond)._jdf.queryExecution().debug().codegenToSeq()
+        return [stages.apply(i)._2() for i in range(stages.size())]
+
+    horizons = (1_600_000_000_000_000, 1_600_000_030_000_000)
+    assert code(_since(horizons[0])) == code(_since(horizons[1]))
+    plain = [f"`cdc$time_micros` >= CAST({h} AS BIGINT)" for h in horizons]
+    assert code(plain[0]) != code(plain[1])
+
+
+def test_replicator_restarts_on_checkpoint_with_dedup_state(spark, tmp_path):
+    """A checkpoint written while the stream ran ``dropDuplicatesWithinWatermark``
+    restarts under the stateless stream: the consumer deletes the retired
+    operator's ``state/`` directory, which Spark would otherwise refuse
+    (its state metadata names an operator the plan no longer has), and the
+    second run ends equal to the DML replay."""
+    from scylla_cdc_java_spark.streaming import dedup_within_watermark
+    from scylla_cdc_java_spark.streaming.replicator import _Replication
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    rng = random.Random(31)
+    dml = _rand_dml(desc, rng, n=40)
+    rows = CdcLogGenerator(desc).encode(dml)
+    cut = len(rows) // 2
+    src = str(tmp_path / "src")
+    schema = build_cdc_log_schema(desc)
+    work = str(tmp_path / "work")
+    _write_chunks(spark, schema, rows[:cut], src, 2, rng)
+    run = _Replication(spark, desc, src, schema, work, "delta", 0)
+    ckpt = run.consumer.checkpoint_dir
+    query = (
+        dedup_within_watermark(run.consumer.changes())
+        .writeStream.foreachBatch(run.sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    assert os.path.isdir(os.path.join(ckpt, "state"))
+
+    _write_chunks(spark, schema, rows[cut:], src, 2, rng)
+    state = replicate_available_now(spark, src, schema, desc, work)
+    _assert_state_matches(desc, state, dml)
+    assert not os.path.exists(os.path.join(ckpt, "state"))
 
 
 def test_run_with_retries_logs_each_failure(caplog):
@@ -820,36 +973,42 @@ def test_replicator_crash_replay_converges(spark, tmp_path, point):
 
 
 def test_replicator_no_data_batch_commits_nothing(spark, tmp_path):
-    """A no-data micro-batch (the stream runs one when the watermark moves)
-    leaves no new manifest and no ``v<N>`` directory; the latest manifest
-    records the last data batch and its row count."""
+    """A micro-batch whose rows are all older than the sink's horizon (the
+    newest committed ``cdc$time`` minus the confidence window) leaves no
+    new manifest and no ``v<N>`` directory; the latest manifest still
+    records the last data batch and its row count. So does an empty batch
+    outside a stream, where adaptive execution prunes the observed node."""
     from scylla_cdc_java_spark.streaming.replicator import _Replication
 
     desc = FIXTURE_TABLES["tbl_simple"]
     rng = random.Random(29)
     dml = _rand_dml(desc, rng, n=30)
-    rows = CdcLogGenerator(desc).encode(dml)
+    gen = CdcLogGenerator(desc)
+    rows = [dict(r) for r in gen.encode(dml)]
     src = str(tmp_path / "src")
     schema = build_cdc_log_schema(desc)
-    _write_chunks(spark, schema, rows, src, 2, rng)
+    _write_files(spark, schema, [rows], src)
+    gen._t += 60_000_000  # one minute on: the first file falls behind the horizon
+    late = [dict(r) for r in gen.encode([("insert", ("late",), (1,), {"v1": 1})])[-1:]]
+    spark.createDataFrame(late, schema).coalesce(1).write.mode("append").parquet(src)
+    time.sleep(1.1)
+    # a redelivery of the first file, now older than the horizon
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
     run = _Replication(spark, desc, src, schema, str(tmp_path / "work"), "delta", 30_000, 1)
     calls = []
     query = _stream(run, _recorded(run.sink, calls), "no-data")
     rows_in = {p["batchId"]: p["numInputRows"] for p in query.recentProgress}
+    assert [b for b, _, _ in calls] == [0, 1, 2]
+    assert rows_in[2] == len(rows)
 
-    empty = [(before, after) for b, before, after in calls if rows_in[b] == 0]
-    assert empty, rows_in  # the stream ran at least one no-data batch
-    assert all(before == after for before, after in empty)
-    last = max(b for b, _, _ in calls if rows_in[b] > 0)
+    _, before, after = calls[2]
+    assert before == after
     manifest = run.sink._latest_manifest()
-    assert manifest["batch_id"] == last
-    assert manifest["metrics"]["rows_in"] == rows_in[last]
-    _assert_state_matches(desc, run.state(), dml)
+    assert (manifest["batch_id"], manifest["metrics"]["rows_in"]) == (1, 1)
+    _assert_state_matches(desc, run.state(), dml + [("insert", ("late",), (1,), {"v1": 1})])
 
-    # outside a stream adaptive execution is on and prunes the observed
-    # node from the plan over an empty batch: still no commit
     listing = sorted(os.listdir(run.sink.state_dir))
-    run.sink(spark.createDataFrame([], schema), last + 1)
+    run.sink(spark.createDataFrame([], schema), 3)
     assert sorted(os.listdir(run.sink.state_dir)) == listing
 
 
@@ -888,8 +1047,8 @@ class _Batches:
 
 def test_replicator_writes_one_file_per_bucket(spark, tmp_path, target_bucket_bytes):
     """Every bucket directory the manifest points at holds exactly one
-    parquet file — after several deduped micro-batches (AQE is off inside
-    a stream, and there are more buckets than shuffle partitions) and
+    parquet file — after several micro-batches with redelivery (there are
+    more buckets than shuffle partitions) and
     after a full ``conform_snapshot`` rewrite — and the state is intact."""
     from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
 
@@ -968,11 +1127,13 @@ def test_replicator_call_lists_paths_in_driver(spark, tmp_path, target_bucket_by
     assert not listing, listing
 
 
-def test_replicator_call_at_one_bucket_is_one_spark_job(spark, tmp_path):
-    """At one bucket every sink call of a stream is one Spark job, so the
-    micro-batch plan (the stateful dedup included) runs once per trigger:
-    no changed-bucket pre-pass and no footer-merge job for the state read.
-    Counted from the status store: the jobs submitted while each call ran."""
+def test_replicator_call_at_one_bucket_is_one_sql_execution(spark, tmp_path):
+    """At one bucket every sink call of a stream is one SQL execution, the
+    bucket write, which scans each batch row once: no changed-bucket
+    pre-pass, and every job submitted while the call ran is one of that
+    execution's (adaptive execution runs it as a few jobs, one per query
+    stage), so no footer-merge or listing job runs for the state read.
+    Read from the status store."""
     from scylla_cdc_java_spark.streaming.replicator import _Replication
 
     desc = FIXTURE_TABLES["tbl_simple"]
@@ -988,16 +1149,36 @@ def test_replicator_call_at_one_bucket_is_one_spark_job(spark, tmp_path):
     def counted(batch_df, batch_id):
         start = time.time()
         run.sink(batch_df, batch_id)
-        calls.append((start, time.time()))
+        calls.append((batch_id, start, time.time()))
 
-    _stream(run, counted, "one-job")
+    query = _stream(run, counted, "one-execution")
     _assert_state_matches(desc, run.state(), dml)
     assert run.sink.n_buckets == 1
     assert run.sink._latest_manifest()["version"] == 2  # later calls read the state
+    rows_in = {p["batchId"]: p["numInputRows"] for p in query.recentProgress}
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    submitted = [t for _, t in _jobs(spark).values()]
-    per_call = [sum(start <= t <= end for t in submitted) for start, end in calls]
-    assert per_call == [1] * len(calls), per_call
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    executions = [executions.apply(i) for i in range(executions.size())]
+    jobs = _jobs(spark)
+    for batch_id, start, end in calls:
+        [e] = [e for e in executions if start <= e.submissionTime() / 1e3 <= end]
+        submitted = {j for j, (_, t) in jobs.items() if start <= t <= end}
+        keys = e.jobs().keySet().toSeq()
+        assert submitted == {keys.apply(i) for i in range(keys.size())}
+        values = store.executionMetrics(e.executionId())
+        nodes = store.planGraph(e.executionId()).allNodes()
+        scanned = 0
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if node.name() != "Scan ExistingRDD":
+                continue
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                if m.name() == "number of output rows":
+                    scanned += int(values.get(m.accumulatorId()).get().replace(",", ""))
+        assert scanned == rows_in[batch_id]
 
 
 def _ten_scalar_table():
@@ -1354,8 +1535,10 @@ def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path, target_
 # full: bucket lifecycle edge of the vacuum family.
 @pytest.mark.full
 def test_replicator_bucket_removed_when_emptied(spark, tmp_path):
-    """A batch that deletes every row of a bucket must drop the bucket's
-    manifest pointer (not leave a stale file reference)."""
+    """A batch that leaves a bucket empty must drop the bucket's manifest
+    pointer (not leave a stale file reference). Deleting the only row
+    leaves its row tombstone in the bucket; the bucket empties once the
+    horizon (here the newest committed ``cdc$time``) passes the tombstone."""
     from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
 
     desc = FIXTURE_TABLES["tbl_simple"]
@@ -1375,9 +1558,21 @@ def test_replicator_bucket_removed_when_emptied(spark, tmp_path):
     _write_chunks(spark, schema, dels, src1, 1, random.Random(1))
     state2 = replicate_available_now(spark, src1, schema, desc, work)
     assert state2.count() == 0
-
     sink = ReplicatorSink(desc, str(tmp_path / "work" / "state"))
+    assert list(sink._latest_manifest()["buckets"]) == ["0"]  # the tombstone
+
+    # two later micro-batches that change no row, one file each (distinct
+    # mtimes): after the second the tombstone is older than the horizon
+    n = len(ins) + len(dels)
+    later = gen.encode([("partition_delete", ("gone",)), ("partition_delete", ("gone",))])[n:]
+    for row in later:
+        time.sleep(1.1)
+        spark.createDataFrame([dict(row)], schema).write.mode("append").parquet(src1)
+    state3 = replicate_available_now(spark, src1, schema, desc, work, max_files_per_trigger=1)
+    assert state3.count() == 0
+
     manifest = sink._latest_manifest()
+    assert manifest["max_time_micros"] == gen._t  # the last batch committed
     assert manifest["buckets"] == {}  # pointer dropped, not stale
     assert sink.current_state(spark) is None or sink.current_state(spark).count() == 0
 

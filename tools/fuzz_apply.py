@@ -112,12 +112,15 @@ def check(spark, table, seed, n, mode, incremental):
         got_rows = apply_cdc_log(df, desc, mode=mode).collect()
     else:
         # split apply: half the log materialized with versions, fed back as
-        # initial_state with the rest PLUS a replayed overlap of the first
+        # initial_state with the rest PLUS a replay of random whole CDC
+        # batches (the rows of one cdc$time) from anywhere in the first
         # half (at-least-once across the checkpoint boundary)
         rows = gen.encode(dml)
         cut = len(rows) // 2
         first, second = rows[:cut], rows[cut:]
-        overlap = [dict(r) for r in first[-max(1, cut // 5):]]
+        times = sorted({r["cdc$time"] for r in first})
+        replayed = set(rng.sample(times, max(1, len(times) // 5)))
+        overlap = [dict(r) for r in first if r["cdc$time"] in replayed]
         schema_df = lambda rs: spark.createDataFrame(  # noqa: E731
             rs, __import__("scylla_cdc_java_spark.model.schema", fromlist=["build_cdc_log_schema"]).build_cdc_log_schema(desc)
         )
